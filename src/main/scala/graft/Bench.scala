@@ -151,7 +151,7 @@ object Bench {
         // expressions run on every payload); everything else keeps count()
         // so round-over-round totals stay comparable. Re-baseline note: from
         // r11 the md_* rows include codec cost (~2.4x the pruned scan at the
-        // 100x corpus per CountCheck; noise-level at sf0.1).
+        // 100x corpus, measured in r10; noise-level at sf0.1).
         if (ForceMaterialize(name)) df.queryExecution.toRdd.count() else df.count()
         Right((System.nanoTime() - t0) / 1e9)
       }
@@ -203,11 +203,6 @@ object Bench {
     // truncated at the front — the full per-query map overflowed the tail).
     // So: full per-query detail goes to a FILE, and the printed line carries
     // a fixed headline subset + the detail path, sized well under the window.
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
     def smap(rs: Seq[(String, String)]): String =
       rs.map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
     val warnJson = warnings.map(jstr).mkString("[", ",", "]")
@@ -242,6 +237,21 @@ object Bench {
     spark.stop()
   }
 
+  /** JSON string literal: quote, backslash and every control char (<0x20)
+    * escaped. A tab or CR in builder-authored oracle SQL would otherwise
+    * make the driver's json.load fail and silently zero the round's
+    * correctness (shared with [[Verify]]).
+    */
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** Headline queries printed inline: the heaviest member of each major
     * family plus three TPC-H anchors, so the one-line JSON stays
     * representative while fitting the driver's 2000-char output tail. The
@@ -254,8 +264,7 @@ object Bench {
   /** Queries whose `count()` plan prunes THE WORK off the scan — pure
     * decode/hash projections. Bench executes these via `toRdd.count()`
     * (full-column materialization of the unmodified plan) so their rows
-    * time the codec, not the pruned payload scan (closes VERDICT r10 #2;
-    * CountCheck remains the dev tool that shows the two plans side by side).
+    * time the codec, not the pruned payload scan (closes VERDICT r10 #2).
     */
   private val ForceMaterialize: Set[String] = Set(
     "md_ppm_decode", "md_wav_decode", "md_png_decode", "md_qoi_decode",

@@ -28,12 +28,8 @@ object PlanOne {
     // at-scale shape, e.g. SPARK_GRAFT_PLAN_CONF=
     // "spark.sql.autoBroadcastJoinThreshold=-1" shows the join strategy a
     // query falls back to once a side outgrows the broadcast threshold
-    sys.env.get("SPARK_GRAFT_PLAN_CONF").foreach {
-      _.split(",").map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v): Unit
-      }
-    }
+    QTime.confOverrides("SPARK_GRAFT_PLAN_CONF")
+      .foreach { case (k, v) => builder.config(k, v): Unit }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val q = SparkEntry.queries.getOrElse(name,

@@ -28,12 +28,8 @@ object QTime {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", "32m")
       .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_QTIME_CONF").foreach {
-      _.split(",").map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v): Unit
-      }
-    }
+    confOverrides("SPARK_GRAFT_QTIME_CONF")
+      .foreach { case (k, v) => builder.config(k, v): Unit }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Tables.materializeDerived(spark, sfDir)
@@ -54,4 +50,21 @@ object QTime {
     Tables.clearDerived(spark)
     spark.stop()
   }
+
+  /** The `k=v,k=v` session conf overrides in env var `envVar` (the dev
+    * mains' `SPARK_GRAFT_*_CONF`); none when unset. An entry without `=`
+    * or with an empty key fails naming the variable and the entry.
+    */
+  private[graft] def confOverrides(envVar: String,
+                                   env: Map[String, String] = sys.env)
+      : Seq[(String, String)] =
+    env.get(envVar).toSeq
+      .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
+      .map { kv =>
+        kv.split("=", 2) match {
+          case Array(k, v) if k.nonEmpty => k -> v
+          case _ => throw new IllegalArgumentException(
+            s"$envVar: malformed entry '$kv' (expected key=value)")
+        }
+      }
 }

@@ -20,21 +20,50 @@ object Tables {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 
-  /** Derived fixture tables are memoized + cached once per (session, sfDir)
-    * so per-query work measures the operator, not the fixture derivation:
-    * without this, e.g. every catalog query re-runs an events scan +
-    * distinct for what is logically a 25-row table. All cached tables are
-    * tiny (catalog/registry/command blobs — KBs at any SF); big corpus
-    * tables (lineitem, documents, events, ...) are never cached — they are
-    * the operators' real scan inputs.
+  /** Everything a session builds once and must release together: one
+    * `(sfDir, name)` memo behind every derived table, staged layout,
+    * trained value and registered function, plus the release actions
+    * (unpersist a cached frame, DROP a bucketed table, delete an attempt
+    * dir) that [[clearDerived]] runs. Keyed by the session object itself —
+    * reference identity (SparkSession keeps Object's equals), never a hash,
+    * so no session can share or inherit another's entries. A memo keyed to a corpus snapshot must not outlive
+    * it (ADVICE r8), which is why every memo lives here and is dropped by
+    * the same clear. Cached frames reference their session, so an
+    * uncleared session's state lives until [[clearDerived]] — the weak key
+    * only frees sessions that never cached a frame.
     */
-  private val derivedCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String, String), DataFrame]
+  private final class State {
+    val memo = new java.util.concurrent.ConcurrentHashMap[(String, String), Any]()
+    val releases = new java.util.concurrent.ConcurrentLinkedDeque[() => Unit]()
+  }
+  private val states = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, State]())
 
-  private[graft] def derived(spark: SparkSession, sfDir: String, name: String)
-                            (build: => DataFrame): DataFrame =
-    derivedCache.getOrElseUpdate(
-      (System.identityHashCode(spark), sfDir, name), build.cache())
+  private def state(spark: SparkSession): State =
+    states.computeIfAbsent(spark, _ => new State)
+
+  /** Release actions run newest first: a bucketed table is dropped before
+    * its attempt dir is deleted. */
+  private def onClear(spark: SparkSession)(release: => Unit): Unit =
+    state(spark).releases.addFirst(() => release)
+
+  /** This session's value for `(sfDir, name)`, built on first use. Builders
+    * may nest memo calls. Two racing first uses (a timed-out Verify worker
+    * is abandoned, not stopped) may both build; the first to finish wins,
+    * and the loser's releases still run on clear.
+    */
+  private[graft] def memo[A](spark: SparkSession, sfDir: String, name: String)
+                            (build: => A): A =
+    memoized[A](spark, sfDir, name).getOrElse {
+      val v = build
+      Option(state(spark).memo.putIfAbsent((sfDir, name), v))
+        .fold(v)(_.asInstanceOf[A])
+    }
+
+  /** This session's value for `(sfDir, name)` if one was built; never builds. */
+  private[graft] def memoized[A](spark: SparkSession, sfDir: String,
+                                 name: String): Option[A] =
+    Option(state(spark).memo.get((sfDir, name))).map(_.asInstanceOf[A])
 
   /** Session staging dir for corpus-scale derived tables, keyed by sf dir so
     * concurrent runs at different SFs never collide.
@@ -44,8 +73,6 @@ object Tables {
       s"${Integer.toHexString(sfDir.hashCode)}/$name"
 
   private val attemptSeq = new java.util.concurrent.atomic.AtomicLong()
-  private val attemptDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(Int, String)]()
 
   /** A staging path no other build attempt can ever collide with. A
     * timed-out Verify worker is abandoned, not killed (thread interrupt
@@ -54,44 +81,15 @@ object Tables {
     * concurrent parquet overwrites on one directory and silently poison
     * every downstream read (ADVICE r7). Unique per-attempt dirs make the
     * abandoned writer harmless: nothing ever reads its directory, and
-    * [[clearDerived]] deletes whatever this session registered.
+    * [[clearDerived]] deletes every dir this session created.
     */
   private[graft] def uniqueStageDir(spark: SparkSession, sfDir: String,
                                     name: String): String = {
     val p = stageDir(sfDir, name) +
       s"/a${ProcessHandle.current().pid()}_${attemptSeq.incrementAndGet()}"
-    attemptDirs.add((System.identityHashCode(spark), p)): Unit
+    onClear(spark)(deleteLocal(p))
     p
   }
-
-  /** Corpus-scale derived tables (exploded shingles, per-vector assignments,
-    * z-keyed layouts) must NOT live in the executor block store for the
-    * session's lifetime — at 100 TB they don't fit, and even at bench SF the
-    * accumulated blocks crowd every later query's working set (the r2/r3
-    * bench regressions). Stage them once per (session, sfDir) as partitioned
-    * parquet in tmp — the only shape that exists at scale — and read back:
-    * consumers get column pruning + min/max stats instead of pinned memory.
-    */
-  private[graft] def derivedBig(spark: SparkSession, sfDir: String, name: String)
-                               (build: => DataFrame): DataFrame =
-    derivedBigBy(spark, sfDir, name, Nil)(build)
-
-  /** [[derivedBig]] with a hive-style partition layout: the staged table is
-    * written `partitionBy(partitionCols)`, so downstream filters on those
-    * columns become partition-pruned scans (directories never listed) — the
-    * layout move an ANN/geo table makes at 100 TB.
-    */
-  private[graft] def derivedBigBy(spark: SparkSession, sfDir: String, name: String,
-                                  partitionCols: Seq[String])
-                                 (build: => DataFrame): DataFrame =
-    derivedCache.getOrElseUpdate(
-      (System.identityHashCode(spark), sfDir, name), {
-        val path = uniqueStageDir(spark, sfDir, name)
-        val w = build.write.mode("overwrite")
-        (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-          .parquet(path)
-        spark.read.parquet(path)
-      })
 
   /** Number of buckets for the bucketed fact-table layouts. At 100 TB this
     * is sized to executor count × a small factor (e.g. 4 × 1000); here it
@@ -100,69 +98,71 @@ object Tables {
     */
   val NumBuckets = 8
 
-  /** A corpus table staged once per (session, sfDir) as a *bucketed* catalog
-    * table: hash-bucketed and sorted by `key` into [[NumBuckets]] files per
-    * the Spark bucketing spec. Joins and aggregations keyed on `key` between
-    * tables bucketed the same way need NO exchange — the scan itself reports
-    * hash partitioning — which at 100 TB removes the single biggest cost of
-    * a fact⋈fact join (shuffling both sides every query) in exchange for
-    * one-time layout work at write time. Registered as an external table
-    * (explicit path under the stage dir) because bucket metadata lives in
-    * the catalog, not the parquet footer.
+  /** How [[stage]] keeps a table built once per (session, sfDir).
+    *  - [[Cached]]: in the block store. Only for tiny tables (catalog,
+    *    registry, command blobs, centroids — KBs at any SF) that every
+    *    query would otherwise re-derive, e.g. an events scan + distinct for
+    *    a 25-row catalog. Big corpus tables are never cached: they are the
+    *    operators' real scan inputs.
+    *  - [[Parquet]]: written to an attempt dir and read back, optionally
+    *    hive-partitioned so filters on `partitionBy` columns prune
+    *    directories. Corpus-scale layouts (exploded shingles, per-vector
+    *    assignments, z-keyed layouts) must NOT live in the block store for
+    *    the session's lifetime: at 100 TB they don't fit, and even at bench
+    *    SF the blocks crowd every later query's working set (the r2/r3
+    *    bench regressions). Consumers get column pruning + min/max stats
+    *    instead of pinned memory.
+    *  - [[Bucketed]]: an external catalog table hash-bucketed and sorted by
+    *    `key` into [[NumBuckets]] files. Joins and aggregations on `key`
+    *    between tables bucketed the same way need NO exchange — the scan
+    *    reports hash partitioning — which at 100 TB removes a fact⋈fact
+    *    join's biggest cost (shuffling both sides every query) and lets an
+    *    iterative graph query shuffle only its vertex-sized message vector.
+    *    A catalog table because bucket metadata lives in the catalog, not
+    *    the parquet footer.
     */
-  private[graft] def bucketed(spark: SparkSession, sfDir: String, src: String,
-                              key: String): DataFrame =
-    derivedCache.getOrElseUpdate(
-      (System.identityHashCode(spark), sfDir, s"bkt_$src"), {
-        val path = uniqueStageDir(spark, sfDir, s"bkt_$src")
-        // catalog name carries the attempt suffix too: bucket metadata lives
-        // in the catalog, and an abandoned attempt must never DROP/replace a
-        // live attempt's entry
-        val tbl = s"graft_bkt_${src}_" + path.substring(path.lastIndexOf('/') + 1)
-        spark.sql(s"DROP TABLE IF EXISTS $tbl")
-        table(spark, sfDir, src).write.mode("overwrite")
-          .option("path", path)
-          .bucketBy(NumBuckets, key).sortBy(key)
-          .format("parquet").saveAsTable(tbl)
-        bucketedTables.add((System.identityHashCode(spark), tbl)): Unit
-        spark.table(tbl)
-      })
+  sealed trait Layout
+  case object Cached extends Layout
+  final case class Parquet(partitionBy: Seq[String] = Nil) extends Layout
+  final case class Bucketed(key: String) extends Layout
 
-  private val bucketedTables =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(Int, String)]()
-
-  /** [[derivedBig]] staged as a BUCKETED catalog table (hash-bucketed and
-    * sorted by `key` into [[NumBuckets]] buckets): for a derived layout that
-    * downstream operators repeatedly JOIN or AGGREGATE on `key`, the scan
-    * itself reports hash partitioning, so those consumers need no exchange
-    * on this side — the [[bucketed]] corpus-table move applied to a derived
-    * table (guide §6 / §2.4). At 100 TB this is the difference between an
-    * iterative graph query shuffling its edge list every round and shuffling
-    * only the vertex-sized message vector.
-    */
-  private[graft] def derivedBigBucketed(spark: SparkSession, sfDir: String,
-                                        name: String, key: String)
-                                       (build: => DataFrame): DataFrame =
-    derivedCache.getOrElseUpdate(
-      (System.identityHashCode(spark), sfDir, name), {
-        val path = uniqueStageDir(spark, sfDir, name)
-        // catalog name carries the attempt suffix (see [[bucketed]]): an
-        // abandoned attempt must never DROP/replace a live attempt's entry
-        val tbl = s"graft_${name}_" + path.substring(path.lastIndexOf('/') + 1)
-        spark.sql(s"DROP TABLE IF EXISTS $tbl")
-        build.write.mode("overwrite")
-          .option("path", path)
-          .bucketBy(NumBuckets, key).sortBy(key)
-          .format("parquet").saveAsTable(tbl)
-        bucketedTables.add((System.identityHashCode(spark), tbl)): Unit
-        spark.table(tbl)
-      })
+  /** The one staging primitive: `build` materialized once per (session,
+    * sfDir, name) in `layout`; released by [[clearDerived]]. */
+  private[graft] def stage(spark: SparkSession, sfDir: String, name: String,
+                           layout: Layout)(build: => DataFrame): DataFrame =
+    memo(spark, sfDir, name) {
+      layout match {
+        case Cached =>
+          val df = build.cache()
+          onClear(spark)(df.unpersist(): Unit)
+          df
+        case Parquet(partitionCols) =>
+          val path = uniqueStageDir(spark, sfDir, name)
+          val w = build.write.mode("overwrite")
+          (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+            .parquet(path)
+          spark.read.parquet(path)
+        case Bucketed(key) =>
+          val path = uniqueStageDir(spark, sfDir, name)
+          // catalog name carries the attempt suffix too: bucket metadata
+          // lives in the catalog, and an abandoned attempt must never
+          // DROP/replace a live attempt's entry
+          val tbl = s"graft_${name}_" + path.substring(path.lastIndexOf('/') + 1)
+          spark.sql(s"DROP TABLE IF EXISTS $tbl")
+          build.write.mode("overwrite")
+            .option("path", path)
+            .bucketBy(NumBuckets, key).sortBy(key)
+            .format("parquet").saveAsTable(tbl)
+          onClear(spark)(spark.sql(s"DROP TABLE IF EXISTS $tbl"): Unit)
+          spark.table(tbl)
+      }
+    }
 
   def bucketedOrders(spark: SparkSession, sfDir: String): DataFrame =
-    bucketed(spark, sfDir, "orders", "o_orderkey")
+    stage(spark, sfDir, "bkt_orders", Bucketed("o_orderkey"))(orders(spark, sfDir))
 
   def bucketedLineitem(spark: SparkSession, sfDir: String): DataFrame =
-    bucketed(spark, sfDir, "lineitem", "l_orderkey")
+    stage(spark, sfDir, "bkt_lineitem", Bucketed("l_orderkey"))(lineitem(spark, sfDir))
 
   private def deleteLocal(path: String): Unit = {
     def rec(f: java.io.File): Unit = {
@@ -197,39 +197,12 @@ object Tables {
     }
   }
 
-  /** Session-keyed cache invalidation hooks: modules holding their own
-    * per-(session, sfDir) memos (SRP bit counts, registered-function
-    * ownership) register a hook so [[clearDerived]] drains them together
-    * with the staged tables — a memo keyed to a corpus snapshot must not
-    * outlive the snapshot (ADVICE r8: a within-session corpus rebuild
-    * would silently diverge from the oracle's fresh recompute). Hooks
-    * receive the session identity being cleared. Registered lazily by the
-    * owning module, so Tables never depends on operator packages.
+  /** Drop this session's state: every memo goes, cached frames are
+    * unpersisted (long-lived sessions must not accumulate cached blocks —
+    * ADVICE r1), bucketed catalog entries dropped, attempt dirs deleted.
     */
-  private val sessionCacheHooks =
-    new java.util.concurrent.ConcurrentLinkedQueue[Int => Unit]()
-  private[graft] def onClearDerived(hook: Int => Unit): Unit = {
-    sessionCacheHooks.add(hook): Unit
-  }
-
-  /** Unpersist and drop this session's derived-table cache (long-lived
-    * sessions must not accumulate cached blocks — ADVICE r1), drop its
-    * bucketed catalog entries, delete its staged attempt directories, and
-    * drain every registered session-keyed module cache.
-    */
-  def clearDerived(spark: SparkSession): Unit = {
-    val id = System.identityHashCode(spark)
-    sessionCacheHooks.forEach(h => h(id))
-    derivedCache.keys.filter(_._1 == id).foreach { k =>
-      derivedCache.remove(k).foreach(_.unpersist())
-    }
-    bucketedTables.removeIf { case (sid, tbl) =>
-      if (sid == id) { spark.sql(s"DROP TABLE IF EXISTS $tbl"); true } else false
-    }: Unit
-    attemptDirs.removeIf { case (sid, p) =>
-      if (sid == id) { deleteLocal(p); true } else false
-    }: Unit
-  }
+  def clearDerived(spark: SparkSession): Unit =
+    Option(states.remove(spark)).foreach(_.releases.forEach(_()))
 
   def lineitem(spark: SparkSession, d: String): DataFrame = table(spark, d, "lineitem")
   def orders(spark: SparkSession, d: String): DataFrame   = table(spark, d, "orders")
@@ -269,13 +242,13 @@ object Tables {
     * functions of the keys (exactly reproducible as a DuckDB CTE, so Q11
     * stays hash-checkable). Supply cost is kept in integer CENTS so every
     * downstream sum is exact int64 — no decimal/double portability rules
-    * needed. Corpus-scale (≈ lineitem's key cardinality), so staged via
-    * [[derivedBig]]: one distinct shuffle once per session, then consumers
-    * get a plain pruned parquet scan — at 100 TB this is a written-once
+    * needed. Corpus-scale (≈ lineitem's key cardinality), so staged as
+    * [[Parquet]]: one distinct shuffle once per session, then consumers get
+    * a plain pruned parquet scan — at 100 TB this is a written-once
     * dimension layout, not a per-query recompute.
     */
   def partsupp(spark: SparkSession, sfDir: String): DataFrame =
-    derivedBig(spark, sfDir, "partsupp") {
+    stage(spark, sfDir, "partsupp", Parquet()) {
       lineitem(spark, sfDir)
         .select(col("l_partkey").as("ps_partkey"), col("l_suppkey").as("ps_suppkey"))
         .distinct()
@@ -368,7 +341,7 @@ object Tables {
   def catalog(spark: SparkSession, sfDir: String): DataFrame = {
     val fmt = spark.conf.get("spark.graft.catalog.format", "derived")
     val branchKey = catalogBranchKey(spark)
-    derived(spark, sfDir, s"catalog@$branchKey") {
+    stage(spark, sfDir, s"catalog@$branchKey", Cached) {
       fmt match {
         case "derived" => catalogDerived(spark, sfDir)
         case "parquet" =>
@@ -406,7 +379,7 @@ object Tables {
     * DuckDB twin: [[Oracle.registryCte]].
     */
   def registry(spark: SparkSession, sfDir: String): DataFrame =
-    derived(spark, sfDir, "registry") {
+    stage(spark, sfDir, "registry", Cached) {
       supplier(spark, sfDir).select(
         col("s_name").as("name"),
         concat(lit("10.148.128."), (col("s_suppkey") % 250).cast("string")).as("host"),
@@ -419,7 +392,7 @@ object Tables {
     * `identify_schema_tables` yields (/root/reference/geomesa_cassandra.py:48-52).
     */
   def schemaTables(spark: SparkSession, sfDir: String): DataFrame =
-    derived(spark, sfDir, s"schema_tables@${catalogBranchKey(spark)}") {
+    stage(spark, sfDir, s"schema_tables@${catalogBranchKey(spark)}", Cached) {
       catalog(spark, sfDir)
         .select(col("sft"), lower(trim(col("value"))).as("table_name"))
         .where(col("table_name").startsWith("catalog"))
@@ -445,7 +418,7 @@ object Tables {
     * lines, as one `CmdResult`-shaped row per node (SURVEY §1 #4).
     */
   def compactionStdout(spark: SparkSession, sfDir: String): DataFrame =
-    derived(spark, sfDir, s"compaction_stdout@${catalogBranchKey(spark)}") {
+    stage(spark, sfDir, s"compaction_stdout@${catalogBranchKey(spark)}", Cached) {
       compactionLines(spark, sfDir)
         .groupBy(col("node"))
         .agg(concat(lit("pending tasks: 2\n"),
@@ -458,7 +431,7 @@ object Tables {
     * reference's snapshot regex (/root/reference/node.py:153).
     */
   def snapshotLines(spark: SparkSession, sfDir: String): DataFrame =
-    derived(spark, sfDir, s"snapshot_lines@${catalogBranchKey(spark)}") {
+    stage(spark, sfDir, s"snapshot_lines@${catalogBranchKey(spark)}", Cached) {
       val nodes = registry(spark, sfDir).select(col("name").as("node"))
       val tabs = schemaTables(spark, sfDir).select(col("table_name"))
       nodes.crossJoin(tabs)
@@ -475,7 +448,7 @@ object Tables {
     * `CREATE TABLE`, /root/reference/node.py:174-180).
     */
   def describeResults(spark: SparkSession, sfDir: String): DataFrame =
-    derived(spark, sfDir, s"describe_results@${catalogBranchKey(spark)}") {
+    stage(spark, sfDir, s"describe_results@${catalogBranchKey(spark)}", Cached) {
       schemaTables(spark, sfDir).select(
       col("sft"), col("table_name"),
       when(h24(col("table_name")) % 7 === 0, lit(""))
@@ -491,7 +464,7 @@ object Tables {
     * /root/reference/node.py:50-53); even ones report Gossip inactive.
     */
   def infoResults(spark: SparkSession, sfDir: String): DataFrame =
-    derived(spark, sfDir, "info_results") {
+    stage(spark, sfDir, "info_results", Cached) {
       supplier(spark, sfDir).select(
         col("s_name").as("node"),
         when(col("s_suppkey") % 2 === 1, lit(

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Session function registration shared by every custom-expression family.
@@ -11,37 +10,19 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * pre-existing foreign builder under the same name (a user-registered
   * `vec_dot`, say) can never silently change every downstream result
   * (ADVICE r8; the old register-when-absent deferred to it) — and every
-  * later call is a cheap set lookup, so hot callers (every vecDot-composed
+  * later call is a cheap memo lookup, so hot callers (every vecDot-composed
   * plan) don't re-register per column build and the one "function
   * replaced" WARN per (session, name) can't flood the 2000-char output
   * tail the driver keeps (the WindowExec-warning lesson, VERDICT r7 #4).
-  * The owned-set is keyed by session identity and drained by the
-  * [[graft.Tables.clearDerived]] session-cache hook, so nothing
-  * accumulates across sessions (the ADVICE r1 growth concern).
+  * The claim lives in the session's [[graft.Tables.memo]], keyed by the
+  * session object itself, so a new session never inherits a stale claim
+  * and [[graft.Tables.clearDerived]] drops it with everything else.
   */
 private[functions] object FnReg {
-  private val owned =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(Int, String)]()
-
-  private val hookRegistered: Boolean = {
-    graft.Tables.onClearDerived(id => owned.removeIf(_._1 == id): Unit)
-    true
-  }
-
   def once(spark: SparkSession, name: String,
-           builder: Seq[Expression] => Expression): Unit = {
-    val _ = hookRegistered
-    val key = (System.identityHashCode(spark), name)
-    // ownership alone is not sufficient: identityHashCode can recycle, so a
-    // NEW session could inherit a stale "owned" claim and skip registration
-    // entirely (undefined-function failure). Pair the claim with a registry
-    // lookup — re-register whenever the name is absent, even if "owned"
-    // (ADVICE r9). The lookup is a driver-side map read per column build,
-    // not per row.
-    val present = spark.sessionState.functionRegistry
-      .lookupFunctionBuilder(FunctionIdentifier(name)).isDefined
-    if (owned.add(key) || !present)
+           builder: Seq[Expression] => Expression): Unit =
+    graft.Tables.memo(spark, "", s"fn:$name") {
       spark.sessionState.functionRegistry
         .createOrReplaceTempFunction(name, builder, "built-in")
-  }
+    }
 }

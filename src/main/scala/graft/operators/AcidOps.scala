@@ -38,36 +38,34 @@ object AcidOps {
   val MergeDeleteThreshold = 200000.0
   val TtlCutoff = "1996-01-01 00:00:00"
 
-  private val built =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), String]
-  // the memoized root lives under a staged attempt dir that
-  // Tables.clearDerived DELETES — a mid-session clear must drop the memo
-  // too, or later snapshot reads would point at a removed directory (the
-  // ADVICE r8 stale-memo class; spec-pinned in AcidSpec)
-  private lazy val clearHookRegistered: Boolean = {
-    Tables.onClearDerived { id =>
-      built.keys.filter(_._1 == id).foreach(built.remove)
-      buildStepTimes.keys.filter(_._1 == id).foreach(buildStepTimes.remove)
+  /** A TxTable root built once per (session, sfDir) under its own attempt
+    * dir. [[Tables.clearDerived]] deletes the dir and drops the memo
+    * together, so a later snapshot read can never point at a removed root
+    * (the ADVICE r8 stale-memo class; spec-pinned in AcidSpec).
+    */
+  private def txTable(spark: SparkSession, sfDir: String, name: String)
+                     (build: String => Unit): String =
+    Tables.memo(spark, sfDir, s"txtable_$name") {
+      val root = Tables.uniqueStageDir(spark, sfDir, s"txtable_$name")
+      build(root)
+      root
     }
-    true
-  }
 
-  /** Wall-clock per commit step of the last [[ordersTxTable]] build for
-    * this (session, sfDir) — read by Bench so `stage_detail` attributes
+  /** Wall-clock per commit step of this (session, sfDir)'s
+    * [[ordersTxTable]] build — read by Bench so `stage_detail` attributes
     * the staging cost to the individual mutation kinds (VERDICT r8 #7: a
     * regression in ONE commit kind must be visible, not smeared over the
-    * 4-version history build). Empty until a build ran in this session.
+    * 4-version history build). Empty until a build ran in this session;
+    * never builds.
     */
-  private val buildStepTimes = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), Seq[(String, Double)]]
   private[graft] def buildSteps(spark: SparkSession,
                                 sfDir: String): Seq[(String, Double)] =
-    buildStepTimes.getOrElse((System.identityHashCode(spark), sfDir), Nil)
+    Tables.memoized[Seq[(String, Double)]](spark, sfDir, "txtable_orders_steps")
+      .getOrElse(Nil)
 
   /** Build (once per session, sfDir) and return the table root. */
-  private[graft] def ordersTxTable(spark: SparkSession, sfDir: String): String = {
-    val _ = clearHookRegistered
-    built.getOrElseUpdate((System.identityHashCode(spark), sfDir), {
+  private[graft] def ordersTxTable(spark: SparkSession, sfDir: String): String =
+    txTable(spark, sfDir, "orders") { root =>
       val steps = Seq.newBuilder[(String, Double)]
       def step[A](name: String)(body: => A): A = {
         val t0 = System.nanoTime()
@@ -75,7 +73,6 @@ object AcidOps {
         steps += name -> ((System.nanoTime() - t0) / 1e9)
         r
       }
-      val root = Tables.uniqueStageDir(spark, sfDir, "txtable_orders")
       val orders = Tables.orders(spark, sfDir)
       val cutoff = lit(TtlCutoff).cast(orders.schema("o_orderdate").dataType)
       val batchSplit = lit("1998-01-01 00:00:00")
@@ -102,10 +99,8 @@ object AcidOps {
         TxTable.merge(spark, root, corrections.unionByName(inserts),
           Seq("o_orderkey"), Seq("o_totalprice"))
       }
-      buildStepTimes((System.identityHashCode(spark), sfDir)) = steps.result()
-      root
-    })
-  }
+      Tables.memo(spark, sfDir, "txtable_orders_steps")(steps.result()): Unit
+    }
 
   private val Cols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
     "o_totalprice", "o_orderdate", "o_orderpriority")
@@ -141,10 +136,8 @@ object AcidOps {
     * checks: per-type aggregates equal the raw events table's, where a
     * double-applied batch would double a third of every group.
     */
-  private[graft] def txnSinkTable(spark: SparkSession, sfDir: String): String = {
-    val _ = clearHookRegistered
-    built.getOrElseUpdate((System.identityHashCode(spark), sfDir + "#txn_sink"), {
-      val root = Tables.uniqueStageDir(spark, sfDir, "txtable_txn_sink")
+  private[graft] def txnSinkTable(spark: SparkSession, sfDir: String): String =
+    txTable(spark, sfDir, "txn_sink") { root =>
       val ev = Tables.events(spark, sfDir)
         .select(col("event_id"), col("user_id"), col("event_type"))
       def batch(b: Int) = ev.where(col("event_id") % 3 === b)
@@ -152,9 +145,7 @@ object AcidOps {
       TxTable.appendOnce(spark, root, batch(1), "graft_sink", 1L): Unit
       TxTable.appendOnce(spark, root, batch(1), "graft_sink", 1L): Unit // redelivery
       TxTable.appendOnce(spark, root, batch(2), "graft_sink", 2L): Unit
-      root
-    })
-  }
+    }
 
   /** Final state of the exactly-once sink, per event type — integer-only
     * aggregates (count, id sum, distinct users) so the equality with the
@@ -180,10 +171,8 @@ object AcidOps {
     * to v0 still reads the ORIGINAL three-column schema (schemas version
     * with the data).
     */
-  private[graft] def evoTable(spark: SparkSession, sfDir: String): String = {
-    val _ = clearHookRegistered
-    built.getOrElseUpdate((System.identityHashCode(spark), sfDir + "#evo"), {
-      val root = Tables.uniqueStageDir(spark, sfDir, "txtable_evo")
+  private[graft] def evoTable(spark: SparkSession, sfDir: String): String =
+    txTable(spark, sfDir, "evo") { root =>
       val orders = Tables.orders(spark, sfDir)
       TxTable.append(spark, root,
         orders.where(col("o_orderkey") % 2 === 0)
@@ -197,9 +186,7 @@ object AcidOps {
         orders.where(col("o_orderkey") % 2 === 1)
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
             col("o_orderpriority")))
-      root
-    })
-  }
+    }
 
   /** Post-evolution state, grouped by the ADDED column with pre-evolution
     * rows surfacing as the [[PreEvolution]] sentinel — the oracle rebuilds
@@ -277,10 +264,8 @@ object AcidOps {
     * deletes metadata-speed: the vectors are deleted-rows/8 bits of
     * sidecar, and compaction materializes them later.
     */
-  private[graft] def morTable(spark: SparkSession, sfDir: String): String = {
-    val _ = clearHookRegistered
-    built.getOrElseUpdate((System.identityHashCode(spark), sfDir + "#mor"), {
-      val root = Tables.uniqueStageDir(spark, sfDir, "txtable_mor")
+  private[graft] def morTable(spark: SparkSession, sfDir: String): String =
+    txTable(spark, sfDir, "mor") { root =>
       val slim = Tables.orders(spark, sfDir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"))
@@ -289,9 +274,7 @@ object AcidOps {
       TxTable.deleteMor(spark, root, col("o_orderkey") % 7 === 0): Unit
       TxTable.deleteMor(spark, root,
         col("o_orderstatus") === "F" && col("o_orderkey") % 5 === 0): Unit
-      root
-    })
-  }
+    }
 
   /** Final state of the MOR table — the vectors applied at scan time; the
     * oracle replays both delete predicates against raw orders, so a
@@ -318,10 +301,8 @@ object AcidOps {
     * the skip counts; the registered oracles assert the pruned reads are
     * lossless — the data-skipping correctness contract.
     */
-  private[graft] def skipTable(spark: SparkSession, sfDir: String): String = {
-    val _ = clearHookRegistered
-    built.getOrElseUpdate((System.identityHashCode(spark), sfDir + "#skip"), {
-      val root = Tables.uniqueStageDir(spark, sfDir, "txtable_skip")
+  private[graft] def skipTable(spark: SparkSession, sfDir: String): String =
+    txTable(spark, sfDir, "skip") { root =>
       val base = Tables.orders(spark, sfDir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderpriority"))
         .withColumn("opt_clerk",
@@ -333,9 +314,7 @@ object AcidOps {
           !lowPri && stamped, !lowPri && !stamped).foreach { cell =>
         TxTable.append(spark, root, base.where(cell).repartition(1)): Unit
       }
-      root
-    })
-  }
+    }
 
   /** Registered-connector scan (r13, VERDICT r12 #3): the same skip-table
     * read through `spark.read.format("graft-tx")` — the DataSource surface
@@ -359,10 +338,8 @@ object AcidOps {
     * the [[graft.sources.TxCatalog]] SQL surface — `DELETE FROM` (the CoW
     * delete path: pruning, 3VL, CDF, rebase) and `INSERT INTO` (an append
     * commit) — built once per session. */
-  private[graft] def sqlDmlTable(spark: SparkSession, sfDir: String): String = {
-    val _ = clearHookRegistered
-    built.getOrElseUpdate((System.identityHashCode(spark), sfDir + "#sqldml"), {
-      val root = Tables.uniqueStageDir(spark, sfDir, "txtable_sqldml")
+  private[graft] def sqlDmlTable(spark: SparkSession, sfDir: String): String =
+    txTable(spark, sfDir, "sqldml") { root =>
       val p = java.nio.file.Paths.get(root)
       spark.conf.set("spark.sql.catalog.graft_sql", "graft.sources.TxCatalog")
       spark.conf.set("spark.sql.catalog.graft_sql.root", p.getParent.toString)
@@ -381,9 +358,7 @@ object AcidOps {
       spark.sql(s"INSERT INTO $t SELECT * FROM graft_sql_dml_seed"): Unit
       spark.sql(s"DELETE FROM $t WHERE o_orderkey <= 2000"): Unit
       spark.sql(s"INSERT INTO $t VALUES (${2000000000L}, 42, 99.99)"): Unit
-      root
-    })
-  }
+    }
 
   /** State after the SQL mutations, read back through the SQL surface and
     * aggregated per key-modulo bucket — the oracle replays the DELETE's
@@ -410,10 +385,8 @@ object AcidOps {
     * format's own commits — dup-key rejection, CDF pre/post images, and
     * rebase all ride the SQL path because it IS [[TxTable.merge]] /
     * [[TxTable.update]] behind [[graft.sources.TxDmlRewrite]]. */
-  private[graft] def sqlMergeTable(spark: SparkSession, sfDir: String): String = {
-    val _ = clearHookRegistered
-    built.getOrElseUpdate((System.identityHashCode(spark), sfDir + "#sqlmerge"), {
-      val root = Tables.uniqueStageDir(spark, sfDir, "txtable_sqlmerge")
+  private[graft] def sqlMergeTable(spark: SparkSession, sfDir: String): String =
+    txTable(spark, sfDir, "sqlmerge") { root =>
       val orders = Tables.orders(spark, sfDir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"))
@@ -435,9 +408,7 @@ object AcidOps {
            |WHEN NOT MATCHED THEN INSERT *""".stripMargin): Unit
       spark.sql(s"UPDATE $t SET o_totalprice = o_totalprice + 0.25 " +
         "WHERE o_orderkey % 20 = 7"): Unit
-      root
-    })
-  }
+    }
 
   /** State after the SQL merge + update, read back through SQL and
     * aggregated per status — the oracle replays the star-merge's update/
@@ -472,10 +443,8 @@ object AcidOps {
     * re-keyed +[[InsertKeyOffset]] (insert). Both statements land as
     * single `merge` commits of [[TxTable.mergeFull]] behind
     * [[graft.sources.TxDmlRewrite]]. */
-  private[graft] def sqlMergeFullTable(spark: SparkSession, sfDir: String): String = {
-    val _ = clearHookRegistered
-    built.getOrElseUpdate((System.identityHashCode(spark), sfDir + "#sqlmfull"), {
-      val root = Tables.uniqueStageDir(spark, sfDir, "txtable_sqlmfull")
+  private[graft] def sqlMergeFullTable(spark: SparkSession, sfDir: String): String =
+    txTable(spark, sfDir, "sqlmfull") { root =>
       val orders = Tables.orders(spark, sfDir)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       TxTable.append(spark, root, orders)
@@ -511,9 +480,7 @@ object AcidOps {
            |WHEN NOT MATCHED BY SOURCE AND tgt.o_orderkey % 10 = 4 THEN DELETE
            |WHEN NOT MATCHED BY SOURCE AND tgt.o_orderkey % 10 = 7 THEN
            |  UPDATE SET o_orderstatus = 'U'""".stripMargin): Unit
-      root
-    })
-  }
+    }
 
   /** Per-status aggregate of the post-merge state — the oracle replays
     * both statements' clause routing from raw `orders`, so a wrong
@@ -533,10 +500,8 @@ object AcidOps {
     * then one `INSERT OVERWRITE … SELECT` — a SINGLE atomic commit whose
     * removes displace every live file, with the pre-overwrite snapshot
     * still time-travelable. */
-  private[graft] def sqlOverwriteTable(spark: SparkSession, sfDir: String): String = {
-    val _ = clearHookRegistered
-    built.getOrElseUpdate((System.identityHashCode(spark), sfDir + "#sqlover"), {
-      val root = Tables.uniqueStageDir(spark, sfDir, "txtable_sqlover")
+  private[graft] def sqlOverwriteTable(spark: SparkSession, sfDir: String): String =
+    txTable(spark, sfDir, "sqlover") { root =>
       val orders = Tables.orders(spark, sfDir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
       TxTable.append(spark, root, orders.where(col("o_orderkey") % 2 === 0))
@@ -549,9 +514,7 @@ object AcidOps {
         .createOrReplaceTempView("graft_sql_overwrite_source")
       spark.sql(s"INSERT OVERWRITE $t " +
         "SELECT * FROM graft_sql_overwrite_source"): Unit
-      root
-    })
-  }
+    }
 
   /** Final state AND the pre-overwrite snapshot in one result (both via
     * SQL, time travel included) — the oracle replays both sides from raw
@@ -574,10 +537,8 @@ object AcidOps {
     * surface (`CALL <cat>.restore(...)`), so the oracle row exercises the
     * ProcedureCatalog seam end-to-end. Restore never rewrites history:
     * the deleted middle state stays time-travelable. */
-  private[graft] def restoreTable(spark: SparkSession, sfDir: String): String = {
-    val _ = clearHookRegistered
-    built.getOrElseUpdate((System.identityHashCode(spark), sfDir + "#restore"), {
-      val root = Tables.uniqueStageDir(spark, sfDir, "txtable_restore")
+  private[graft] def restoreTable(spark: SparkSession, sfDir: String): String =
+    txTable(spark, sfDir, "restore") { root =>
       val orders = Tables.orders(spark, sfDir)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       TxTable.append(spark, root, orders.where(col("o_orderkey") % 2 === 0))
@@ -587,9 +548,7 @@ object AcidOps {
       spark.conf.set("spark.sql.catalog.graft_rst", "graft.sources.TxCatalog")
       spark.conf.set("spark.sql.catalog.graft_rst.root", p.getParent.toString)
       spark.sql(s"CALL graft_rst.restore('${p.getFileName}', 1)"): Unit
-      root
-    })
-  }
+    }
 
   /** Both sides of the restore in one result: the restored FINAL state
     * (== the full v1 table — every deleted row back) and the pre-restore

@@ -72,7 +72,7 @@ object DedupOps {
     * *exploded* corpus — the one table that must never pin executor memory.
     */
   def distinctShingles(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.derivedBig(spark, sfDir, "distinct_shingles") {
+    Tables.stage(spark, sfDir, "distinct_shingles", Tables.Parquet()) {
       // distinct-within-doc == global distinct on (doc_id, shingle), so
       // array_distinct before the explode keeps the whole derivation narrow
       // — no shuffle of the exploded corpus, ever
@@ -89,7 +89,7 @@ object DedupOps {
     * relative to the corpus), reused by banding, candidates, and Jaccard.
     */
   def minhashSignatures(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.derivedBig(spark, sfDir, "minhash_signatures") {
+    Tables.stage(spark, sfDir, "minhash_signatures", Tables.Parquet()) {
       signaturesFrom(distinctShingles(spark, sfDir))
     }
 
@@ -134,7 +134,7 @@ object DedupOps {
     * The self-join keys on (band_no, band_key) — per-bucket fan-out only.
     */
   def minhashCandidates(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.derivedBig(spark, sfDir, "minhash_candidates") {
+    Tables.stage(spark, sfDir, "minhash_candidates", Tables.Parquet()) {
       candidatesFrom(bandsFrom(minhashSignatures(spark, sfDir)))
     }
 
@@ -379,7 +379,7 @@ object DedupOps {
     * the pipeline retains.
     */
   def duplicateClusters(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.derived(spark, sfDir, "dup_clusters") {
+    Tables.stage(spark, sfDir, "dup_clusters", Tables.Cached) {
       val edges = jaccardOnCandidates(spark, sfDir)
         .where(col("jaccard") >= ClusterMinJaccard)
         .select(col("doc_a"), col("doc_b"))
@@ -456,7 +456,7 @@ object DedupOps {
     // what a production dedup keeps on disk; groups + banded neighbors
     // both read it, and each would otherwise re-run the corpus word scan
     // and the 24-bit majority vote
-    Tables.derivedBig(spark, sfDir, "simhash_sigs") {
+    Tables.stage(spark, sfDir, "simhash_sigs", Tables.Parquet()) {
       val wordRows = Tables.documents(spark, sfDir)
         .select(col("doc_id"), explode(words(col("text"))).as("word"))
         .select(col("doc_id"), Tables.h48(col("word")).as("h"))
@@ -613,30 +613,20 @@ object DedupOps {
   val SrpMaxBits      = 16
 
   /** Data-adaptive SRP bit count (see [[SrpTargetBucket]]); memoized — one
-    * metadata-cheap count per (session, sf). The memo is drained by the
-    * [[Tables.clearDerived]] session-cache hook: a corpus that grows
-    * within a session (the incremental-ingest flow) rebuilds its staged
-    * tables through clearDerived, and a bit count cached against the old
-    * snapshot would silently diverge from the oracle's query-time
-    * count(*) ladder (ADVICE r8).
+    * metadata-cheap count per (session, sf). The memo is dropped by
+    * [[Tables.clearDerived]]: a corpus that grows within a session (the
+    * incremental-ingest flow) rebuilds its staged tables through
+    * clearDerived, and a bit count cached against the old snapshot would
+    * silently diverge from the oracle's query-time count(*) ladder
+    * (ADVICE r8).
     */
-  def srpBitsFor(spark: SparkSession, sfDir: String): Int = {
-    val _ = srpHookRegistered
-    val key = (System.identityHashCode(spark), sfDir)
-    srpBitsCache.getOrElseUpdate(key, {
+  def srpBitsFor(spark: SparkSession, sfDir: String): Int =
+    Tables.memo(spark, sfDir, "srp_bits") {
       val n = Tables.embeddings(spark, sfDir).count()
       var b = SrpBits
       while (b < SrpMaxBits && (1L << b) * SrpTargetBucket < n) b += 1
       b
-    })
-  }
-  private val srpBitsCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), Int]
-  private lazy val srpHookRegistered: Boolean = {
-    Tables.onClearDerived(id =>
-      srpBitsCache.keys.filter(_._1 == id).foreach(srpBitsCache.remove))
-    true
-  }
+    }
 
   private[operators] def srpWeight(table: Int, bit: Int, dim: Int): Double = {
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -677,7 +667,7 @@ object DedupOps {
     * dot products per vector per query.
     */
   private[graft] def srpBucketTable(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.derivedBig(spark, sfDir, "srp_buckets") {
+    Tables.stage(spark, sfDir, "srp_buckets", Tables.Parquet()) {
       val bits = srpBitsFor(spark, sfDir)
       Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), col("embedding"),
@@ -756,10 +746,12 @@ object DedupOps {
       // mins, control flat): sf0.1 0.89 -> 0.64 s, sf1.0 1.18 -> 1.01 s.
       .repartition(col("vec_id"))
       .distinct() // collapse multi-table collisions: cosine is pair-deterministic
-    // Rank through the bounded-heap operator instead of a full window: the
-    // partial stage cuts the candidate stream to ≤k rows per (task, vector)
-    // BEFORE the vec_id exchange, so nothing ever sorts the full candidate
-    // list; the rank window then sees only k-bounded partitions.
+    // Rank through the bounded-heap operator instead of a full window. The
+    // vec_id exchange above already clusters the candidates, so the heap
+    // cut rides that one exchange (its partial and final passes both run
+    // after the distinct, adding no exchange of their own) and keeps ≤k
+    // rows per vector without sorting the full candidate list; the rank
+    // window then sees only k-bounded partitions.
     val topk = graft.plans.TopKPerKey(cand, k, Seq("vec_id"),
       Seq("cosine" -> false, "neighbor_id" -> true))
     val w = Window.partitionBy(col("vec_id"))
@@ -981,7 +973,7 @@ object DedupOps {
     * gram aggregation.
     */
   private[graft] def rarePosting(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.derivedBig(spark, sfDir, "rare_posting") {
+    Tables.stage(spark, sfDir, "rare_posting", Tables.Parquet()) {
       val tg = distinctShingles(spark, sfDir)
         .select(col("doc_id"), col("shingle").as("g"))
       val rare = tg.groupBy(col("g")).agg(count(lit(1)).as("df"))
@@ -995,7 +987,7 @@ object DedupOps {
     // shared by the Jaccard and containment cuts — the [[minhashCandidates]]
     // staging precedent: compute the candidate surface once per session,
     // let each registered query apply its own threshold to the stored table
-    Tables.derivedBig(spark, sfDir, "rare_overlaps") {
+    Tables.stage(spark, sfDir, "rare_overlaps", Tables.Parquet()) {
       rareGramOverlapsBuild(spark, sfDir)
     }
 
@@ -1059,17 +1051,8 @@ object DedupOps {
     * parquet is the stored artifact that never recomputes; TTL/vacuum
     * retire old signature files through the same log.
     */
-  private val idxBuilt =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), String]
-  private lazy val idxClearHook: Boolean = {
-    Tables.onClearDerived { id =>
-      idxBuilt.keys.filter(_._1 == id).foreach(idxBuilt.remove)
-    }
-    true
-  }
-  private[graft] def minhashIndexTx(spark: SparkSession, sfDir: String): String = {
-    val _ = idxClearHook
-    idxBuilt.getOrElseUpdate((System.identityHashCode(spark), sfDir), {
+  private[graft] def minhashIndexTx(spark: SparkSession, sfDir: String): String =
+    Tables.memo(spark, sfDir, "txtable_minhash_idx") {
       val root = Tables.uniqueStageDir(spark, sfDir, "txtable_minhash_idx")
       val bands = minhashBands(spark, sfDir)
       // 4 files per batch append, pinned: the per-ingest-day small-file
@@ -1095,8 +1078,7 @@ object DedupOps {
         sortCols = Seq("band_no", "band_key"),
         bloomCols = Seq("band_key")): Unit
       root
-    })
-  }
+    }
 
   /** [[incrementalDedup]] against the PERSISTED index: the stored-table
     * side reads the TxTable snapshot AS OF v0 — the pre-ingest index —
@@ -1387,7 +1369,7 @@ object DedupOps {
     // measured the two array joins at 8.5 of 10.5 s at sf1.0): the arrays
     // are the corpus's token mass, and with the bucketed layout they are
     // read pre-partitioned instead of shuffled per query.
-    Tables.derivedBigBucketed(spark, sfDir, "ppj_sets", "doc_id") {
+    Tables.stage(spark, sfDir, "ppj_sets", Tables.Bucketed("doc_id")) {
       Tables.documents(spark, sfDir)
         .select(col("doc_id"), explode(words(col("text"))).as("token"))
         .distinct()
@@ -1416,7 +1398,7 @@ object DedupOps {
     // rep filter broadcasts (group-count-sized): a broadcast join preserves
     // the streamed side's bucketed doc_id partitioning, so the rank window
     // below needs no exchange either.
-    Tables.derivedBigBucketed(spark, sfDir, "ppj_prefix", "token") {
+    Tables.stage(spark, sfDir, "ppj_prefix", Tables.Bucketed("token")) {
       val sets = ppjSets(spark, sfDir)
       val groups = sets.groupBy(col("h")).agg(min(col("doc_id")).as("rep"))
       val repSets = sets.join(broadcast(groups.select(col("rep").as("doc_id"))),
@@ -1712,13 +1694,13 @@ object DedupOps {
     * argument) since its pair listing is irreducibly quadratic in the
     * duplicate count. The all-pairs `levenshtein` oracle is brute-force
     * ONLY at oracle SF. The pair table is staged once per session
-    * ([[Tables.derivedBig]]) — it is the stored blocking output both this
+    * ([[Tables.stage]] `Parquet`) — it is the stored blocking output both this
     * query and the [[fellegiSunter]] scorer read, exactly what a
     * production linkage pipeline persists between its block and decide
     * stages.
     */
   def edit1Pairs(spark: SparkSession, sfDir: String): DataFrame =
-   Tables.derivedBig(spark, sfDir, "edit1_pairs") {
+   Tables.stage(spark, sfDir, "edit1_pairs", Tables.Parquet()) {
     val names = Tables.customer(spark, sfDir)
       .select(col("c_custkey").as("key"), col("c_name").as("name"))
     val L = length(col("name"))

@@ -84,7 +84,7 @@ object GeoOps {
     * key — the reason GeoMesa makes z3 (not z2) its default index.
     */
   def z3Layout(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.derivedBig(spark, sfDir, "z3_layout") {
+    Tables.stage(spark, sfDir, "z3_layout", Tables.Parquet()) {
       withCoords(spark, sfDir)
         .withColumn("x10", expr("(lon + 180) * 1023 div 360"))
         .withColumn("y10", expr("(lat + 90) * 1023 div 180"))
@@ -105,7 +105,7 @@ object GeoOps {
     * row-group stats are tight (the GeoMesa layout).
     */
   def z2Layout(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.derivedBig(spark, sfDir, "z2_layout")(
+    Tables.stage(spark, sfDir, "z2_layout", Tables.Parquet())(
       z2Keys(spark, sfDir).sortWithinPartitions(col("z2")))
 
   /** X-G geodesic math: per-user great-circle path length — haversine
@@ -477,10 +477,10 @@ object GeoOps {
     // on src, so when the vertex-side frame outgrows the broadcast
     // threshold the per-round join exchanges ONLY the vertex-sized rank/
     // frontier vector — the edge list never shuffles (plan evidence:
-    // plans/r16/geo_pagerank_bucketed_{before,after}.txt, captured with
+    // plans/r16/geo_pagerank_noBHJ_{before,after}.txt, captured with
     // broadcast disabled to expose the at-scale shape). At bench SF the
     // vertex side broadcasts and the plans are unchanged.
-    Tables.derivedBigBucketed(spark, sfDir, "sym_edges", "src") {
+    Tables.stage(spark, sfDir, "sym_edges", Tables.Bucketed("src")) {
       val e = neighborPairs(spark, sfDir)
         .select(col("a_id"), col("b_id"),
           (lit(1L) + abs(col("a_lon") - col("b_lon")) +
@@ -669,7 +669,7 @@ object GeoOps {
     * each query. Vertex-sized parquet, so consumers get a pruned scan.
     */
   private[graft] def ccLabels(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.derivedBig(spark, sfDir, "cc_labels") {
+    Tables.stage(spark, sfDir, "cc_labels", Tables.Parquet()) {
       val edges = symEdges(spark, sfDir).select(col("src"), col("dst"))
       val init = edges.select(col("src").as("v")).distinct()
         .select(col("v"), col("v").as("label"))
@@ -878,24 +878,14 @@ object GeoOps {
   /** Bounding box probed by [[zorderTxScan]] (the z2RangeScan window). */
   val ZTxBbox: (Int, Int, Int, Int) = (-60, 0, -30, 30)
 
-  private val geoTxBuilt =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), String]
-  private lazy val geoTxClearHook: Boolean = {
-    Tables.onClearDerived { id =>
-      geoTxBuilt.keys.filter(_._1 == id).foreach(geoTxBuilt.remove)
-    }
-    true
-  }
-
   /** Event coordinates persisted as a Z-ORDER-compacted TxTable (once per
     * session): 8 append files (the ingest-batch shape), then
     * [[graft.sources.TxTable.compactZ]] folds them into 4 files clustered
     * by the (lon, lat) Morton key — each file's commit-logged stats bound
     * BOTH dimensions, the layout [[zorderTxScan]]'s pruned probe relies on.
     */
-  private[graft] def geoTxTable(spark: SparkSession, sfDir: String): String = {
-    val _ = geoTxClearHook
-    geoTxBuilt.getOrElseUpdate((System.identityHashCode(spark), sfDir), {
+  private[graft] def geoTxTable(spark: SparkSession, sfDir: String): String =
+    Tables.memo(spark, sfDir, "txtable_geo_z") {
       val root = Tables.uniqueStageDir(spark, sfDir, "txtable_geo_z")
       graft.sources.TxTable.append(spark, root,
         withCoords(spark, sfDir).select(col("event_id"), col("lon"), col("lat"))
@@ -903,8 +893,7 @@ object GeoOps {
       graft.sources.TxTable.compactZ(spark, root, targetFiles = 4,
         xCol = "lon", yCol = "lat"): Unit
       root
-    })
-  }
+    }
 
   /** X-M2c: bbox probe through the Z-ORDER-compacted TxTable — the
     * multi-dimensional data-skipping read: `readWhere` consults the

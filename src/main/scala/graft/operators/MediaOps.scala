@@ -224,14 +224,14 @@ object MediaOps {
     * filter type `r % 5` (None/Sub/Up/Average/Paeth all occur in any image
     * ≥5 rows tall). Encoding needs `java.util.zip.Deflater`, which SQL
     * can't express, so the payload table is a typed mapPartitions render
-    * staged once per session ([[graft.Tables.derivedBig]]) — exactly how a
+    * staged once per session ([[graft.Tables.stage]] `Parquet`) — exactly how a
     * production corpus stores a binary media column in parquet. The decode
     * query then proves [[graft.functions.PngDecode]] genuinely inverts the
     * compression+filter pipeline: its stats must hash-match an oracle that
     * never saw the compressed bytes.
     */
   def pngPayloads(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.derivedBig(spark, sfDir, "png_payloads") {
+    Tables.stage(spark, sfDir, "png_payloads", Tables.Parquet()) {
       import spark.implicits._
       Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
         .as[(Long, String)]
@@ -319,7 +319,7 @@ object MediaOps {
     * machine — an oracle that never saw the encoded bytes must hash-match.
     */
   def qoiPayloads(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.derivedBig(spark, sfDir, "qoi_payloads") {
+    Tables.stage(spark, sfDir, "qoi_payloads", Tables.Parquet()) {
       import spark.implicits._
       Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
         .as[(Long, String)]
@@ -419,7 +419,7 @@ object MediaOps {
     * oracle's PCM stats exactly or the Rice/predictor inversion is wrong.
     */
   def flacPayloads(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.derivedBig(spark, sfDir, "flac_payloads") {
+    Tables.stage(spark, sfDir, "flac_payloads", Tables.Parquet()) {
       import spark.implicits._
       Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
         .as[(Long, String)]
@@ -593,7 +593,7 @@ object MediaOps {
     * oracle's `md5(text)` exactly, so any Huffman/LZ77 shortcut mismatches.
     */
   def gzipPayloads(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.derivedBig(spark, sfDir, "gzip_payloads") {
+    Tables.stage(spark, sfDir, "gzip_payloads", Tables.Parquet()) {
       import spark.implicits._
       Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
         .as[(Long, String)]
@@ -759,7 +759,7 @@ object MediaOps {
 
   /** Staged member-concatenated gzip payloads (see [[encodeGzipConcat]]). */
   def gzipConcatPayloads(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.derivedBig(spark, sfDir, "gzip_concat_payloads") {
+    Tables.stage(spark, sfDir, "gzip_concat_payloads", Tables.Parquet()) {
       import spark.implicits._
       Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
         .as[(Long, String)]

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * part of the tested contract.
   *
   *  - **Bucketed co-located join** ([[bucketedOrderRevenue]]): both fact
-  *    tables stored hash-bucketed on the join key ([[Tables.bucketed]]), so
+  *    tables stored hash-bucketed on the join key ([[Tables.stage]] `Bucketed`), so
   *    the join AND the post-join aggregation run with zero exchanges. This
   *    is the layout answer to "orders ⋈ lineitem shuffles both sides every
   *    query" — pay the shuffle once at write time, never at read time.
@@ -155,7 +155,7 @@ object ScaleOps {
 
   /** X-P12: sort-clustered layout for data skipping — orders staged once as
     * a range-partitioned, within-partition-sorted parquet layout on
-    * `o_orderdate` ([[Tables.derivedBig]]). Range partitioning gives each
+    * `o_orderdate` ([[Tables.stage]] `Parquet`). Range partitioning gives each
     * file a narrow, disjoint date span, so a date-slice query's pushed
     * predicate eliminates whole files via their row-group min/max stats —
     * the reader opens footers but decodes nothing outside the slice. At
@@ -167,7 +167,7 @@ object ScaleOps {
     * predicate reaches the scan (PushedFilters).
     */
   def sortedOrdersLayout(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.derivedBig(spark, sfDir, "orders_by_date") {
+    Tables.stage(spark, sfDir, "orders_by_date", Tables.Parquet()) {
       Tables.orders(spark, sfDir)
         .repartitionByRange(8, col("o_orderdate"))
         .sortWithinPartitions(col("o_orderdate"))
@@ -447,7 +447,7 @@ object ScaleOps {
     * changes the grid assignment, not the technique.
     */
   def zorderedOrdersLayout(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.derivedBig(spark, sfDir, "orders_zorder") {
+    Tables.stage(spark, sfDir, "orders_zorder", Tables.Parquet()) {
       Tables.orders(spark, sfDir)
         .withColumn("zd",
           datediff(col("o_orderdate"), lit(ZorderEpoch).cast("date")).cast("int"))
@@ -479,7 +479,7 @@ object ScaleOps {
   /** X-P11: incremental aggregate maintenance (materialized-view refresh) —
     * monthly order totals produced WITHOUT rescanning settled history. The
     * pre-cutoff months are aggregated once into a staged partial table
-    * ([[Tables.derivedBig]]: the aggregate, thousands of rows, not the
+    * ([[Tables.stage]] `Parquet`: the aggregate, thousands of rows, not the
     * facts); each run scans only post-cutoff orders (the date predicate
     * pushes to the scan, so parquet stats skip historical row groups) and
     * merges the two partial sets with a re-aggregation over |months| rows.
@@ -496,7 +496,7 @@ object ScaleOps {
       df.groupBy(date_trunc("month", col("o_orderdate")).as("month"))
         .agg(count(lit(1)).as("n_part"),
           sum(col("o_totalprice").cast("decimal(12,2)")).as("total_part"))
-    val history = Tables.derivedBig(spark, sfDir, "monthly_orders_base") {
+    val history = Tables.stage(spark, sfDir, "monthly_orders_base", Tables.Parquet()) {
       partial(Tables.orders(spark, sfDir).where(col("o_orderdate") < cutoff))
     }
     val delta = partial(Tables.orders(spark, sfDir).where(col("o_orderdate") >= cutoff))

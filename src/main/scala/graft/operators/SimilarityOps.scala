@@ -154,7 +154,7 @@ object SimilarityOps {
     * bench's worst query).
     */
   def centroids(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.derived(spark, sfDir, "ivf_centroids") {
+    Tables.stage(spark, sfDir, "ivf_centroids", Tables.Cached) {
       vecs(spark, sfDir)
         .select(col("label"), posexplode(col("embedding")).as(Seq("i", "x")))
         .groupBy(col("label"), col("i"))
@@ -229,27 +229,12 @@ object SimilarityOps {
     * memoized — one metadata-cheap count per (session, sf). The DuckDB
     * oracle replays the same formula as a scalar subquery.
     */
-  def kmeansKFor(spark: SparkSession, sfDir: String): Long = {
-    val _ = clearHookRegistered
-    val key = (System.identityHashCode(spark), sfDir)
-    kCache.getOrElseUpdate(key, {
+  def kmeansKFor(spark: SparkSession, sfDir: String): Long =
+    Tables.memo(spark, sfDir, "kmeans_k") {
       val n = vecs(spark, sfDir).count()
       math.max(KmeansK.toLong,
         (n + KmeansTargetClusterSize - 1) / KmeansTargetClusterSize)
-    })
-  }
-  private val kCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), Long]
-  // corpus-derived trained values (cluster count, quantizer scales) must
-  // not outlive a staged-corpus rebuild: Tables.clearDerived drains them
-  // like the SRP bit memo (ADVICE r8 stale-memo class)
-  private lazy val clearHookRegistered: Boolean = {
-    Tables.onClearDerived { id =>
-      kCache.keys.filter(_._1 == id).foreach(kCache.remove)
-      scaleCache.keys.filter(_._1 == id).foreach(scaleCache.remove)
     }
-    true
-  }
 
   /** Codegen'd double dot product ([[graft.functions.VecDot]]) — the
     * training loop's hottest arithmetic; bit-identical to the interpreted
@@ -344,7 +329,7 @@ object SimilarityOps {
     * session no matter how many queries probe it.
     */
   def kmeansCentroids(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.derived(spark, sfDir, "kmeans_centroids") {
+    Tables.stage(spark, sfDir, "kmeans_centroids", Tables.Cached) {
       val v = vecsD(spark, sfDir)
       val init = v.groupBy((col("vec_id") % kmeansKFor(spark, sfDir)).as("k"))
         .agg(min_by(col("e"), md5(col("vec_id").cast("string"))).as("centroid"))
@@ -358,7 +343,7 @@ object SimilarityOps {
     * re-partitioned/written by, making probes partition-pruned scans.
     */
   def kmeansAssignments(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.derivedBig(spark, sfDir, "kmeans_assign") {
+    Tables.stage(spark, sfDir, "kmeans_assign", Tables.Parquet()) {
       assignTo(vecsD(spark, sfDir), kmeansCentroids(spark, sfDir))
         .select(col("vec_id"), col("k"))
     }
@@ -453,7 +438,7 @@ object SimilarityOps {
     * disappears because k is part of the path.
     */
   def kmeansLayout(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.derivedBigBy(spark, sfDir, "kmeans_layout", Seq("k")) {
+    Tables.stage(spark, sfDir, "kmeans_layout", Tables.Parquet(Seq("k"))) {
       vecs(spark, sfDir)
         .join(kmeansAssignments(spark, sfDir), Seq("vec_id"))
         .select(col("vec_id"), col("label"), col("embedding"), col("k"))
@@ -474,26 +459,21 @@ object SimilarityOps {
     */
   private val QuantEps = 1e-12
 
-  private val scaleCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), Array[Double]]
-
   /** Per-dimension max-abs quantization scales ([[DedupOps.EmbDim]]
     * doubles), trained once per (session, sfDir). The collect is a
     * plan-time driver action over a dims-sized aggregate (64 rows at any
     * corpus size) — the quantizer's "trained model", analogous to
     * collecting k-means probe ids.
     */
-  private[graft] def quantScales(spark: SparkSession, sfDir: String): Array[Double] = {
-    val _ = clearHookRegistered
-    scaleCache.getOrElseUpdate((System.identityHashCode(spark), sfDir), {
+  private[graft] def quantScales(spark: SparkSession, sfDir: String): Array[Double] =
+    Tables.memo(spark, sfDir, "quant_scales") {
       vecs(spark, sfDir)
         .select(posexplode(col("embedding")).as(Seq("i", "x")))
         .groupBy(col("i"))
         .agg(greatest(max(abs(col("x").cast("double"))), lit(QuantEps)).as("m"))
         .orderBy(col("i"))
         .collect().map(_.getDouble(1))
-    })
-  }
+    }
 
   /** Symmetric int8 quantizer: q_d = floor(v_d / s_d · 127 + 0.5) ∈
     * [−127, 127]. floor(x + 0.5) not round(): both engines floor
@@ -511,7 +491,7 @@ object SimilarityOps {
     * [[graft.functions.VecDot]] over the stored arrays.
     */
   def quantizedEmbeddings(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.derivedBig(spark, sfDir, "quantized_embeddings") {
+    Tables.stage(spark, sfDir, "quantized_embeddings", Tables.Parquet()) {
       val sc = quantScales(spark, sfDir)
       vecs(spark, sfDir)
         .select(col("vec_id"), quantizeExpr(col("embedding"), sc).as("qe"))
@@ -605,7 +585,7 @@ object SimilarityOps {
     * the other trained models.
     */
   def pqCodebooks(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.derived(spark, sfDir, "pq_codebooks") {
+    Tables.stage(spark, sfDir, "pq_codebooks", Tables.Cached) {
       val subs = subVecs(spark, sfDir)
       val init = subs.groupBy(col("m"), (col("vec_id") % PqKs).as("k"))
         .agg(min_by(col("sub"), md5(col("vec_id").cast("string"))).as("centroid"))
@@ -657,7 +637,7 @@ object SimilarityOps {
     * instead of floats), the whole point of PQ.
     */
   def pqCodes(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.derivedBig(spark, sfDir, "pq_codes") {
+    Tables.stage(spark, sfDir, "pq_codes", Tables.Parquet()) {
       // (code, centroid, centroid self-dot) per subspace, codes ascending
       val cb: Seq[Seq[(Long, Seq[Double], Double)]] =
         pqCodebookD(spark, sfDir).select(col("m"), col("code"), col("cd"), col("cc"))
@@ -1223,8 +1203,8 @@ object SimilarityOps {
     *  1. The 64×64 second-moment matrix comes from ONE corpus pass — the
     *     exact-integer [[gramMatrix]] cells (fixed-point outer products,
     *     map-side combinable; bit-identical across engines by
-    *     construction), computed once per session ([[graft.Tables.derived]]
-    *     cache: 2080 rows of metadata, the corpus is never re-scanned by
+    *     construction), computed once per session ([[graft.Tables.stage]]
+    *     `Cached`: 2080 rows of metadata, the corpus is never re-scanned by
     *     the iterations).
     *  2. Power iteration runs entirely on that matrix: [[PcIters]] unrolled
     *     rounds whose MATVEC is a distributed aggregation over the cached
@@ -1244,7 +1224,7 @@ object SimilarityOps {
     */
   def pcaPowerProjection(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val cells = Tables.derived(spark, sfDir, "pca_gram")(gramMatrixUdaf(spark, sfDir))
+    val cells = Tables.stage(spark, sfDir, "pca_gram", Tables.Cached)(gramMatrixUdaf(spark, sfDir))
     val full = cells.unionAll(cells.where(col("i") =!= col("j"))
       .select(col("j").as("i"), col("i").as("j"), col("gram")))
     // anchored kernel (see [[PcVecScale]]): vi carries v·10⁶ as an exact

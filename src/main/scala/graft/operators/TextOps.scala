@@ -945,7 +945,7 @@ object TextOps {
     * like every X-P staging move.
     */
   def invertedIndex(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.derivedBigBy(spark, sfDir, "inverted_index", Seq("bucket")) {
+    Tables.stage(spark, sfDir, "inverted_index", Tables.Parquet(Seq("bucket"))) {
       Tables.documents(spark, sfDir)
         .select(col("doc_id"), words(col("text")).as("ws"))
         // dl (doc token count) rides denormalized on every posting row —
@@ -966,7 +966,7 @@ object TextOps {
     * not a query-time corpus aggregation.
     */
   def indexDocStats(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.derived(spark, sfDir, "index_doc_stats") {
+    Tables.stage(spark, sfDir, "index_doc_stats", Tables.Cached) {
       Tables.documents(spark, sfDir)
         .select(size(words(col("text"))).cast("long").as("dl"))
         .agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
@@ -1344,7 +1344,7 @@ object TextOps {
     * rescan the corpus once per round.
     */
   private[graft] def bpeWordFreq(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.derivedBig(spark, sfDir, "bpe_word_freq") {
+    Tables.stage(spark, sfDir, "bpe_word_freq", Tables.Parquet()) {
       Tables.documents(spark, sfDir)
         .select(explode(words(col("text"))).as("word"))
         .groupBy(col("word")).agg(count(lit(1)).as("freq"))
@@ -1358,7 +1358,7 @@ object TextOps {
     // first registered bench run measured 32 s of pure planning at
     // sf0.01. Staged, training is 10 sequential small jobs once per
     // session and every consumer reads flat parquet.
-    var cur = Tables.derivedBig(spark, sfDir, "bpe_syms_0") {
+    var cur = Tables.stage(spark, sfDir, "bpe_syms_0", Tables.Parquet()) {
       w0.select(col("word"), col("freq"),
         concat(lit(" "),
           concat_ws(" ", transform(sequence(lit(1), length(col("word"))),
@@ -1379,7 +1379,7 @@ object TextOps {
         .agg(sum(col("freq")).as("cnt"))
         .orderBy(col("cnt").desc, col("lhs"), col("rhs"))
         .limit(1)
-      cur = Tables.derivedBig(spark, sfDir, s"bpe_syms_$r") {
+      cur = Tables.stage(spark, sfDir, s"bpe_syms_$r", Tables.Parquet()) {
         prev.crossJoin(broadcast(best))
           .select(col("word"), col("freq"),
             expr("replace(syms, concat(' ', lhs, ' ', rhs, ' '), concat(' ', lhs, rhs, ' '))")
@@ -1475,7 +1475,7 @@ object TextOps {
     * 10× point collapsed to one staged build).
     */
   def lmScores(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.derivedBig(spark, sfDir, "lm_scores")(lmScoresBuild(spark, sfDir))
+    Tables.stage(spark, sfDir, "lm_scores", Tables.Parquet())(lmScoresBuild(spark, sfDir))
 
   private def lmScoresBuild(spark: SparkSession, sfDir: String): DataFrame = {
     val bi = Tables.documents(spark, sfDir)

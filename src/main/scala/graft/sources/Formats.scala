@@ -43,29 +43,17 @@ import org.apache.spark.sql.functions._
 object Formats {
 
   /** One staged export per (session, sfDir, format): the memo holds the
-    * read-side DataFrame; the write ran when the entry was created.
+    * read-side DataFrame; the write ran when the entry was created. The
+    * attempt-unique path means an abandoned timed-out writer can never race
+    * a rebuild's overwrite on the same directory (ADVICE r7).
     */
-  private val staged =
-    scala.collection.concurrent.TrieMap.empty[(Int, String, String), DataFrame]
-  // staged exports live under attempt dirs Tables.clearDerived deletes; a
-  // mid-session clear must drop these memos too (ADVICE r8 stale-memo class)
-  private lazy val clearHookRegistered: Boolean = {
-    Tables.onClearDerived(id =>
-      staged.keys.filter(_._1 == id).foreach(staged.remove))
-    true
-  }
-
   private def stagedRead(spark: SparkSession, sfDir: String, fmt: String)
-                        (write: String => Unit)(read: String => DataFrame): DataFrame = {
-    val _ = clearHookRegistered
-    staged.getOrElseUpdate((System.identityHashCode(spark), sfDir, fmt), {
-      // attempt-unique path: an abandoned timed-out writer can never race a
-      // rebuild's overwrite on the same directory (ADVICE r7)
+                        (write: String => Unit)(read: String => DataFrame): DataFrame =
+    Tables.memo(spark, sfDir, s"fmt_$fmt") {
       val path = Tables.uniqueStageDir(spark, sfDir, s"fmt_$fmt")
       write(path)
       read(path)
-    })
-  }
+    }
 
   /** csv with header; partitioned parallel write, schema-on-read. */
   def csvRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {

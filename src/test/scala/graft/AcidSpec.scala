@@ -376,6 +376,73 @@ class AcidSpec extends SparkSpec {
     assert(AcidOps.finalState(spark, Sf).count() == before)
   }
 
+  /** The attempt dir a staged parquet read scans. */
+  private def attemptDir(df: org.apache.spark.sql.DataFrame): java.io.File =
+    new java.io.File(new java.net.URI(df.inputFiles.head)).getParentFile
+
+  test("session state: two sessions staging one name get separate memos and attempt dirs") {
+    val (s1, s2) = (spark.newSession(), spark.newSession())
+    var builds = 0
+    def staged(s: org.apache.spark.sql.SparkSession) =
+      Tables.stage(s, Sf, "spec_owner_pq", Tables.Parquet()) {
+        builds += 1
+        s.range(0, 10).toDF("id")
+      }
+    try {
+      val (d1, d2) = (staged(s1), staged(s2))
+      assert(builds == 2)
+      assert((staged(s1) eq d1) && (staged(s2) eq d2) && builds == 2)
+      assert(attemptDir(d1) != attemptDir(d2))
+    } finally { Tables.clearDerived(s1); Tables.clearDerived(s2) }
+  }
+
+  test("session state: clearDerived on one session leaves the other's staged reads working") {
+    val (s1, s2) = (spark.newSession(), spark.newSession())
+    def staged(s: org.apache.spark.sql.SparkSession) =
+      Tables.stage(s, Sf, "spec_owner_pq", Tables.Parquet())(s.range(0, 10).toDF("id"))
+    try {
+      val (d1, d2) = (staged(s1), staged(s2))
+      val (dir1, dir2) = (attemptDir(d1), attemptDir(d2))
+      Tables.clearDerived(s1)
+      assert(!dir1.exists() && dir2.exists())
+      assert(d2.count() == 10 && (staged(s2) eq d2))
+      // the cleared session rebuilds into a fresh attempt dir
+      val again = staged(s1)
+      assert(!(again eq d1) && again.count() == 10 && attemptDir(again) != dir1)
+    } finally { Tables.clearDerived(s1); Tables.clearDerived(s2) }
+  }
+
+  test("session state: clearDerived leaves none of the session's attempt dirs or graft_* tables") {
+    val s = spark.newSession()
+    val names = Seq("spec_owner_part", "spec_owner_bkt", "spec_owner_tx")
+    def dirs: Set[String] = names.flatMap(n =>
+      Option(new java.io.File(Tables.stageDir(Sf, n)).listFiles()).toSeq.flatten)
+      .map(_.getPath).toSet
+    def tables: Seq[String] = s.catalog.listTables().collect().toSeq
+      .map(_.name).filter(_.startsWith("graft_spec_owner"))
+    val before = dirs
+    val part = Tables.stage(s, Sf, "spec_owner_part", Tables.Parquet(Seq("p"))) {
+      s.range(0, 20).selectExpr("id", "id % 2 AS p")
+    }
+    val bkt = Tables.stage(s, Sf, "spec_owner_bkt", Tables.Bucketed("id")) {
+      s.range(0, 20).toDF("id")
+    }
+    val cached = Tables.stage(s, Sf, "spec_owner_cached", Tables.Cached) {
+      s.range(0, 5).toDF("id")
+    }
+    Tables.memo(s, Sf, "spec_owner_tx") {
+      val root = Tables.uniqueStageDir(s, Sf, "spec_owner_tx")
+      TxTable.append(s, root, s.range(0, 3).toDF("id"))
+    }: Unit
+    assert(part.count() == 20 && bkt.count() == 20 && cached.count() == 5)
+    assert((dirs -- before).size == 3 && tables.size == 1)
+    assert(cached.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    Tables.clearDerived(s)
+    assert((dirs -- before).isEmpty, dirs -- before)
+    assert(tables.isEmpty, tables)
+    assert(cached.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+  }
+
   test("data skipping: commit-logged stats prune provably irrelevant files; results identical") {
     val root = freshRoot()
     // three single-file appends with disjoint id ranges
