@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Loaders for the driver-generated parquet corpus (TESTDATA.md) plus the
@@ -10,27 +10,45 @@ import org.apache.spark.sql.functions._
   * DuckDB CTE (see [[Oracle]]) — that's what makes every reference-parity
   * operator oracle-testable.
   *
-  * Scale note: every derived table is built with narrow ops only (no shuffle
-  * except where an aggregation is semantically required), so derivations
-  * stay cheap at 100 TB: they pipeline into the consuming operator and
-  * Catalyst prunes/pushes through them.
+  * Scale note: the derived fixture tables are metadata — one row per SFT,
+  * index table, node or (node, table) pair, KBs at bench SF — as the
+  * reference's catalog and `nodetool` reads are client-side lists. Each is
+  * built once per session with narrow ops (a shuffle only where an
+  * aggregation needs one) and then held on the driver ([[Local]]): queries
+  * over it scan a `LocalTableScan`, and their filters and projections fold
+  * at optimization time with no generated code and no job. A build past
+  * [[MaxLocalRows]] throws instead of pulling a corpus into the driver.
   */
 object Tables {
 
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Corpus table `name`. Its schema is resolved once per session (memo
+    * `schema:<name>`, dropped by [[clearDerived]]) and handed to the
+    * reader, so only the first call runs the footer-inference job. This
+    * caches metadata only: every call still lists and scans the files.
+    */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val schema = memo(spark, sfDir, s"schema:$name") {
+      // `events.ts` may be TIMESTAMP(NANOS), readable only as raw long nanos
+      // (see [[events]]); a session conf, so setting it here covers every
+      // later read of this session
+      if (name == "events") spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      spark.read.parquet(path).schema
+    }
+    spark.read.schema(schema).parquet(path)
+  }
 
   /** Everything a session builds once and must release together: one
     * `(sfDir, name)` memo behind every derived table, staged layout,
-    * trained value and registered function, plus the release actions
-    * (unpersist a cached frame, DROP a bucketed table, delete an attempt
-    * dir) that [[clearDerived]] runs. Keyed by the session object itself —
+    * trained value, registered function and corpus schema, plus the
+    * release actions (DROP a bucketed table, delete an attempt dir) that
+    * [[clearDerived]] runs. Keyed by the session object itself —
     * reference identity (SparkSession keeps Object's equals), never a hash,
     * so no session can share or inherit another's entries. A memo keyed to a corpus snapshot must not outlive
     * it (ADVICE r8), which is why every memo lives here and is dropped by
-    * the same clear. Cached frames reference their session, so an
+    * the same clear. Staged frames reference their session, so an
     * uncleared session's state lives until [[clearDerived]] — the weak key
-    * only frees sessions that never cached a frame.
+    * only frees sessions that never staged a frame.
     */
   private final class State {
     val memo = new java.util.concurrent.ConcurrentHashMap[(String, String), Any]()
@@ -99,11 +117,16 @@ object Tables {
   val NumBuckets = 8
 
   /** How [[stage]] keeps a table built once per (session, sfDir).
-    *  - [[Cached]]: in the block store. Only for tiny tables (catalog,
-    *    registry, command blobs, centroids — KBs at any SF) that every
-    *    query would otherwise re-derive, e.g. an events scan + distinct for
-    *    a 25-row catalog. Big corpus tables are never cached: they are the
-    *    operators' real scan inputs.
+    *  - [[Local]]: collected once and held on the driver as a
+    *    `LocalRelation`. Only for tiny tables (catalog, registry, command
+    *    blobs, centroids, codebooks — KBs at bench SF) that every query
+    *    would otherwise re-derive, e.g. an events scan + distinct for a
+    *    25-row catalog. Filters and projections over it fold at
+    *    optimization time, interpreted, so a query over it compiles no
+    *    scan code and plans a `LocalTableScan`; nothing is pinned in the
+    *    block store. A build with more than [[MaxLocalRows]] rows throws,
+    *    naming the table: big corpus tables are the operators' real scan
+    *    inputs and belong in [[Parquet]].
     *  - [[Parquet]]: written to an attempt dir and read back, optionally
     *    hive-partitioned so filters on `partitionBy` columns prune
     *    directories. Corpus-scale layouts (exploded shingles, per-vector
@@ -122,9 +145,13 @@ object Tables {
     *    the parquet footer.
     */
   sealed trait Layout
-  case object Cached extends Layout
+  case object Local extends Layout
   final case class Parquet(partitionBy: Seq[String] = Nil) extends Layout
   final case class Bucketed(key: String) extends Layout
+
+  /** Row bound of a [[Local]] table: past it the rows are no longer
+    * driver-sized metadata (sf0.1's largest, `snapshot_lines`, has ~10k). */
+  val MaxLocalRows = 1 << 20
 
   /** The one staging primitive: `build` materialized once per (session,
     * sfDir, name) in `layout`; released by [[clearDerived]]. */
@@ -132,10 +159,16 @@ object Tables {
                            layout: Layout)(build: => DataFrame): DataFrame =
     memo(spark, sfDir, name) {
       layout match {
-        case Cached =>
-          val df = build.cache()
-          onClear(spark)(df.unpersist(): Unit)
-          df
+        case Local =>
+          val df = build
+          // each partition ships at most MaxLocalRows + 1 rows, so an
+          // oversized build fails here without flooding the driver
+          val rows = df.queryExecution.toRdd
+            .mapPartitions(_.take(MaxLocalRows + 1).map(_.copy())).collect()
+          if (rows.length > MaxLocalRows) throw new IllegalStateException(
+            s"Tables.stage: '$name' has more than $MaxLocalRows rows, too many " +
+              "to hold on the driver; stage it as Parquet()")
+          GraftBridge.localDataFrame(spark, df.schema, rows.toSeq)
         case Parquet(partitionCols) =>
           val path = uniqueStageDir(spark, sfDir, name)
           val w = build.write.mode("overwrite")
@@ -197,9 +230,8 @@ object Tables {
     }
   }
 
-  /** Drop this session's state: every memo goes, cached frames are
-    * unpersisted (long-lived sessions must not accumulate cached blocks —
-    * ADVICE r1), bucketed catalog entries dropped, attempt dirs deleted.
+  /** Drop this session's state: every memo (staged frames, corpus schemas)
+    * goes, bucketed catalog entries are dropped, attempt dirs deleted.
     */
   def clearDerived(spark: SparkSession): Unit =
     Option(states.remove(spark)).foreach(_.releases.forEach(_()))
@@ -223,7 +255,6 @@ object Tables {
     * and DuckDB's naive `CAST(ts AS TIMESTAMP)` stays µs-exact on both.
     */
   def events(spark: SparkSession, d: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = table(spark, d, "events")
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
@@ -341,7 +372,7 @@ object Tables {
   def catalog(spark: SparkSession, sfDir: String): DataFrame = {
     val fmt = spark.conf.get("spark.graft.catalog.format", "derived")
     val branchKey = catalogBranchKey(spark)
-    stage(spark, sfDir, s"catalog@$branchKey", Cached) {
+    stage(spark, sfDir, s"catalog@$branchKey", Local) {
       fmt match {
         case "derived" => catalogDerived(spark, sfDir)
         case "parquet" =>
@@ -379,7 +410,7 @@ object Tables {
     * DuckDB twin: [[Oracle.registryCte]].
     */
   def registry(spark: SparkSession, sfDir: String): DataFrame =
-    stage(spark, sfDir, "registry", Cached) {
+    stage(spark, sfDir, "registry", Local) {
       supplier(spark, sfDir).select(
         col("s_name").as("name"),
         concat(lit("10.148.128."), (col("s_suppkey") % 250).cast("string")).as("host"),
@@ -392,7 +423,7 @@ object Tables {
     * `identify_schema_tables` yields (/root/reference/geomesa_cassandra.py:48-52).
     */
   def schemaTables(spark: SparkSession, sfDir: String): DataFrame =
-    stage(spark, sfDir, s"schema_tables@${catalogBranchKey(spark)}", Cached) {
+    stage(spark, sfDir, s"schema_tables@${catalogBranchKey(spark)}", Local) {
       catalog(spark, sfDir)
         .select(col("sft"), lower(trim(col("value"))).as("table_name"))
         .where(col("table_name").startsWith("catalog"))
@@ -418,7 +449,7 @@ object Tables {
     * lines, as one `CmdResult`-shaped row per node (SURVEY §1 #4).
     */
   def compactionStdout(spark: SparkSession, sfDir: String): DataFrame =
-    stage(spark, sfDir, s"compaction_stdout@${catalogBranchKey(spark)}", Cached) {
+    stage(spark, sfDir, s"compaction_stdout@${catalogBranchKey(spark)}", Local) {
       compactionLines(spark, sfDir)
         .groupBy(col("node"))
         .agg(concat(lit("pending tasks: 2\n"),
@@ -431,7 +462,7 @@ object Tables {
     * reference's snapshot regex (/root/reference/node.py:153).
     */
   def snapshotLines(spark: SparkSession, sfDir: String): DataFrame =
-    stage(spark, sfDir, s"snapshot_lines@${catalogBranchKey(spark)}", Cached) {
+    stage(spark, sfDir, s"snapshot_lines@${catalogBranchKey(spark)}", Local) {
       val nodes = registry(spark, sfDir).select(col("name").as("node"))
       val tabs = schemaTables(spark, sfDir).select(col("table_name"))
       nodes.crossJoin(tabs)
@@ -448,7 +479,7 @@ object Tables {
     * `CREATE TABLE`, /root/reference/node.py:174-180).
     */
   def describeResults(spark: SparkSession, sfDir: String): DataFrame =
-    stage(spark, sfDir, s"describe_results@${catalogBranchKey(spark)}", Cached) {
+    stage(spark, sfDir, s"describe_results@${catalogBranchKey(spark)}", Local) {
       schemaTables(spark, sfDir).select(
       col("sft"), col("table_name"),
       when(h24(col("table_name")) % 7 === 0, lit(""))
@@ -464,7 +495,7 @@ object Tables {
     * /root/reference/node.py:50-53); even ones report Gossip inactive.
     */
   def infoResults(spark: SparkSession, sfDir: String): DataFrame =
-    stage(spark, sfDir, "info_results", Cached) {
+    stage(spark, sfDir, "info_results", Local) {
       supplier(spark, sfDir).select(
         col("s_name").as("node"),
         when(col("s_suppkey") % 2 === 1, lit(

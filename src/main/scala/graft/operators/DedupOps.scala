@@ -376,10 +376,11 @@ object DedupOps {
     * variant, which swaps the neighbor-min join for star-contraction joins in
     * the same loop shape). Output: every doc in some duplicate cluster,
     * labeled by the cluster's min doc_id; `is_canonical` marks the keeper
-    * the pipeline retains.
+    * the pipeline retains. One row per duplicated document — corpus scale,
+    * so staged as `Parquet`, never held on the driver.
     */
   def duplicateClusters(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.stage(spark, sfDir, "dup_clusters", Tables.Cached) {
+    Tables.stage(spark, sfDir, "dup_clusters", Tables.Parquet()) {
       val edges = jaccardOnCandidates(spark, sfDir)
         .where(col("jaccard") >= ClusterMinJaccard)
         .select(col("doc_a"), col("doc_b"))

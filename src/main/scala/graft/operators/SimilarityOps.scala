@@ -147,14 +147,14 @@ object SimilarityOps {
 
   /** Per-label centroids (the "trained" IVF partition list): component-wise
     * anchored mean ([[CentroidQuant]]), rounded to 5 dp so both engines
-    * derive identical centroids. Tiny result (labels × dims) — memoized +
-    * cached once per (session, sfDir), so the full-corpus posexplode it
+    * derive identical centroids. Tiny result (labels × dims) — staged
+    * `Local` once per (session, sfDir), so the full-corpus posexplode it
     * takes to train runs exactly once no matter how many probe queries
     * reuse it (r1 recomputed this subtree inside every IVF plan — the
     * bench's worst query).
     */
   def centroids(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.stage(spark, sfDir, "ivf_centroids", Tables.Cached) {
+    Tables.stage(spark, sfDir, "ivf_centroids", Tables.Local) {
       vecs(spark, sfDir)
         .select(col("label"), posexplode(col("embedding")).as(Seq("i", "x")))
         .groupBy(col("label"), col("i"))
@@ -166,8 +166,8 @@ object SimilarityOps {
 
   /** IVF-style ANN: probe the NProbe nearest centroids' partitions only.
     *
-    * Plan shape at scale: `centroids` is cached (trained once), the probe
-    * assignment is a tiny crossJoin against the cached centroid list, and
+    * Plan shape at scale: `centroids` is driver-held (trained once), the
+    * probe assignment is a tiny crossJoin against that centroid list, and
     * the corpus⋈probes join is a **broadcast** hash join — the corpus side
     * never shuffles, so the low cardinality of `label` cannot skew an
     * exchange (there is none); each corpus partition streams once and emits
@@ -329,7 +329,7 @@ object SimilarityOps {
     * session no matter how many queries probe it.
     */
   def kmeansCentroids(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.stage(spark, sfDir, "kmeans_centroids", Tables.Cached) {
+    Tables.stage(spark, sfDir, "kmeans_centroids", Tables.Local) {
       val v = vecsD(spark, sfDir)
       val init = v.groupBy((col("vec_id") % kmeansKFor(spark, sfDir)).as("k"))
         .agg(min_by(col("e"), md5(col("vec_id").cast("string"))).as("centroid"))
@@ -585,7 +585,7 @@ object SimilarityOps {
     * the other trained models.
     */
   def pqCodebooks(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.stage(spark, sfDir, "pq_codebooks", Tables.Cached) {
+    Tables.stage(spark, sfDir, "pq_codebooks", Tables.Local) {
       val subs = subVecs(spark, sfDir)
       val init = subs.groupBy(col("m"), (col("vec_id") % PqKs).as("k"))
         .agg(min_by(col("sub"), md5(col("vec_id").cast("string"))).as("centroid"))
@@ -1204,10 +1204,10 @@ object SimilarityOps {
     *     exact-integer [[gramMatrix]] cells (fixed-point outer products,
     *     map-side combinable; bit-identical across engines by
     *     construction), computed once per session ([[graft.Tables.stage]]
-    *     `Cached`: 2080 rows of metadata, the corpus is never re-scanned by
+    *     `Local`: 2080 rows of metadata, the corpus is never re-scanned by
     *     the iterations).
     *  2. Power iteration runs entirely on that matrix: [[PcIters]] unrolled
-    *     rounds whose MATVEC is a distributed aggregation over the cached
+    *     rounds whose MATVEC is a distributed aggregation over the staged
     *     gram table (the d²-sized part), every aggregation carried in
     *     exact integer fixed point ([[PcVecScale]]) so the iterate is
     *     bit-stable under any association at any scale; the d-row iterate
@@ -1224,12 +1224,12 @@ object SimilarityOps {
     */
   def pcaPowerProjection(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val cells = Tables.stage(spark, sfDir, "pca_gram", Tables.Cached)(gramMatrixUdaf(spark, sfDir))
+    val cells = Tables.stage(spark, sfDir, "pca_gram", Tables.Local)(gramMatrixUdaf(spark, sfDir))
     val full = cells.unionAll(cells.where(col("i") =!= col("j"))
       .select(col("j").as("i"), col("i").as("j"), col("gram")))
     // anchored kernel (see [[PcVecScale]]): vi carries v·10⁶ as an exact
     // integer between rounds; each round's MATVEC runs distributed on the
-    // cached gram table (the part that scales with d² — matvec on exact
+    // staged gram table (the part that scales with d² — matvec on exact
     // integers: decimal(29,0)·decimal(8,0) → decimal(38,0), an exact
     // order-free Sum), then the d-row iterate is COLLECTED and its
     // normalization scalars (max|u|, Σwi², the two roundings) run

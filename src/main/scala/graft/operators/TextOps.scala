@@ -961,12 +961,12 @@ object TextOps {
     }
 
   /** One-row corpus statistics the scorer needs (doc count + mean doc
-    * length) — computed once per session at index time and cached like
-    * every tiny derived fixture: at 100 TB these are index-build metadata,
+    * length) — computed once per session at index time and held on the
+    * driver like every tiny derived fixture: at 100 TB these are index-build metadata,
     * not a query-time corpus aggregation.
     */
   def indexDocStats(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.stage(spark, sfDir, "index_doc_stats", Tables.Cached) {
+    Tables.stage(spark, sfDir, "index_doc_stats", Tables.Local) {
       Tables.documents(spark, sfDir)
         .select(size(words(col("text"))).cast("long").as("dl"))
         .agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))

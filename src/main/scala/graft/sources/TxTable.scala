@@ -1275,7 +1275,8 @@ object TxTable {
           val (stats, rows) = TxStats.fromFooterWithRows(conf, target.toString)
           (Staged(name, stats), rows)
         }
-      } finally deleteRecursively(tmp)
+      } catch { case scala.util.control.NonFatal(e) => awaitTasksStopped(spark); throw e }
+      finally deleteRecursively(tmp)
     val names = staged.map(_._1)
     // eligibility checks the DATAFRAME schema, not just the footer stats
     // tag (ADVICE r11): a DateType column is INT32 in the footer — tagged
@@ -1345,7 +1346,22 @@ object TxTable {
         Files.move(p, cdcDir(root).resolve(name)): Unit
         name
       }
-    } finally deleteRecursively(tmp)
+    } catch { case scala.util.control.NonFatal(e) => awaitTasksStopped(spark); throw e }
+    finally deleteRecursively(tmp)
+  }
+
+  /** A failed job returns before its other tasks are gone: they are killed
+    * asynchronously and can still create attempt dirs under a temp dir the
+    * caller is about to delete. Wait, at most 10 s, until no task runs in
+    * this context (a task's end event follows its last write). */
+  private def awaitTasksStopped(spark: SparkSession): Unit = {
+    val sc = spark.sparkContext
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    def running: Int = {
+      org.apache.spark.sql.GraftBridge.drainListeners(sc)
+      sc.statusTracker.getExecutorInfos.map(_.numRunningTasks).sum
+    }
+    while (running > 0 && System.nanoTime() < deadline) Thread.sleep(10)
   }
 
   private def dropCdc(root: String, names: Seq[String]): Unit =

@@ -11,6 +11,21 @@ object GraftBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A driver-held frame over already-collected rows: the `LocalRelation`
+    * that `createDataFrame(rows, schema)` builds, without the external-row
+    * round trip. */
+  def localDataFrame(spark: SparkSession,
+                     schema: org.apache.spark.sql.types.StructType,
+                     rows: Seq[org.apache.spark.sql.catalyst.InternalRow]): DataFrame =
+    ofRows(spark, org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema), rows))
+
+  /** Block until the listener bus has delivered every event posted so far
+    * (`listenerBus` is private[spark]): a job-counting listener read after
+    * this has seen every job that already started. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** Column ↔ Expression conversion (`classic.ExpressionUtils` is
     * private[sql]) — lets the library apply a custom Expression that
     * carries a non-SQL-representable payload (the deletion-vector map)

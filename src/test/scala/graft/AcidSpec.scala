@@ -427,20 +427,45 @@ class AcidSpec extends SparkSpec {
     val bkt = Tables.stage(s, Sf, "spec_owner_bkt", Tables.Bucketed("id")) {
       s.range(0, 20).toDF("id")
     }
-    val cached = Tables.stage(s, Sf, "spec_owner_cached", Tables.Cached) {
+    var localBuilds = 0
+    def local = Tables.stage(s, Sf, "spec_owner_local", Tables.Local) {
+      localBuilds += 1
       s.range(0, 5).toDF("id")
     }
+    val held = local
     Tables.memo(s, Sf, "spec_owner_tx") {
       val root = Tables.uniqueStageDir(s, Sf, "spec_owner_tx")
       TxTable.append(s, root, s.range(0, 3).toDF("id"))
     }: Unit
-    assert(part.count() == 20 && bkt.count() == 20 && cached.count() == 5)
+    assert(part.count() == 20 && bkt.count() == 20 && held.count() == 5)
     assert((dirs -- before).size == 3 && tables.size == 1)
-    assert(cached.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    assert((local eq held) && localBuilds == 1)
     Tables.clearDerived(s)
     assert((dirs -- before).isEmpty, dirs -- before)
     assert(tables.isEmpty, tables)
-    assert(cached.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    // a Local table pins no blocks: clearing drops its memo, so the next
+    // use builds it again
+    assert(Tables.memoized[AnyRef](s, Sf, "spec_owner_local").isEmpty)
+    assert(local.count() == 5 && localBuilds == 2)
+    Tables.clearDerived(s)
+  }
+
+  test("stage Local: a build over MaxLocalRows throws, naming the table") {
+    val s = spark.newSession()
+    try {
+      val e = intercept[IllegalStateException] {
+        Tables.stage(s, Sf, "spec_local_oversized", Tables.Local) {
+          s.range(0, Tables.MaxLocalRows + 1L).toDF("id")
+        }
+      }
+      assert(e.getMessage.contains("'spec_local_oversized'"), e.getMessage)
+      // nothing half-built is memoized
+      assert(Tables.memoized[AnyRef](s, Sf, "spec_local_oversized").isEmpty)
+      // exactly at the bound still stages
+      assert(Tables.stage(s, Sf, "spec_local_at_bound", Tables.Local) {
+        s.range(0, Tables.MaxLocalRows.toLong).toDF("id")
+      }.count() == Tables.MaxLocalRows)
+    } finally Tables.clearDerived(s)
   }
 
   test("data skipping: commit-logged stats prune provably irrelevant files; results identical") {

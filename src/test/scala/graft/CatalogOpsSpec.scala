@@ -45,6 +45,59 @@ class CatalogOpsSpec extends SparkSpec {
     }
   }
 
+  test("the derived fixture tables plan over a LocalRelation, never an InMemoryRelation") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val fixtures = Seq(Tables.catalog _, Tables.registry _, Tables.schemaTables _,
+      Tables.compactionStdout _, Tables.snapshotLines _, Tables.describeResults _,
+      Tables.infoResults _)
+    fixtures.foreach { t =>
+      val df = t(spark, Sf)
+      val plan = df.where(col(df.columns.head).isNotNull).queryExecution.optimizedPlan
+      assert(plan.collect { case r: LocalRelation => r }.nonEmpty, plan)
+      assert(plan.collect { case r: InMemoryRelation => r }.isEmpty, plan)
+    }
+  }
+
+  /** Spark jobs `body` starts on this thread. A fresh job group tags them,
+    * so jobs of other threads never count; the listener bus is drained
+    * before the count is read. */
+  private def jobsStarted(s: org.apache.spark.sql.SparkSession)(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = s.sparkContext
+    val group = s"jobs_started_${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(counter)
+    sc.setJobGroup(group, group)
+    try body
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.sql.GraftBridge.drainListeners(sc)
+      sc.removeSparkListener(counter)
+    }
+    n.get
+  }
+
+  test("Tables.table resolves a corpus schema once per session; clearDerived resolves it again") {
+    val s = spark.newSession()
+    try {
+      val direct = s.read.parquet(s"$Sf/orders.parquet")
+      assert(jobsStarted(s)(Tables.table(s, Sf, "orders"): Unit) > 0) // footer inference
+      assert(Tables.memoized[AnyRef](s, Sf, "schema:orders").isDefined)
+      var again: org.apache.spark.sql.DataFrame = null
+      assert(jobsStarted(s) { again = Tables.table(s, Sf, "orders") } == 0)
+      assert(again.schema == direct.schema && again.count() == direct.count())
+      Tables.clearDerived(s)
+      assert(Tables.memoized[AnyRef](s, Sf, "schema:orders").isEmpty)
+      assert(jobsStarted(s)(Tables.table(s, Sf, "orders"): Unit) > 0)
+    } finally Tables.clearDerived(s)
+  }
+
   test("catalogAfterDelete removes exactly the deleted sft") {
     val before = Tables.catalog(spark, Sf).count()
     val after = CatalogOps.catalogAfterDelete(spark, Sf, "error")

@@ -3,7 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Helpers shared by the harness mains: the JSON string escaper (Bench
-  * detail + Verify's oracle_sql.json) and the dev mains' conf overrides.
+  * detail + Verify's oracle_sql.json), the dev mains' conf overrides and
+  * QTime's query-name check.
   */
 class HarnessSpec extends AnyFunSuite {
 
@@ -14,6 +15,16 @@ class HarnessSpec extends AnyFunSuite {
     val back = new com.fasterxml.jackson.databind.ObjectMapper()
       .readValue(lit, classOf[String])
     assert(back == raw)
+  }
+
+  test("queryNames: an unknown query name fails up front, naming it") {
+    assert(QTime.queryNames(" a1_cluster_up,,j1_zip_join ") ==
+      Seq("a1_cluster_up", "j1_zip_join"))
+    val e = intercept[IllegalArgumentException](
+      QTime.queryNames("a1_cluster_up,c2_catalog_tables"))
+    assert(e.getMessage.contains("c2_catalog_tables") &&
+      !e.getMessage.contains("a1_cluster_up"), e.getMessage)
+    intercept[IllegalArgumentException](QTime.queryNames(" , ")): Unit
   }
 
   test("confOverrides: k=v lists parse; a malformed entry names the variable and the entry") {

@@ -141,9 +141,8 @@ class SimMediaSpec extends SparkSpec {
   test("pqTopK: ADC ranking recovers most of the exact top-k; single shuffle") {
     val pq = SimilarityOps.pqTopK(spark, Sf)
     // corpus side is the staged byte-code parquet scan joined to a
-    // broadcast LUT — never shuffled for scoring (the line-count shuffle
-    // check would miscount here: the plan string embeds the cached
-    // codebook-training lineage under InMemoryRelation)
+    // broadcast LUT — never shuffled for scoring (the LUT comes from the
+    // driver-held codebooks, so the plan carries no training lineage)
     val p = pq.queryExecution.executedPlan.toString
     assert(p.contains("BroadcastNestedLoopJoin"), "LUT should broadcast into the codes scan")
     assert(p.contains("pq_codes"), "scoring should read the staged codes table")
