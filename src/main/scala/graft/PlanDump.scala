@@ -1,27 +1,20 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool: dump `explain("formatted")` for the headline queries to
   * PLANS.md — the plan-shape evidence (pushed filters, broadcast joins,
   * zero-exchange bucketed joins, partition-pruned ANN/geo scans) reviewed
-  * after every operator lands. Run:
+  * after every operator lands, on the [[GraftSession]] confs with
+  * `SPARK_GRAFT_CPUS` cores. Run:
   * `sbt "runMain graft.PlanDump /root/testdata/sf0.01 PLANS.md"`.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(GraftSession.envCores)
 
     // materialize staged layouts so plans show their real (parquet-scan) form
     operators.SimilarityOps.kmeansLayout(spark, sfDir).count()

@@ -3,39 +3,44 @@ package graft
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.ExplainMode
+import java.nio.file.{Files, Paths}
 
 /** Dev tool: low-noise isolated timing for a few queries — N repetitions
-  * inside ONE JVM (no per-run session/JIT variance), same session confs as
-  * [[Bench]] (master/shuffle.partitions from `SPARK_GRAFT_CPUS`), optional
-  * conf overrides via `SPARK_GRAFT_QTIME_CONF=k=v,k=v` for mechanism
-  * diagnosis (e.g. disabling AQE coalescing to attribute a regression).
+  * inside ONE JVM (no per-run session/JIT variance), on the [[GraftSession]]
+  * confs with `SPARK_GRAFT_CPUS` cores, plus optional conf overrides via
+  * `SPARK_GRAFT_QTIME_CONF=k=v,k=v` set on the built session for mechanism
+  * diagnosis (e.g. disabling AQE coalescing to attribute a regression, or
+  * `spark.sql.autoBroadcastJoinThreshold=-1` to see the join strategy a
+  * query falls back to once a side outgrows the threshold).
   * Reports per-query min, the Spark jobs and codegen compilations of that
   * fastest rep, and all samples. NOT the driver surface — the
   * bench contract lives in [[Bench]]; this exists so an A/B adjudication
   * doesn't ride on two samples from separate contended JVMs.
-  * Run: `sbt "runMain graft.QTime <sfDir> <reps> <q1,q2,...>"`.
+  * With `--plans <dir>` it also writes each named query's
+  * `explain("formatted")` to `<dir>/<query>.txt` once the timing is done,
+  * so the plan shows the staged layouts the timed runs read (the
+  * per-change plan evidence under `plans/r<N>/`).
+  * Run: `sbt "runMain graft.QTime <sfDir> <reps> <q1,q2,...> [--plans <dir>]"`.
   */
 object QTime {
+  private val Usage = "usage: QTime <sfDir> <reps> <q1,q2,...> [--plans <dir>]"
+
   def main(args: Array[String]): Unit = {
-    require(args.length >= 3, "usage: QTime <sfDir> <reps> <q1,q2,...>")
+    require(args.length >= 3, Usage)
     val sfDir = args(0)
     val reps = args(1).toInt
+    require(reps >= 1, s"reps must be at least 1, got $reps")
     val names = queryNames(args(2))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "32m")
-      .config("spark.ui.enabled", "false")
-    confOverrides("SPARK_GRAFT_QTIME_CONF")
-      .foreach { case (k, v) => builder.config(k, v): Unit }
-    val spark = builder.getOrCreate()
+    val planDir = args.drop(3) match {
+      case Array() => None
+      case Array("--plans", dir) => Some(dir)
+      case _ => throw new IllegalArgumentException(Usage)
+    }
+    val overrides = confOverrides("SPARK_GRAFT_QTIME_CONF")
+    val spark = GraftSession(GraftSession.envCores)
+    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
     val sc = spark.sparkContext
-    sc.setLogLevel("ERROR")
     val jobs = new java.util.concurrent.atomic.AtomicLong()
     sc.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
@@ -62,6 +67,7 @@ object QTime {
       println(f"[qtime] $n min=$best%.3f jobs=$bestJobs compiles=$bestCompiles samples=" +
         ss.map(s => f"${s._1}%.3f").mkString(","))
     }
+    planDir.foreach(writePlans(spark, sfDir, names, _))
     Tables.clearDerived(spark)
     spark.stop()
   }
@@ -77,8 +83,20 @@ object QTime {
     names
   }
 
-  /** The `k=v,k=v` session conf overrides in env var `envVar` (the dev
-    * mains' `SPARK_GRAFT_*_CONF`); none when unset. An entry without `=`
+  /** Write each query's `explain("formatted")` to `<dir>/<name>.txt`,
+    * creating `dir` when missing. */
+  private[graft] def writePlans(spark: SparkSession, sfDir: String,
+                                names: Seq[String], dir: String): Unit = {
+    val out = Files.createDirectories(Paths.get(dir))
+    names.foreach { n =>
+      val plan = SparkEntry.queries(n)(spark, sfDir).queryExecution
+        .explainString(ExplainMode.fromString("formatted")).trim
+      Files.writeString(out.resolve(s"$n.txt"), plan + "\n")
+    }
+  }
+
+  /** The `k=v,k=v` session conf overrides in env var `envVar`
+    * (`SPARK_GRAFT_QTIME_CONF`); none when unset. An entry without `=`
     * or with an empty key fails naming the variable and the entry.
     */
   private[graft] def confOverrides(envVar: String,

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The query registry and its DuckDB oracles — see SURVEY.md §7 at the repo root.
   * Queries are contributed by per-module [[QueryPack]]s; keys are
   * `"<survey-op-id>_<name>"`.
   */

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{ExecutionException, Executors, TimeUnit, TimeoutException}
 import scala.util.control.NonFatal
@@ -25,17 +24,8 @@ object Verify {
     // misspelled query while the rest reads as success (ADVICE r9 class)
     val unknown = only -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown query name(s): ${unknown.toSeq.sorted}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val timeoutSec = sys.env.getOrElse("SPARK_GRAFT_VERIFY_TIMEOUT_SEC", "240").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Logs.silenceBenignWarnings()
+    val spark = GraftSession(GraftSession.envCores)
     new java.io.File(outDir).mkdirs()
 
     var pool = Executors.newSingleThreadExecutor()

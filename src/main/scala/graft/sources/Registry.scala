@@ -27,9 +27,17 @@ object Registry {
                        stderr: String, exit_status: Int)
 
   /** Read a remotes.json registry: `{"n1": {"host": ...}, "n2": ...}`. */
-  def readRemotesJson(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read.option("multiLine", true).json(path)
-    // one column per node name, each a struct — stack to rows
+  def readRemotesJson(spark: SparkSession, path: String): DataFrame =
+    nodeRows(spark.read.option("multiLine", true).json(path))
+
+  /** The same rows from the registry's JSON text. */
+  def remotesFromJson(spark: SparkSession, json: String): DataFrame = {
+    import spark.implicits._
+    nodeRows(spark.read.json(Seq(json).toDS()))
+  }
+
+  /** One column per node name, each a struct — stacked to rows. */
+  private def nodeRows(raw: DataFrame): DataFrame = {
     val names = raw.schema.fieldNames.sorted
     val stacked = names.map { n =>
       struct(lit(n).as("name"),

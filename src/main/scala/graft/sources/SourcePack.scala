@@ -9,8 +9,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * cluster.py:147-148) — verified against the DuckDB oracle, not just unit
   * tests (the one §2 territory the r1 driver couldn't see).
   *
-  *  - `s1_registry_rows`: [[Registry.readRemotesJson]] over a committed
-  *    fixture remotes.json; oracle = DuckDB read_json_auto + manual unnest.
+  *  - `s1_registry_rows`: [[Registry.remotesFromJson]] over a committed
+  *    fixture remotes.json (a classpath resource); oracle = DuckDB JSON
+  *    functions over the fixture text.
   *  - `c1_run_on_all`: [[Registry.runOnAll]] fan-out over the fixture
   *    registry with the pure port-22 executor — the non-22 node's thrown
   *    error surfaces as a C3 error-value row.
@@ -21,15 +22,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SourcePack extends QueryPack {
 
-  val FixturePath = "/root/repo/fixtures/remotes.json"
-  private val FixtureNames =
-    Seq("cass-edge-9", "cass-node-1", "cass-node-2", "cass-node-3")
+  /** The committed registry fixture's JSON text, a classpath resource, so
+    * the keys below run from any checkout or jar. */
+  val FixtureJson: String = {
+    val in = getClass.getResourceAsStream("/graft/sources/remotes.json")
+    require(in != null, "classpath resource graft/sources/remotes.json is missing")
+    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+    finally in.close()
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s1_registry_rows" -> ((s, _) => Registry.readRemotesJson(s, FixturePath)),
+    "s1_registry_rows" -> ((s, _) => Registry.remotesFromJson(s, FixtureJson)),
     "c1_run_on_all" -> ((s, _) => {
       import s.implicits._
-      val nodes = Registry.readRemotesJson(s, FixturePath).as[Registry.NodeInfo]
+      val nodes = Registry.remotesFromJson(s, FixtureJson).as[Registry.NodeInfo]
       Registry.runOnAll(nodes, "nodetool info")(Registry.PureExec.sshFixture).toDF()
     }),
     // through the DataSourceV2 [[CmdSource]] — the production shape: command
@@ -46,17 +52,17 @@ object SourcePack extends QueryPack {
     "xs_avro_roundtrip" -> ((s, d) => Formats.avroRoundtrip(s, d)),
   )
 
-  /** Fixture registry rows via DuckDB's JSON reader: one struct column per
-    * node name, unnested by name (names are fixed by the committed fixture).
-    */
+  /** Fixture registry rows via DuckDB's JSON functions over the fixture's
+    * own text as a literal: one row per top-level key. DuckDB parses the
+    * raw text, never rows the Spark side produced. */
   private val fixtureRegistryCte: String = {
-    val rows = FixtureNames.map { n =>
-      s"""  SELECT '$n' AS name, "$n".host AS host, CAST("$n".port AS INTEGER) AS port,
-         |         "$n"."user" AS "user", "$n".password AS password FROM j""".stripMargin
-    }.mkString("\n  UNION ALL\n")
-    s"""j AS (SELECT * FROM read_json_auto('$FixturePath')),
+    val text = FixtureJson.replace("'", "''")
+    s"""j AS (SELECT CAST('$text' AS JSON) AS doc),
        |registry_rows AS (
-       |$rows
+       |  SELECT name, doc->name->>'host' AS host,
+       |         CAST(doc->name->>'port' AS INTEGER) AS port,
+       |         doc->name->>'user' AS "user", doc->name->>'password' AS password
+       |  FROM (SELECT unnest(json_keys(doc)) AS name, doc FROM j)
        |)""".stripMargin
   }
 

@@ -1465,9 +1465,9 @@ class AcidSpec extends SparkSpec {
     val root = freshRoot()
     TxTable.append(spark, root, frame(1 to 30, "base"))
     val p = java.nio.file.Paths.get(root)
-    spark.conf.set("spark.sql.catalog.graft_sqlm", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.graft_sqlm.root", p.getParent.toString)
-    val t = s"graft_sqlm.`${p.getFileName}`"
+    spark.conf.set("spark.sql.catalog.graft_mi", "graft.sources.TxCatalog")
+    spark.conf.set("spark.sql.catalog.graft_mi.root", p.getParent.toString)
+    val t = s"graft_mi.`${p.getFileName}`"
     Seq((1L, "upd", 1000L), (2L, null.asInstanceOf[String], 2000L),
         (101L, "ins", 5L))
       .toDF("id", "tag", "value").createOrReplaceTempView("merge_src")

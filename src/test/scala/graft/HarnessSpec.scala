@@ -2,11 +2,32 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Helpers shared by the harness mains: the JSON string escaper (Bench
-  * detail + Verify's oracle_sql.json), the dev mains' conf overrides and
-  * QTime's query-name check.
+/** Helpers shared by the harness mains: the one session factory, the JSON
+  * string escaper (Bench detail + Verify's oracle_sql.json), QTime's conf
+  * overrides, query-name check and plan dump.
   */
 class HarnessSpec extends AnyFunSuite {
+
+  test("GraftSession: the suite's session carries Bench's confs") {
+    val spark = SparkSpec.session
+    val conf = spark.sessionState.conf
+    assert(conf.autoBroadcastJoinThreshold == 32L * 1024 * 1024)
+    assert(conf.adaptiveExecutionEnabled && conf.coalesceShufflePartitionsEnabled)
+    assert(spark.conf.get("spark.sql.extensions") == "graft.plans.GraftExtensions")
+    assert(conf.numShufflePartitions == 4 && conf.sessionLocalTimeZone == "UTC")
+    assert(spark.sparkContext.master == "local[4]")
+    assert(!spark.sparkContext.getConf.getBoolean("spark.ui.enabled", true))
+  }
+
+  test("writePlans: one formatted plan file per named query") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_plans").resolve("sub")
+    QTime.writePlans(SparkSpec.session, SparkSpec.Sf,
+      Seq("a1_cluster_up", "j1_zip_join"), dir.toString)
+    Seq("a1_cluster_up", "j1_zip_join").foreach { n =>
+      val txt = java.nio.file.Files.readString(dir.resolve(s"$n.txt"))
+      assert(txt.startsWith("== Physical Plan ==") && txt.endsWith("\n"), txt)
+    }
+  }
 
   test("jstr: quote, backslash, tab, CR and U+0001 parse back unchanged") {
     val raw = "a\"b\\c\td\re\u0001f\ng"

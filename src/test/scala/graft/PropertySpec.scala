@@ -428,6 +428,21 @@ class PropertySpec extends SparkSpec {
       assert(graft.SparkEntry.queries.contains(w), s"stale whitelist entry $w"))
   }
 
+  /** The lint over the whole registry: every query is built at sf0.001
+    * (analysis only; nothing runs beyond what its constructor stages) and
+    * must pass [[graft.DeterminismLint.check]]. A constructor that throws
+    * fails the test as well, naming the query. */
+  test("DeterminismLint: every registered query builds and passes the lint") {
+    val failures = graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      scala.util.Try(graft.DeterminismLint.check(name, fn(spark, Sf))) match {
+        case scala.util.Success(viol) =>
+          if (viol.isEmpty) None else Some(s"$name: ${viol.mkString(" | ")}")
+        case scala.util.Failure(e) => Some(s"$name: constructor threw $e")
+      }
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
   test("h24Slice: slice 0 equals h24, slices are the md5 bytes, domain-bounded") {
     val rnd = new scala.util.Random(42)
     for (_ <- 1 to 200) {

@@ -66,7 +66,7 @@ class SourcesSpec extends SparkSpec {
 
   test("S1+C1: committed fixture registry fans out; non-22 port surfaces as error row") {
     import spark.implicits._
-    val nodes = Registry.readRemotesJson(spark, graft.sources.SourcePack.FixturePath)
+    val nodes = Registry.remotesFromJson(spark, graft.sources.SourcePack.FixtureJson)
       .as[NodeInfo]
     val rows = Registry.runOnAll(nodes, "nodetool info")(Registry.PureExec.sshFixture)
       .collect().map(r => r.node -> r).toMap
@@ -218,13 +218,26 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("CmdSource reads the remotes.json fixture registry too") {
+    val f = Files.createTempDirectory("graft_reg").resolve("remotes.json")
+    Files.writeString(f, sources.SourcePack.FixtureJson)
     val df = spark.read.format("graft-cmd")
-      .option("registry", sources.SourcePack.FixturePath)
+      .option("registry", f.toString)
       .option("command", "nodetool info").option("exec", "fixture")
       .load()
     val rows = df.collect()
     assert(rows.length == 4)
     assert(rows.count(_.getAs[Int]("exit_status") == 255) == 1) // non-22 port refused
+  }
+
+  test("oracles hold no absolute path into the source tree; s1 reads the fixture's 4 nodes") {
+    val root = new java.io.File(".").getCanonicalPath
+    val withPath = SparkEntry.oracleSql.collect {
+      case (k, sql) if sql.contains(root) => k
+    }
+    assert(withPath.isEmpty, s"oracles naming a source-tree path: $withPath")
+    val names = SparkEntry.queries("s1_registry_rows")(spark, Sf)
+      .collect().map(_.getAs[String]("name")).sorted.toSeq
+    assert(names == Seq("cass-edge-9", "cass-node-1", "cass-node-2", "cass-node-3"))
   }
 
   test("catalog source switch: parquet branch reads a snapshot, connector branch dispatches") {

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for ScalaTest suites (sf0.001 corpus). */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  val Sf: String = "/root/testdata/sf0.001"
+  val Sf: String = SparkSpec.Sf
 
   lazy val spark: SparkSession = SparkSpec.session
 
@@ -14,16 +14,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  val Sf: String = "/root/testdata/sf0.001"
+
+  /** The mains' session at a fixed 4 cores, whatever the host has. */
+  lazy val session: SparkSession = GraftSession(4)
 }

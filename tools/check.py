@@ -13,13 +13,14 @@ import duckdb
 sys.path.insert(0, str(Path(__file__).parent))
 from check_oracles import canon_type  # driver-strict arrow-type compare
 
+ROOT = Path(__file__).resolve().parents[1]  # the checkout this script is in
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
 def run_verify(sfdir, outdir, names=()):
     cmd = ["sbt", "-batch",
            " ".join(["runMain graft.Verify", sfdir, outdir, *names])]
-    r = subprocess.run(cmd, cwd="/root/repo", capture_output=True, text=True)
+    r = subprocess.run(cmd, cwd=ROOT, capture_output=True, text=True)
     sys.stdout.write("\n".join(l for l in r.stdout.splitlines()
                                if "error" in l.lower() or "[verify]" in l) + "\n")
     if r.returncode != 0:
@@ -44,7 +45,8 @@ def canon(rows, cols):
 def main():
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     sfdir = args[0] if len(args) > 0 else "/root/testdata/sf0.01"
-    outdir = args[1] if len(args) > 1 else "/tmp/verify_out"
+    # absolute, since sbt runs Verify from the checkout root, not from here
+    outdir = str(Path(args[1] if len(args) > 1 else "/tmp/verify_out").resolve())
     only = set(args[2:])
     if "--skip-verify" not in sys.argv:
         run_verify(sfdir, outdir, sorted(only))

@@ -11,8 +11,11 @@ Usage: python3 tools/detlog_check.py
 import struct
 import subprocess
 import sys
+from pathlib import Path
 
 import duckdb
+
+ROOT = Path(__file__).resolve().parents[1]  # the checkout this script is in
 
 
 def bits(x):
@@ -23,7 +26,7 @@ def main():
     if sys.stdin.isatty():
         out = subprocess.run(
             ["sbt", "-batch", "runMain graft.DetLogDump"],
-            capture_output=True, text=True, cwd="/root/repo").stdout
+            capture_output=True, text=True, cwd=ROOT).stdout
     else:
         out = sys.stdin.read()
     # strip sbt's "[info] " prefixes when present
