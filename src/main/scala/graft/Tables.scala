@@ -83,12 +83,15 @@ object Tables {
                                  name: String): Option[A] =
     Option(state(spark).memo.get((sfDir, name))).map(_.asInstanceOf[A])
 
+  /** The directory every [[stageDir]] lies under; fixed for the JVM. */
+  private[graft] def stageBase: String =
+    s"${System.getProperty("java.io.tmpdir")}/graft_stage"
+
   /** Session staging dir for corpus-scale derived tables, keyed by sf dir so
     * concurrent runs at different SFs never collide.
     */
   private[graft] def stageDir(sfDir: String, name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_stage/" +
-      s"${Integer.toHexString(sfDir.hashCode)}/$name"
+    s"$stageBase/${Integer.toHexString(sfDir.hashCode)}/$name"
 
   private val attemptSeq = new java.util.concurrent.atomic.AtomicLong()
 

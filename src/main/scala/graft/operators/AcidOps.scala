@@ -4,6 +4,7 @@ import graft.Tables
 import graft.sources.TxTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** M-family mutations with a REAL write path (X-M; closes the "ACID-backed
   * MERGE/TTL" gap the read-side analogs left): a deterministic mutation
@@ -50,6 +51,28 @@ object AcidOps {
       build(root)
       root
     }
+
+  /** The qualified SQL name of a fixture TxTable. Every fixture root lies
+    * under [[Tables.stageBase]], so one catalog rooted there addresses them
+    * all by namespace path: `graft_stage.<sf hash>.<name>.<attempt>`. Its
+    * root never varies, which matters because [[graft.sources.TxCatalog]]
+    * reads its root once, when a session first uses the catalog: a catalog
+    * re-pointed at each build's parent dir keeps its first root, and a
+    * second sf dir's fixture is then not found. */
+  private[graft] def sqlName(spark: SparkSession, root: String): String =
+    (StageCatalog +: stagePath(spark, root).map(p => s"`$p`")).mkString(".")
+
+  private val StageCatalog = "graft_stage"
+
+  /** `root`'s identifier parts in the [[StageCatalog]], registering the
+    * catalog in this session. */
+  private def stagePath(spark: SparkSession, root: String): Seq[String] = {
+    spark.conf.set(s"spark.sql.catalog.$StageCatalog", "graft.sources.TxCatalog")
+    spark.conf.set(s"spark.sql.catalog.$StageCatalog.root", Tables.stageBase)
+    val base = java.nio.file.Paths.get(Tables.stageBase)
+    base.relativize(java.nio.file.Paths.get(root)).iterator().asScala
+      .map(_.toString).toSeq
+  }
 
   /** Wall-clock per commit step of this (session, sfDir)'s
     * [[ordersTxTable]] build — read by Bench so `stage_detail` attributes
@@ -177,10 +200,7 @@ object AcidOps {
       TxTable.append(spark, root,
         orders.where(col("o_orderkey") % 2 === 0)
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")))
-      val p = java.nio.file.Paths.get(root)
-      spark.conf.set("spark.sql.catalog.graft_evo", "graft.sources.TxCatalog")
-      spark.conf.set("spark.sql.catalog.graft_evo.root", p.getParent.toString)
-      spark.sql(s"ALTER TABLE graft_evo.`${p.getFileName}` " +
+      spark.sql(s"ALTER TABLE ${sqlName(spark, root)} " +
         "ADD COLUMNS (o_orderpriority STRING)"): Unit
       TxTable.append(spark, root,
         orders.where(col("o_orderkey") % 2 === 1)
@@ -340,10 +360,7 @@ object AcidOps {
     * commit) — built once per session. */
   private[graft] def sqlDmlTable(spark: SparkSession, sfDir: String): String =
     txTable(spark, sfDir, "sqldml") { root =>
-      val p = java.nio.file.Paths.get(root)
-      spark.conf.set("spark.sql.catalog.graft_sql", "graft.sources.TxCatalog")
-      spark.conf.set("spark.sql.catalog.graft_sql.root", p.getParent.toString)
-      val t = s"graft_sql.`${p.getFileName}`"
+      val t = sqlName(spark, root)
       // the WHOLE lifecycle is SQL (r14: CREATE TABLE became possible —
       // v0 is a `create` commit recording the schema): create, seed via
       // INSERT INTO … SELECT, mutate. SQL DELETE routes through
@@ -367,8 +384,7 @@ object AcidOps {
     * log hash-mismatches.
     */
   def sqlDmlState(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = sqlDmlTable(spark, sfDir)
-    val t = s"graft_sql.`${java.nio.file.Paths.get(root).getFileName}`"
+    val t = sqlName(spark, sqlDmlTable(spark, sfDir))
     spark.sql(
       s"""SELECT o_orderkey % 7 AS bucket, count(*) AS n_orders,
          |  sum(o_orderkey) AS sum_keys,
@@ -391,10 +407,7 @@ object AcidOps {
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"))
       TxTable.append(spark, root, orders)
-      val p = java.nio.file.Paths.get(root)
-      spark.conf.set("spark.sql.catalog.graft_sqlm", "graft.sources.TxCatalog")
-      spark.conf.set("spark.sql.catalog.graft_sqlm.root", p.getParent.toString)
-      val t = s"graft_sqlm.`${p.getFileName}`"
+      val t = sqlName(spark, root)
       orders.where(col("o_orderkey") % 10 === 3)
         .withColumn("o_totalprice", col("o_totalprice") + lit(PriceCorrection))
         .unionByName(orders.where(col("o_orderkey") % 97 === 0)
@@ -416,8 +429,7 @@ object AcidOps {
     * `orders`, so a SQL mutation that half-applies, fans out a duplicate
     * match, or drops a set-to-value hash-mismatches. */
   def sqlMergeState(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = sqlMergeTable(spark, sfDir)
-    val t = s"graft_sqlm.`${java.nio.file.Paths.get(root).getFileName}`"
+    val t = sqlName(spark, sqlMergeTable(spark, sfDir))
     spark.sql(
       s"""SELECT o_orderstatus, count(*) AS n_orders,
          |  sum(o_orderkey) AS sum_keys,
@@ -448,10 +460,7 @@ object AcidOps {
       val orders = Tables.orders(spark, sfDir)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       TxTable.append(spark, root, orders)
-      val p = java.nio.file.Paths.get(root)
-      spark.conf.set("spark.sql.catalog.graft_mfull", "graft.sources.TxCatalog")
-      spark.conf.set("spark.sql.catalog.graft_mfull.root", p.getParent.toString)
-      val t = s"graft_mfull.`${p.getFileName}`"
+      val t = sqlName(spark, root)
       orders.where(col("o_orderkey") % 3 === 0)
         .select(col("o_orderkey"), col("o_totalprice"))
         .unionByName(orders.where(col("o_orderkey") % 89 === 0)
@@ -487,8 +496,7 @@ object AcidOps {
     * first-match-wins order, a mis-routed insert, an NMBS clause that
     * touches matched rows, or a half-applied delete all hash-mismatch. */
   def sqlMergeFullState(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = sqlMergeFullTable(spark, sfDir)
-    val t = s"graft_mfull.`${java.nio.file.Paths.get(root).getFileName}`"
+    val t = sqlName(spark, sqlMergeFullTable(spark, sfDir))
     spark.sql(
       s"""SELECT o_orderstatus, count(*) AS n_orders,
          |  sum(o_orderkey) AS sum_keys,
@@ -505,10 +513,7 @@ object AcidOps {
       val orders = Tables.orders(spark, sfDir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
       TxTable.append(spark, root, orders.where(col("o_orderkey") % 2 === 0))
-      val p = java.nio.file.Paths.get(root)
-      spark.conf.set("spark.sql.catalog.graft_sqlo", "graft.sources.TxCatalog")
-      spark.conf.set("spark.sql.catalog.graft_sqlo.root", p.getParent.toString)
-      val t = s"graft_sqlo.`${p.getFileName}`"
+      val t = sqlName(spark, root)
       orders.where(col("o_orderkey") % 4 === 1)
         .withColumn("o_totalprice", col("o_totalprice") + lit(10.0))
         .createOrReplaceTempView("graft_sql_overwrite_source")
@@ -521,8 +526,7 @@ object AcidOps {
     * `orders`, so an overwrite that leaks old rows, loses new ones, or
     * breaks time travel hash-mismatches. */
   def sqlOverwriteState(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = sqlOverwriteTable(spark, sfDir)
-    val t = s"graft_sqlo.`${java.nio.file.Paths.get(root).getFileName}`"
+    val t = sqlName(spark, sqlOverwriteTable(spark, sfDir))
     def agg(side: String, from: String) =
       s"""SELECT '$side' AS side, count(*) AS n_orders,
          |  sum(o_orderkey) AS sum_keys,
@@ -544,10 +548,8 @@ object AcidOps {
       TxTable.append(spark, root, orders.where(col("o_orderkey") % 2 === 0))
       TxTable.append(spark, root, orders.where(col("o_orderkey") % 2 === 1))
       TxTable.delete(spark, root, col("o_orderkey") % 5 === 0): Unit
-      val p = java.nio.file.Paths.get(root)
-      spark.conf.set("spark.sql.catalog.graft_rst", "graft.sources.TxCatalog")
-      spark.conf.set("spark.sql.catalog.graft_rst.root", p.getParent.toString)
-      spark.sql(s"CALL graft_rst.restore('${p.getFileName}', 1)"): Unit
+      spark.sql(s"CALL $StageCatalog.restore(" +
+        s"'${stagePath(spark, root).mkString(".")}', 1)"): Unit
     }
 
   /** Both sides of the restore in one result: the restored FINAL state
@@ -559,7 +561,7 @@ object AcidOps {
   def restoreState(spark: SparkSession, sfDir: String): DataFrame = {
     val root = restoreTable(spark, sfDir)
     val restoredV = TxTable.commits(root).last.version
-    val t = s"graft_rst.`${java.nio.file.Paths.get(root).getFileName}`"
+    val t = sqlName(spark, root)
     def agg(side: String, from: String) =
       s"""SELECT '$side' AS side, count(*) AS n_orders,
          |  sum(o_orderkey) AS sum_keys,

@@ -736,8 +736,8 @@ object TxTable {
         s"tx table at $root already exists (version ${pre.version})")
     val nullable = org.apache.spark.sql.types.StructType(
       schema.fields.map(_.copy(nullable = true)))
-    if (!tryCommit(spark, root, 0L, "create", Map.empty, Nil, Nil,
-        schemaJson = Some(nullable.json)))
+    if (!tryCommit(spark, root, 0L,
+        Publish("create", Map.empty, schemaJson = Some(nullable.json))))
       throw new IllegalStateException(
         s"tx table at $root already exists (lost the create race)")
     0L
@@ -754,31 +754,24 @@ object TxTable {
     * the change feed's row-accounting proof verifies as changeless (0 = 0).
     */
   def evolveSchema(spark: SparkSession, root: String,
-                   widened: org.apache.spark.sql.types.StructType): Long = {
-    var attempt = 0
-    while (attempt < MaxRetries) {
-      val base = snapshot(spark, root, None)
+                   widened: org.apache.spark.sql.types.StructType): Long =
+    commitLoop(spark, root, "evolveSchema") { (base, _) =>
       if (base.version < 0)
         throw new IllegalArgumentException(s"no tx table at $root")
-      assertWritable(root, base)
-      val claimed = evolvedSchema(spark, root, base, widened)
-      val v = base.version + 1
-      if (tryCommit(spark, root, v, "schema_evolve", Map.empty, Nil, Nil,
-          schemaJson = Some(claimed), dataChange = false)) return v
-      attempt += 1
+      Right(Publish("schema_evolve", Map.empty,
+        schemaJson = Some(evolvedSchema(spark, root, base, widened)),
+        dataChange = false))
     }
-    throw new IllegalStateException(
-      s"evolveSchema lost $MaxRetries commit races at $root")
-  }
 
   /** ATOMIC CTAS staging (r15, VERDICT r14 #5) — the write half of a
     * staged create: data files land under a root that is NOT yet a table
     * (`_log/` does not exist until [[commitCtas]] publishes), so a racing
     * reader sees "no such table" the whole time. Returns the staged adds
-    * plus the footer-counted row total for the commit's metrics. */
+    * plus the footer-counted row total for the commit's metrics. The
+    * ledger is unused: [[abortCtas]] unstages by the returned adds. */
   private[sources] def stageCtas(spark: SparkSession, root: String,
                                  df: DataFrame): (Seq[Staged], Long) =
-    writeDataWithRows(spark, root, df)
+    writeDataWithRows(spark, root, new Ledger, df)
 
   /** The publish half of atomic CTAS: ONE v0 `create` commit carrying the
     * schema AND the staged adds — a reader sees no table until the log
@@ -790,9 +783,8 @@ object TxTable {
                                   adds: Seq[Staged], rows: Long): Long = {
     val nullable = org.apache.spark.sql.types.StructType(
       schema.fields.map(_.copy(nullable = true)))
-    if (!tryCommit(spark, root, 0L, "create",
-        Map("rows_written" -> rows), adds, Nil,
-        schemaJson = Some(nullable.json))) {
+    if (!tryCommit(spark, root, 0L, Publish("create",
+        Map("rows_written" -> rows), adds, schemaJson = Some(nullable.json)))) {
       abortCtas(root, adds)
       throw new IllegalStateException(
         s"tx table at $root already exists (lost the create race)")
@@ -1245,22 +1237,24 @@ object TxTable {
     * (double equality probes don't bloom — conservative). This is the
     * write-amplification every bloom-indexed table format pays once per
     * file, amortized against every future point probe.
+    *
+    * Each file is registered in `ledger` as it lands under `data/`.
     */
-  private def writeData(spark: SparkSession, root: String, df: DataFrame,
-                        bloomCols: Seq[String] = Nil): Seq[Staged] =
-    writeDataWithRows(spark, root, df, bloomCols)._1
+  private def writeData(spark: SparkSession, root: String, ledger: Ledger,
+                        df: DataFrame, bloomCols: Seq[String] = Nil): Seq[Staged] =
+    writeDataWithRows(spark, root, ledger, df, bloomCols)._1
 
   /** [[writeData]] plus the footer-counted total row count — for callers
     * that need the count for commit metrics (atomic CTAS) without paying
     * a second footer pass over files this staging JUST read. */
-  private def writeDataWithRows(spark: SparkSession, root: String, df: DataFrame,
-                                bloomCols: Seq[String] = Nil)
+  private def writeDataWithRows(spark: SparkSession, root: String, ledger: Ledger,
+                                df: DataFrame, bloomCols: Seq[String] = Nil)
       : (Seq[Staged], Long) = {
     Files.createDirectories(dataDir(root))
     val tmp = Files.createTempDirectory(Paths.get(root), ".stage")
     // a FAILED write job must not leak its temp dir (it would also keep a
     // CTAS abort from removing the staging root) — registered files are
-    // the retry loops' cleanup; the tmp dir is ours
+    // the commit loop's cleanup; the tmp dir is ours
     val staged =
       try {
         df.write.mode("overwrite").parquet(tmp.toString)
@@ -1272,6 +1266,7 @@ object TxTable {
           val name = s"${java.util.UUID.randomUUID()}.parquet"
           val target = dataDir(root).resolve(name)
           Files.move(p, target): Unit
+          ledger += target
           val (stats, rows) = TxStats.fromFooterWithRows(conf, target.toString)
           (Staged(name, stats), rows)
         }
@@ -1329,9 +1324,11 @@ object TxTable {
     * (column values + `_change_type`), written by a normal distributed
     * job, referenced by `cdc` actions in the commit line, visible to no
     * consumer until the commit publishes. No column stats — change files
-    * are consumed sequentially by version, never predicate-pruned.
+    * are consumed sequentially by version, never predicate-pruned. Each
+    * file is registered in `ledger` as it lands under `cdc/`.
     */
-  private def writeCdc(spark: SparkSession, root: String, df: DataFrame): Seq[String] = {
+  private def writeCdc(spark: SparkSession, root: String, ledger: Ledger,
+                       df: DataFrame): Seq[String] = {
     Files.createDirectories(cdcDir(root))
     val tmp = Files.createTempDirectory(Paths.get(root), ".stagecdc")
     // same leak guard as writeData: a FAILED change-capture job must not
@@ -1343,7 +1340,9 @@ object TxTable {
         .sortBy(_.getFileName.toString)
       parts.map { p =>
         val name = s"${java.util.UUID.randomUUID()}.parquet"
-        Files.move(p, cdcDir(root).resolve(name)): Unit
+        val target = cdcDir(root).resolve(name)
+        Files.move(p, target): Unit
+        ledger += target
         name
       }
     } catch { case scala.util.control.NonFatal(e) => awaitTasksStopped(spark); throw e }
@@ -1364,28 +1363,31 @@ object TxTable {
     while (running > 0 && System.nanoTime() < deadline) Thread.sleep(10)
   }
 
-  private def dropCdc(root: String, names: Seq[String]): Unit =
-    names.foreach(n => Files.deleteIfExists(cdcDir(root).resolve(n)))
+  /** Stage one deletion-vector sidecar under `dv/`; returns its name. The
+    * file is registered in `ledger` BEFORE the write, so a partial write
+    * still unstages. */
+  private def writeDv(root: String, ledger: Ledger, bitmap: TxDv.Bitmap): String = {
+    Files.createDirectories(dvDir(root))
+    val name = s"${java.util.UUID.randomUUID()}.dv"
+    val target = dvDir(root).resolve(name)
+    ledger += target
+    Files.write(target, bitmap.serialize): Unit
+    name
+  }
 
-  /** Attempt to publish version `version`. True iff this writer won the
-    * rename race for that version number.
+  /** Attempt to publish `p` as version `version`. True iff this writer won
+    * the link race for that version number.
     */
-  private def tryCommit(spark: SparkSession, root: String, version: Long, op: String,
-                        metrics: Map[String, Long],
-                        adds: Seq[Staged], removes: Seq[String],
-                        txn: Option[(String, Long)] = None,
-                        schemaJson: Option[String] = None,
-                        cdc: Seq[String] = Nil,
-                        dvActions: Seq[(String, String)] = Nil,
-                        dataChange: Boolean = true,
+  private def tryCommit(spark: SparkSession, root: String, version: Long,
+                        p: Publish,
                         protocolUpgrade: Option[(Int, Int)] = None): Boolean = {
     Files.createDirectories(logDir(root))
     val lines = Seq.newBuilder[String]
     val mnode = mapper.createObjectNode()
-    metrics.foreach { case (k, v) => mnode.put(k, v): Unit }
+    p.metrics.foreach { case (k, v) => mnode.put(k, v): Unit }
     val ci = mapper.createObjectNode()
     val cin = ci.putObject("commitInfo")
-    cin.put("op", op): Unit
+    cin.put("op", p.op): Unit
     // commit wall clock (r15): metadata only — drives history()'s audit
     // column and TIMESTAMP AS OF resolution, never a query result, so
     // determinism of registered oracles is untouched
@@ -1402,19 +1404,19 @@ object TxTable {
       pr.put("r", r): Unit
       pr.put("w", w): Unit
     }
-    txn.foreach { case (app, batch) =>
+    p.txn.foreach { case (app, batch) =>
       cin.put("txnApp", app): Unit
       cin.put("txnBatch", batch): Unit
     }
-    schemaJson.foreach(s => cin.put("schema", s): Unit)
+    p.schemaJson.foreach(s => cin.put("schema", s): Unit)
     // layout-only commits declare themselves (r13): the change feed treats
     // a rewrite as changeless only under this flag AND a row-count proof
-    if (!dataChange) cin.put("dataChange", false): Unit
+    if (!p.dataChange) cin.put("dataChange", false): Unit
     // set[T] is generic on its return — pin T or the JVM casts the node to
     // whatever the expression position demands
     cin.set[com.fasterxml.jackson.databind.node.ObjectNode]("metrics", mnode): Unit
     lines += mapper.writeValueAsString(ci)
-    adds.foreach { a =>
+    p.adds.foreach { a =>
       val n = mapper.createObjectNode(); n.put("add", a.name): Unit
       if (a.stats.nonEmpty)
         // stats ride INSIDE the add action line, so the action count (and
@@ -1423,26 +1425,26 @@ object TxTable {
         writeStatsNode(n.putObject("stats"), a.stats)
       lines += mapper.writeValueAsString(n)
     }
-    removes.foreach { r =>
+    p.removes.foreach { r =>
       val n = mapper.createObjectNode(); n.put("remove", r): Unit
       lines += mapper.writeValueAsString(n)
     }
-    cdc.foreach { c =>
+    p.cdc.foreach { c =>
       val n = mapper.createObjectNode(); n.put("cdc", c): Unit
       lines += mapper.writeValueAsString(n)
     }
-    dvActions.foreach { case (f, p) =>
+    p.dvs.foreach { case (f, sidecar) =>
       val n = mapper.createObjectNode()
       val d = n.putObject("dv")
       d.put("f", f): Unit
-      d.put("p", p): Unit
+      d.put("p", sidecar): Unit
       lines += mapper.writeValueAsString(n)
     }
     // trailing integrity marker: action count, so any truncation — even one
     // severing whole lines — is detectable at read time (see [[commits]])
     val endN = mapper.createObjectNode()
     endN.put("end",
-      (adds.size + removes.size + cdc.size + dvActions.size).toLong): Unit
+      (p.adds.size + p.removes.size + p.cdc.size + p.dvs.size).toLong): Unit
     lines += mapper.writeValueAsString(endN)
     val tmp = Files.createTempFile(logDir(root), ".commit", ".tmp")
     Files.write(tmp, lines.result().mkString("\n").getBytes("UTF-8"))
@@ -1472,8 +1474,6 @@ object TxTable {
         Files.deleteIfExists(tmp); false
     }
   }
-
-  private val MaxRetries = 20
 
   /** Commit wall-clock source — a test seam so timestamp-resolution specs
     * can pin exact boundaries; production is the system clock. */
@@ -1582,64 +1582,162 @@ object TxTable {
           "the table stays readable, but a commit could corrupt features " +
           "this writer does not understand")
 
-  /** Test seam: invoked once on entry to [[commitWithRebase]] so a spec
-    * can deterministically inject a racing commit between a mutation's
-    * read-rewrite cycle and its publish. No-op in production. */
+  /** Test seam: invoked by [[commitLoop]] right before each attempt's first
+    * publish — after the write staged its files — so a spec can
+    * deterministically inject a racing commit, or a failure, into that
+    * window of any write. No-op in production. */
   @volatile private[graft] var raceHook: () => Unit = () => ()
-  /** Telemetry/test counters: read-rewrite cycles run vs commits that
-    * landed by REBASE (no cycle re-run) after a lost race. */
+  /** Telemetry/test counters of the writes that can REBASE — those whose
+    * [[Publish]] carries a conflict test: delete, deleteMor, update, merge,
+    * mergeFull, compact and compactZ. `rewriteCycles` counts their
+    * attempts that reached the publish, each of which ran the write's whole
+    * read-rewrite body; `rebaseCommits` counts their publishes that landed
+    * above the attempt's snapshot by rebasing over disjoint winners. So a
+    * lost race of such a write shows as one more cycle (a conflicting
+    * winner) or one rebase. Appends, overwrites, restores and schema
+    * commits cannot rebase and never count, nor do no-op attempts. */
   private[graft] val rewriteCycles = new java.util.concurrent.atomic.AtomicLong
   private[graft] val rebaseCommits = new java.util.concurrent.atomic.AtomicLong
 
-  /** FILE-DISJOINT CONCURRENT COMMITS (VERDICT r12 #4, the Delta conflict
-    * checker move): publish a fully-staged copy-on-write commit, and on a
-    * lost version race REBASE it — re-claim the next version with the SAME
-    * staged adds/removes/cdc, no read-rewrite re-run — as long as every
-    * winning commit is provably disjoint from this commit's reads:
-    *
-    *  - a winner REMOVING or binding a DELETION VECTOR to any file in
-    *    `readSet` (the files this mutation rewrote / marked) conflicts —
-    *    the staged rewrite read content the winner has since changed;
-    *  - a winner's ADDED files conflict when `addsConflict` says their
-    *    commit-logged stats cannot PROVE the new rows irrelevant to this
-    *    mutation (a delete's predicate may match them; a merge's source
-    *    keys may collide). Files without stats conflict — proof or retry.
-    *
-    * Sound under write-serializable semantics (the Delta default): the
-    * rebased mutation is logically ordered BEFORE the disjoint winners it
-    * jumped over — a racing blind append's rows were never in its
-    * snapshot, exactly as if the append committed second. True conflicts
-    * return None and the caller re-runs the whole cycle against the new
-    * snapshot (the pre-r13 behavior, now the exception instead of the
-    * rule: at 100 TB continuous compaction + streaming appends + deletes
-    * race constantly, and serializing every writer through full re-reads
-    * is the difference between minutes and hours of mutation latency).
-    */
-  private def commitWithRebase(root: String, baseVersion: Long,
-                               readSet: Set[String],
-                               addsConflict: Commit => Boolean)(
-                               publish: Long => Boolean): Option[Long] = {
-    raceHook()
-    var head = baseVersion
-    var tries = 0
-    while (tries <= MaxRetries) {
-      if (publish(head + 1)) {
-        if (head != baseVersion) rebaseCommits.incrementAndGet(): Unit
-        return Some(head + 1)
-      }
-      val winners = commitsInRange(root, head + 1, None)
-      if (winners.isEmpty || winners.exists(w =>
-          w.removes.exists(readSet) ||
-          w.dvs.exists { case (f, _) => readSet(f) } ||
-          addsConflict(w)))
-        return None // true conflict: the caller re-runs the cycle
-      head = winners.last.version
-      tries += 1
+  private val MaxRetries = 20
+
+  /** What one attempt of a write asks [[commitLoop]] to publish: the
+    * commit's op, metrics and actions, and `conflicts`, the rebase test —
+    * given a commit that won the version this attempt wanted, true when
+    * the winner invalidates what the attempt read. None means the write
+    * cannot rebase: every winner conflicts and the body re-runs. The
+    * protocol upgrade is not chosen here; the loop derives it from the
+    * actions (see [[featureProtocol]]). */
+  private final case class Publish(op: String, metrics: Map[String, Long],
+                                   adds: Seq[Staged] = Nil,
+                                   removes: Seq[String] = Nil,
+                                   cdc: Seq[String] = Nil,
+                                   dvs: Seq[(String, String)] = Nil,
+                                   schemaJson: Option[String] = None,
+                                   dataChange: Boolean = true,
+                                   txn: Option[(String, Long)] = None,
+                                   conflicts: Option[Commit => Boolean] = None)
+
+  /** The files one write has staged and not yet published. [[writeData]],
+    * [[writeCdc]] and [[writeDv]] register each file as it lands, so
+    * [[commitLoop]] alone decides when staging is dropped. */
+  private final class Ledger {
+    private val attempt = scala.collection.mutable.ArrayBuffer.empty[Path]
+    private val write = scala.collection.mutable.ArrayBuffer.empty[Path]
+    private var staged: Option[Any] = None
+
+    def +=(p: Path): Unit = attempt += p
+
+    /** Run `stage` in the first attempt only and hand its result to every
+      * later one: the files it stages belong to the whole write, kept
+      * across lost races. Call it before staging anything per attempt. */
+    def once[T](stage: => T): T = staged match {
+      case Some(t) => t.asInstanceOf[T]
+      case None =>
+        val t = stage
+        write ++= attempt
+        attempt.clear()
+        staged = Some(t)
+        t
     }
-    None
+
+    /** Unstage the current attempt's files. */
+    def dropAttempt(): Unit = {
+      attempt.foreach(Files.deleteIfExists(_): Unit)
+      attempt.clear()
+    }
+
+    /** Unstage everything the write staged. */
+    def dropAll(): Unit = {
+      dropAttempt()
+      write.foreach(Files.deleteIfExists(_): Unit)
+      write.clear()
+    }
   }
 
-  /** [[commitWithRebase]]'s adds test for predicate mutations: a winner's
+  /** THE OPTIMISTIC COMMIT LOOP every write runs through. Each attempt
+    * takes the latest snapshot, refuses a table this writer may not write
+    * ([[assertWritable]]), and runs `body` against it; the body returns
+    * `Left(version)` for a no-op or `Right(publish)`. The loop then fires
+    * [[raceHook]] and publishes on the next version.
+    *
+    * FILE-DISJOINT CONCURRENT COMMITS (VERDICT r12 #4, the Delta conflict
+    * checker move): on a lost version race the attempt REBASES — re-claims
+    * the next version with the SAME staged commit, no body re-run — as
+    * long as [[Publish.conflicts]] clears every winning commit (see
+    * [[rewriteConflicts]]). Sound under write-serializable semantics (the
+    * Delta default): the rebased write is logically ordered BEFORE the
+    * disjoint winners it jumped over — a racing blind append's rows were
+    * never in its snapshot, exactly as if the append committed second. At
+    * 100 TB continuous compaction + streaming appends + deletes race
+    * constantly, and serializing every writer through full re-reads is the
+    * difference between minutes and hours of mutation latency. A
+    * conflicting winner, or a write that cannot rebase, unstages the
+    * attempt's files and re-runs the body against the new snapshot.
+    *
+    * Every exit other than a won publish — a no-op, a failure, retry
+    * exhaustion — unstages everything the write staged, including what it
+    * staged once for all attempts ([[Ledger.once]]).
+    */
+  private def commitLoop(spark: SparkSession, root: String, write: String)(
+      body: (Snapshot, Ledger) => Either[Long, Publish]): Long = {
+    val ledger = new Ledger
+    var won = false
+    try {
+      var attempt = 0
+      while (attempt < MaxRetries) {
+        val base = snapshot(spark, root, None)
+        assertWritable(root, base)
+        body(base, ledger) match {
+          case Left(v) => return v
+          case Right(p) =>
+            if (p.conflicts.isDefined) rewriteCycles.incrementAndGet(): Unit
+            val upgrade = featureProtocol(base, dvs = p.dvs.nonEmpty,
+              cdc = p.cdc.nonEmpty)
+            raceHook()
+            @annotation.tailrec
+            def publish(head: Long, rebases: Int): Option[Long] =
+              if (tryCommit(spark, root, head + 1, p, upgrade)) Some(head + 1)
+              else p.conflicts match {
+                case Some(conflicts) if rebases < MaxRetries =>
+                  val winners = commitsInRange(root, head + 1, None)
+                  if (winners.isEmpty || winners.exists(conflicts)) None
+                  else publish(winners.last.version, rebases + 1)
+                case _ => None
+              }
+            publish(base.version, 0) match {
+              case Some(v) =>
+                won = true
+                if (v != base.version + 1) rebaseCommits.incrementAndGet(): Unit
+                return v
+              case None => ledger.dropAttempt()
+            }
+        }
+        attempt += 1
+      }
+      throw new IllegalStateException(
+        s"$write lost $MaxRetries commit races at $root")
+    } finally if (!won) ledger.dropAll()
+  }
+
+  /** [[Publish.conflicts]] of a write that read — and rewrote or marked —
+    * the files in `readSet`:
+    *
+    *  - a winner REMOVING or binding a DELETION VECTOR to any file in
+    *    `readSet` conflicts — the staged rewrite read content the winner
+    *    has since changed;
+    *  - a winner's ADDED files conflict when `addsConflict` says their
+    *    commit-logged stats cannot PROVE the new rows irrelevant to this
+    *    write (a delete's predicate may match them; a merge's source keys
+    *    may collide). Files without stats conflict — proof or retry.
+    */
+  private def rewriteConflicts(readSet: Set[String],
+                               addsConflict: Commit => Boolean)
+      : Option[Commit => Boolean] =
+    Some(w => w.removes.exists(readSet) ||
+      w.dvs.exists { case (f, _) => readSet(f) } || addsConflict(w))
+
+  /** [[rewriteConflicts]]' adds test for predicate mutations: a winner's
     * added file conflicts unless its stats PROVE no row can match the
     * mutation's predicate (a racing append may carry rows this DELETE
     * should have seen — under write-serializability a blind append lands
@@ -1658,36 +1756,19 @@ object TxTable {
     * `bloomCols` records per-file Bloom filters for those columns (see
     * [[writeData]]) — the point-lookup half of data skipping. */
   def append(spark: SparkSession, root: String, df: DataFrame,
-             op: String = "append", bloomCols: Seq[String] = Nil): Long = {
-    val pre = snapshot(spark, root, None)
-    assertWritable(root, pre) // protocol-gate BEFORE staging IO
-    evolvedSchema(spark, root, pre, df.schema): Unit // fail fast, before staging IO
-    // rows_written comes from the staged files' footers — r15: a separate
-    // df.count() re-executed the whole incoming lineage a second time
-    val (adds, rows) = writeDataWithRows(spark, root, df, bloomCols)
-    try {
-      var attempt = 0
-      while (attempt < MaxRetries) {
-        // validate and claim against ONE snapshot: any commit racing in
-        // between loses us the version and forces a re-validating retry
-        val base = snapshot(spark, root, None)
-        assertWritable(root, base)
-        val schema = evolvedSchema(spark, root, base, df.schema)
-        val v = base.version + 1
-        if (tryCommit(spark, root, v, op, Map("rows_written" -> rows), adds, Nil,
-          schemaJson = Some(schema))) return v
-        attempt += 1
-      }
-      throw new IllegalStateException(s"append lost $MaxRetries commit races at $root")
-    } catch {
-      // every abnormal exit unstages (ADVICE r14): schema conflicts AND
-      // mid-loop protocol refusals / race exhaustion — staged files must
-      // never outlive a failed append
-      case scala.util.control.NonFatal(e) =>
-        adds.foreach(a => Files.deleteIfExists(dataDir(root).resolve(a.name)))
-        throw e
+             op: String = "append", bloomCols: Seq[String] = Nil): Long =
+    commitLoop(spark, root, "append") { (base, ledger) =>
+      // validate and claim against ONE snapshot: any commit racing in
+      // between loses us the version and forces a re-validating retry; the
+      // first attempt validates before any staging IO
+      val schema = evolvedSchema(spark, root, base, df.schema)
+      // rows_written comes from the staged files' footers — r15: a separate
+      // df.count() re-executed the whole incoming lineage a second time
+      val (adds, rows) =
+        ledger.once(writeDataWithRows(spark, root, ledger, df, bloomCols))
+      Right(Publish(op, Map("rows_written" -> rows), adds,
+        schemaJson = Some(schema)))
     }
-  }
 
   /** EXACTLY-ONCE append for streaming sinks (the Delta `txn` action): the
     * commit records `(appId, batchId)` and a redelivered batch — the replay
@@ -1715,42 +1796,20 @@ object TxTable {
         .orElse(commitsInRange(root, cp.fold(0L)(_.version + 1L), None)
           .find(_.txn.contains((appId, batchId))).map(_.version))
     }
-    committed() match {
-      case Some(v) => v // the batch already applied: idempotent no-op
-      case None =>
-        val pre = snapshot(spark, root, None)
-        assertWritable(root, pre) // protocol-gate BEFORE staging IO
-        evolvedSchema(spark, root, pre, df.schema): Unit // fail fast, before staging
-        // footer-counted rows (r15): no second pass over the batch
-        val (adds, rows) = writeDataWithRows(spark, root, df, bloomCols)
-        try {
-          var attempt = 0
-          while (attempt < MaxRetries) {
-            committed() match {
-              case Some(v) => // a racing replay won: discard this side's files
-                adds.foreach(a => Files.deleteIfExists(dataDir(root).resolve(a.name)))
-                return v
-              case None =>
-                val base = snapshot(spark, root, None)
-                assertWritable(root, base)
-                // same-snapshot validate-and-claim, like append
-                val schema = evolvedSchema(spark, root, base, df.schema)
-                val v = base.version + 1
-                if (tryCommit(spark, root, v, "stream_append", Map("rows_written" -> rows),
-                  adds, Nil, Some((appId, batchId)), Some(schema))) return v
-            }
-            attempt += 1
-          }
-          throw new IllegalStateException(
-            s"appendOnce lost $MaxRetries commit races at $root")
-        } catch {
-          // every abnormal exit unstages (ADVICE r14) — schema conflicts,
-          // protocol refusals, race exhaustion alike
-          case scala.util.control.NonFatal(e) =>
-            adds.foreach(a => Files.deleteIfExists(dataDir(root).resolve(a.name)))
-            throw e
-        }
-    }
+    // the batch already applied: idempotent no-op
+    committed().getOrElse(commitLoop(spark, root, "appendOnce") { (base, ledger) =>
+      committed() match {
+        case Some(v) => Left(v) // a racing replay won: its files stand, ours unstage
+        case None =>
+          // same-snapshot validate-and-claim, like append
+          val schema = evolvedSchema(spark, root, base, df.schema)
+          // footer-counted rows (r15): no second pass over the batch
+          val (adds, rows) =
+            ledger.once(writeDataWithRows(spark, root, ledger, df, bloomCols))
+          Right(Publish("stream_append", Map("rows_written" -> rows), adds,
+            schemaJson = Some(schema), txn = Some((appId, batchId))))
+      }
+    })
   }
 
   /** Refuse NONDETERMINISTIC mutation expressions (r14): a mutation
@@ -1800,8 +1859,8 @@ object TxTable {
   }
 
   /** Copy-on-write DELETE: rewrite only the files containing matching rows.
-    * Retries the WHOLE read-rewrite-commit cycle on a lost race, so the
-    * rewrite is always against the current snapshot.
+    * A lost race rebases over provably disjoint winners, else re-runs the
+    * WHOLE read-rewrite cycle against the new snapshot ([[commitLoop]]).
     *
     * Three-valued logic (r12, the r11 audit's one real defect): a row whose
     * predicate evaluates to NULL is deleted by NEITHER branch of SQL DELETE
@@ -1813,56 +1872,31 @@ object TxTable {
     * SQL DELETE and Delta. This is the TTL path: `ts < horizon` over a
     * nullable timestamp column evaluates NULL on every null row.
     */
-  def delete(spark: SparkSession, root: String, predicate: Column): Long = {
-    var attempt = 0
-    var pendingAdds: Seq[Staged] = Nil
-    var pendingCdc: Seq[String] = Nil
-    try while (attempt < MaxRetries) {
-      rewriteCycles.incrementAndGet(): Unit
-      val base = snapshot(spark, root, None)
-      assertWritable(root, base)
+  def delete(spark: SparkSession, root: String, predicate: Column): Long =
+    commitLoop(spark, root, "delete") { (base, ledger) =>
       assertDeterministic(spark, root, base, "delete predicate", Seq(predicate))
       val affected = filesMatching(spark, root, base, predicate)
-      if (affected.isEmpty)
-        return base.version // nothing to delete: no-op, no commit
-      val affectedDf = readLive(spark, root, base, affected)
-      val deleted = affectedDf.where(predicate).count()
-      val survivors = affectedDf.where(coalesce(!predicate, lit(true)))
-      val adds = if (survivors.isEmpty) Nil else writeData(spark, root, survivors)
-      pendingAdds = adds
-      // change data feed (r12): the commit carries the deleted rows as
-      // change files, so downstream incremental consumers replay row-level
-      // deletes instead of diffing snapshots (the Delta CDF move)
-      val cdc = writeCdc(spark, root,
-        affectedDf.where(coalesce(predicate, lit(false)))
-          .withColumn("_change_type", lit("delete")))
-      pendingCdc = cdc
-      // lost races rebase over file-disjoint winners (r13): adds conflict
-      // unless proven unmatchable by the normalized predicate
-      val cond = normalizedCondition(spark, root, base, predicate)
-      commitWithRebase(root, base.version, affected.toSet,
-        predicateAddsConflict(cond)) { v =>
-        tryCommit(spark, root, v, "delete",
-          Map("rows_deleted" -> deleted), adds, affected, cdc = cdc,
-          protocolUpgrade = featureProtocol(base, dvs = false, cdc = cdc.nonEmpty))
-      } match {
-        case Some(v) => return v
-        case None =>
-          adds.foreach(a => Files.deleteIfExists(dataDir(root).resolve(a.name)))
-          dropCdc(root, cdc)
-          pendingAdds = Nil
-          pendingCdc = Nil
-          attempt += 1
+      if (affected.isEmpty) Left(base.version) // nothing to delete: no-op, no commit
+      else {
+        val affectedDf = readLive(spark, root, base, affected)
+        val deleted = affectedDf.where(predicate).count()
+        val survivors = affectedDf.where(coalesce(!predicate, lit(true)))
+        val adds =
+          if (survivors.isEmpty) Nil else writeData(spark, root, ledger, survivors)
+        // change data feed (r12): the commit carries the deleted rows as
+        // change files, so downstream incremental consumers replay
+        // row-level deletes instead of diffing snapshots (the Delta CDF move)
+        val cdc = writeCdc(spark, root, ledger,
+          affectedDf.where(coalesce(predicate, lit(false)))
+            .withColumn("_change_type", lit("delete")))
+        // lost races rebase over file-disjoint winners (r13): adds conflict
+        // unless proven unmatchable by the normalized predicate
+        val cond = normalizedCondition(spark, root, base, predicate)
+        Right(Publish("delete", Map("rows_deleted" -> deleted), adds, affected,
+          cdc = cdc,
+          conflicts = rewriteConflicts(affected.toSet, predicateAddsConflict(cond))))
       }
-    } catch {
-      // abnormal exits unstage the CURRENT attempt's files (ADVICE r14)
-      case scala.util.control.NonFatal(e) =>
-        pendingAdds.foreach(a => Files.deleteIfExists(dataDir(root).resolve(a.name)))
-        dropCdc(root, pendingCdc)
-        throw e
     }
-    throw new IllegalStateException(s"delete lost $MaxRetries commit races at $root")
-  }
 
   /** MERGE-ON-READ DELETE via deletion vectors (r12, the Delta DV /
     * Iceberg positional-delete move): instead of rewriting every file that
@@ -1881,80 +1915,51 @@ object TxTable {
     * re-delete on an already-vectored file commits a REPLACEMENT vector
     * with the old bitmap merged in.
     */
-  def deleteMor(spark: SparkSession, root: String, predicate: Column): Long = {
-    var attempt = 0
-    var pendingDvs: Seq[(String, String)] = Nil
-    var pendingCdc: Seq[String] = Nil
-    try while (attempt < MaxRetries) {
-      rewriteCycles.incrementAndGet(): Unit
-      val base = snapshot(spark, root, None)
-      assertWritable(root, base)
+  def deleteMor(spark: SparkSession, root: String, predicate: Column): Long =
+    commitLoop(spark, root, "deleteMor") { (base, ledger) =>
       assertDeterministic(spark, root, base, "delete predicate", Seq(predicate))
       if (base.liveFiles.isEmpty)
-        return base.version // created/fully-deleted table: nothing to mark
-      // driver-side bitmaps for the replacement-vector merge below; the
-      // scan itself ships descriptors only (r15 — executors read sidecars)
-      val existing = loadDvs(root, base, base.liveFiles)
-      val scan = readFilesMor(spark, root, base.liveFiles, base.schemaJson,
-        dvRefs(root, base, base.liveFiles))
-      val dvAgg = org.apache.spark.sql.functions.udaf(new TxDv.DvAgg(),
-        org.apache.spark.sql.Encoders.scalaLong)
-      // per-file bitmaps of the matching LIVE rows, aggregated where the
-      // rows are (the bloom-build shape); only affected files reach the
-      // driver, each as one bitmap row
-      val perFile = scan.where(predicate)
-        .groupBy(col("__dv_file"))
-        .agg(dvAgg(col("__dv_row")).as("bm"), count(lit(1)).as("n"))
-        .collect()
-      if (perFile.isEmpty) return base.version // nothing to delete: no-op
-      val deleted = perFile.map(_.getAs[Long]("n")).sum
-      Files.createDirectories(dvDir(root))
-      val dvActions = perFile.map { r =>
-        val f = r.getAs[String]("__dv_file")
-        val add = TxDv.Bitmap.deserialize(r.getAs[Array[Byte]]("bm"))
-        val merged = existing.vectors.get(f).fold(add)(old => add.or(old))
-        val name = s"${java.util.UUID.randomUUID()}.dv"
-        // registered for abnormal-exit cleanup BEFORE the write: a failed
-        // write at sidecar k must still unstage sidecars 1..k
-        pendingDvs = pendingDvs :+ ((f, name))
-        Files.write(dvDir(root).resolve(name), merged.serialize): Unit
-        (f, name)
-      }.toSeq
-      // change feed: identical delete rows to the copy-on-write path
-      val cdc = writeCdc(spark, root,
-        scan.where(coalesce(predicate, lit(false)))
-          .drop("__dv_file", "__dv_row")
-          .withColumn("_change_type", lit("delete")))
-      pendingCdc = cdc
-      // rebase over file-disjoint winners (r13): read set = the files this
-      // pass binds REPLACEMENT vectors to (their merged bitmaps embed the
-      // base vectors — a racing vector on one would be lost)
-      val cond = normalizedCondition(spark, root, base, predicate)
-      commitWithRebase(root, base.version, dvActions.map(_._1).toSet,
-        predicateAddsConflict(cond)) { v =>
-        tryCommit(spark, root, v, "delete_mor",
-          Map("rows_deleted" -> deleted), Nil, Nil, cdc = cdc,
-          dvActions = dvActions,
-          protocolUpgrade = featureProtocol(base, dvs = true, cdc = true))
-      } match {
-        case Some(v) => return v
-        case None =>
-          dvActions.foreach { case (_, p) =>
-            Files.deleteIfExists(dvDir(root).resolve(p)) }
-          dropCdc(root, cdc)
-          pendingDvs = Nil
-          pendingCdc = Nil
-          attempt += 1
+        Left(base.version) // created/fully-deleted table: nothing to mark
+      else {
+        // driver-side bitmaps for the replacement-vector merge below; the
+        // scan itself ships descriptors only (r15 — executors read sidecars)
+        val existing = loadDvs(root, base, base.liveFiles)
+        val scan = readFilesMor(spark, root, base.liveFiles, base.schemaJson,
+          dvRefs(root, base, base.liveFiles))
+        val dvAgg = org.apache.spark.sql.functions.udaf(new TxDv.DvAgg(),
+          org.apache.spark.sql.Encoders.scalaLong)
+        // per-file bitmaps of the matching LIVE rows, aggregated where the
+        // rows are (the bloom-build shape); only affected files reach the
+        // driver, each as one bitmap row
+        val perFile = scan.where(predicate)
+          .groupBy(col("__dv_file"))
+          .agg(dvAgg(col("__dv_row")).as("bm"), count(lit(1)).as("n"))
+          .collect()
+        if (perFile.isEmpty) Left(base.version) // nothing to delete: no-op
+        else {
+          val deleted = perFile.map(_.getAs[Long]("n")).sum
+          val dvActions = perFile.map { r =>
+            val f = r.getAs[String]("__dv_file")
+            val add = TxDv.Bitmap.deserialize(r.getAs[Array[Byte]]("bm"))
+            f -> writeDv(root, ledger,
+              existing.vectors.get(f).fold(add)(old => add.or(old)))
+          }.toSeq
+          // change feed: identical delete rows to the copy-on-write path
+          val cdc = writeCdc(spark, root, ledger,
+            scan.where(coalesce(predicate, lit(false)))
+              .drop("__dv_file", "__dv_row")
+              .withColumn("_change_type", lit("delete")))
+          // rebase over file-disjoint winners (r13): read set = the files
+          // this pass binds REPLACEMENT vectors to (their merged bitmaps
+          // embed the base vectors — a racing vector on one would be lost)
+          val cond = normalizedCondition(spark, root, base, predicate)
+          Right(Publish("delete_mor", Map("rows_deleted" -> deleted),
+            cdc = cdc, dvs = dvActions,
+            conflicts = rewriteConflicts(dvActions.map(_._1).toSet,
+              predicateAddsConflict(cond))))
+        }
       }
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        pendingDvs.foreach { case (_, p) =>
-          Files.deleteIfExists(dvDir(root).resolve(p)) }
-        dropCdc(root, pendingCdc)
-        throw e
     }
-    throw new IllegalStateException(s"deleteMor lost $MaxRetries commit races at $root")
-  }
 
   /** Copy-on-write MERGE (upsert): rows of `source` matching `target` on
     * `keyCols` overwrite the target row's `updateCols`; unmatched source
@@ -1991,13 +1996,7 @@ object TxTable {
           s"$srcRows rows, $srcDistinct distinct — each target row must " +
           "match at most one source row")
     val keyAddsConflict = keyAddsConflictFn(keyCols.head, keyBounds)
-    var attempt = 0
-    var pendingAdds: Seq[Staged] = Nil
-    var pendingCdc: Seq[String] = Nil
-    try while (attempt < MaxRetries) {
-      rewriteCycles.incrementAndGet(): Unit
-      val base = snapshot(spark, root, None)
-      assertWritable(root, base)
+    commitLoop(spark, root, "merge") { (base, ledger) =>
       val live = readLive(spark, root, base, base.liveFiles)
       val cols = live.columns.toSeq
       // files holding at least one matched key (the only rewrite set) AND
@@ -2046,35 +2045,16 @@ object TxTable {
           (joined.select(updatedSel: _*).unionByName(ins),
             pre.unionByName(post).unionByName(insChanges))
         }
-      val updated = matchedKeys
-      val adds = writeData(spark, root, rewritten)
-      pendingAdds = adds
-      val cdc = writeCdc(spark, root, changes)
-      pendingCdc = cdc
+      val adds = writeData(spark, root, ledger, rewritten)
+      val cdc = writeCdc(spark, root, ledger, changes)
       // rebase over file-disjoint winners (r13): conflicts are a winner
       // touching my rewrite set, or adding files that MAY hold my keys
       // (they would change the matched/insert decisions this cycle made)
-      commitWithRebase(root, base.version, affected.toSet, keyAddsConflict) { v =>
-        tryCommit(spark, root, v, "merge",
-          Map("rows_updated" -> updated, "rows_inserted" -> nInserts),
-          adds, affected, cdc = cdc,
-          protocolUpgrade = featureProtocol(base, dvs = false, cdc = cdc.nonEmpty))
-      } match {
-        case Some(v) => return v
-        case None =>
-          adds.foreach(a => Files.deleteIfExists(dataDir(root).resolve(a.name)))
-          dropCdc(root, cdc)
-          pendingAdds = Nil
-          pendingCdc = Nil
-          attempt += 1
-      }
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        pendingAdds.foreach(a => Files.deleteIfExists(dataDir(root).resolve(a.name)))
-        dropCdc(root, pendingCdc)
-        throw e
+      Right(Publish("merge",
+        Map("rows_updated" -> matchedKeys, "rows_inserted" -> nInserts),
+        adds, affected, cdc = cdc,
+        conflicts = rewriteConflicts(affected.toSet, keyAddsConflict)))
     }
-    throw new IllegalStateException(s"merge lost $MaxRetries commit races at $root")
   }
 
   /** One source pass computing the dup-key profile (row count, distinct
@@ -2112,7 +2092,7 @@ object TxTable {
     }
   }
 
-  /** [[commitWithRebase]] adds test for key-joined merges: a winner's
+  /** [[rewriteConflicts]]' adds test for key-joined merges: a winner's
     * added file conflicts unless its commit-logged stats for the first
     * key column prove disjointness from the merge's key bounds. */
   private def keyAddsConflictFn(k0: String,
@@ -2222,13 +2202,14 @@ object TxTable {
                else actionIdx(matched, isM)
     val nact = if (notMatchedBySource.isEmpty) lit(null).cast("int")
                else actionIdx(notMatchedBySource, !isM)
-    var attempt = 0
-    var pendingAdds: Seq[Staged] = Nil
-    var pendingCdc: Seq[String] = Nil
-    try while (attempt < MaxRetries) {
-      rewriteCycles.incrementAndGet(): Unit
-      val base = snapshot(spark, root, None)
-      assertWritable(root, base)
+    // rebase: a winner touching my rewrite set conflicts; its ADDS
+    // conflict unless provably outside my key range — and with
+    // NOT-MATCHED-BY-SOURCE clauses ANY added row is in scope (it would
+    // have been an unmatched target row), so every add conflicts
+    val addsConflict: Commit => Boolean =
+      if (notMatchedBySource.nonEmpty) w => w.adds.nonEmpty
+      else keyAddsConflictFn(keyCols.head, keyBounds)
+    commitLoop(spark, root, "mergeFull") { (base, ledger) =>
       val live = readLive(spark, root, base, base.liveFiles)
       val cols = live.columns.toSeq
       require(!cols.exists(c => c.startsWith("__src_") ||
@@ -2308,64 +2289,42 @@ object TxTable {
         .getOrElse(live.limit(0).select(cols.map(col): _*))
       val nInserts = inserts.count()
       if (affected.isEmpty && nInserts == 0)
-        return base.version // nothing fires anywhere: no-op, no commit
-      // rewrite only the affected files; route each row by its clause
-      val joinedA = withActs(readLive(spark, root, base, affected))
-      def newVal(c: String): Column = {
-        val cases =
-          matchedUpdate.collect { case (i, a) if a.contains(c) =>
-            (col("__mact") === i) -> a(c) } ++
-          nmbsUpdate.collect { case (i, a) if a.contains(c) =>
-            (col("__nact") === i) -> a(c) }
-        cases.reverse.foldLeft(col(c)) { case (tail, (hit, v)) =>
-          when(hit, ansiCast(v, live.schema(c).dataType)).otherwise(tail)
-        }.as(c)
-      }
-      val rewritten = joinedA.where(!isDel)
-        .select(cols.map(newVal): _*)
-        .unionByName(inserts)
-      // CDF: deletes carry the removed rows, updates pre+post images,
-      // inserts the new rows — every outcome replayable downstream
-      val changes = joinedA.where(isDel).select(cols.map(col): _*)
-        .withColumn("_change_type", lit("delete"))
-        .unionByName(joinedA.where(updFires).select(cols.map(col): _*)
-          .withColumn("_change_type", lit("update_preimage")))
-        .unionByName(joinedA.where(updFires).select(cols.map(newVal): _*)
-          .withColumn("_change_type", lit("update_postimage")))
-        .unionByName(inserts.withColumn("_change_type", lit("insert")))
-      val adds = if (rewritten.isEmpty) Nil else writeData(spark, root, rewritten)
-      pendingAdds = adds
-      val cdc = writeCdc(spark, root, changes)
-      pendingCdc = cdc
-      // rebase: a winner touching my rewrite set conflicts; its ADDS
-      // conflict unless provably outside my key range — and with
-      // NOT-MATCHED-BY-SOURCE clauses ANY added row is in scope (it would
-      // have been an unmatched target row), so every add conflicts
-      val addsConflict: Commit => Boolean =
-        if (notMatchedBySource.nonEmpty) w => w.adds.nonEmpty
-        else keyAddsConflictFn(keyCols.head, keyBounds)
-      commitWithRebase(root, base.version, affected.toSet, addsConflict) { v =>
-        tryCommit(spark, root, v, "merge",
+        Left(base.version) // nothing fires anywhere: no-op, no commit
+      else {
+        // rewrite only the affected files; route each row by its clause
+        val joinedA = withActs(readLive(spark, root, base, affected))
+        def newVal(c: String): Column = {
+          val cases =
+            matchedUpdate.collect { case (i, a) if a.contains(c) =>
+              (col("__mact") === i) -> a(c) } ++
+            nmbsUpdate.collect { case (i, a) if a.contains(c) =>
+              (col("__nact") === i) -> a(c) }
+          cases.reverse.foldLeft(col(c)) { case (tail, (hit, v)) =>
+            when(hit, ansiCast(v, live.schema(c).dataType)).otherwise(tail)
+          }.as(c)
+        }
+        val rewritten = joinedA.where(!isDel)
+          .select(cols.map(newVal): _*)
+          .unionByName(inserts)
+        // CDF: deletes carry the removed rows, updates pre+post images,
+        // inserts the new rows — every outcome replayable downstream
+        val changes = joinedA.where(isDel).select(cols.map(col): _*)
+          .withColumn("_change_type", lit("delete"))
+          .unionByName(joinedA.where(updFires).select(cols.map(col): _*)
+            .withColumn("_change_type", lit("update_preimage")))
+          .unionByName(joinedA.where(updFires).select(cols.map(newVal): _*)
+            .withColumn("_change_type", lit("update_postimage")))
+          .unionByName(inserts.withColumn("_change_type", lit("insert")))
+        val adds =
+          if (rewritten.isEmpty) Nil else writeData(spark, root, ledger, rewritten)
+        val cdc = writeCdc(spark, root, ledger, changes)
+        Right(Publish("merge",
           Map("rows_updated" -> nUpdated, "rows_inserted" -> nInserts,
             "rows_deleted" -> nDeleted),
           adds, affected, cdc = cdc,
-          protocolUpgrade = featureProtocol(base, dvs = false, cdc = cdc.nonEmpty))
-      } match {
-        case Some(v) => return v
-        case None =>
-          adds.foreach(a => Files.deleteIfExists(dataDir(root).resolve(a.name)))
-          dropCdc(root, cdc)
-          pendingAdds = Nil
-          pendingCdc = Nil
-          attempt += 1
+          conflicts = rewriteConflicts(affected.toSet, addsConflict)))
       }
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        pendingAdds.foreach(a => Files.deleteIfExists(dataDir(root).resolve(a.name)))
-        dropCdc(root, pendingCdc)
-        throw e
     }
-    throw new IllegalStateException(s"mergeFull lost $MaxRetries commit races at $root")
   }
 
   /** Copy-on-write UPDATE (r14, the SQL-UPDATE half of VERDICT r13 #1):
@@ -2384,70 +2343,46 @@ object TxTable {
   def update(spark: SparkSession, root: String, predicate: Column,
              assignments: Map[String, Column]): Long = {
     require(assignments.nonEmpty, "update: no assignments")
-    var attempt = 0
-    var pendingAdds: Seq[Staged] = Nil
-    var pendingCdc: Seq[String] = Nil
-    try while (attempt < MaxRetries) {
-      rewriteCycles.incrementAndGet(): Unit
-      val base = snapshot(spark, root, None)
-      assertWritable(root, base)
+    commitLoop(spark, root, "update") { (base, ledger) =>
       assertDeterministic(spark, root, base, "update predicate", Seq(predicate))
       assertDeterministic(spark, root, base, "update assignments",
         assignments.values.toSeq)
       val affected = filesMatching(spark, root, base, predicate)
-      if (affected.isEmpty)
-        return base.version // nothing to update: no-op, no commit
-      val affectedDf = readLive(spark, root, base, affected)
-      val cols = affectedDf.columns.toSeq
-      assignments.keys.foreach(k => require(cols.contains(k),
-        s"update: unknown column $k (table has ${cols.mkString(", ")})"))
-      // assignment values CAST to the column's current type (SQL UPDATE's
-      // store-assignment semantics, and what Spark's own row-level UPDATE
-      // resolution does): without it `value * 1.5` on a BIGINT column
-      // would silently WIDEN the rewritten file's type — the commit
-      // succeeds, and every later read under the recorded schema throws
-      // on the drifted parquet file (a bricked table after an ack'd
-      // write). ANSI evaluation (ADVICE r14): an overflowing/invalid
-      // value ERRORS instead of landing NULL.
-      val assigned = assignments.map { case (c, v) =>
-        c -> ansiCast(v, affectedDf.schema(c).dataType)
+      if (affected.isEmpty) Left(base.version) // nothing to update: no-op, no commit
+      else {
+        val affectedDf = readLive(spark, root, base, affected)
+        val cols = affectedDf.columns.toSeq
+        assignments.keys.foreach(k => require(cols.contains(k),
+          s"update: unknown column $k (table has ${cols.mkString(", ")})"))
+        // assignment values CAST to the column's current type (SQL UPDATE's
+        // store-assignment semantics, and what Spark's own row-level UPDATE
+        // resolution does): without it `value * 1.5` on a BIGINT column
+        // would silently WIDEN the rewritten file's type — the commit
+        // succeeds, and every later read under the recorded schema throws
+        // on the drifted parquet file (a bricked table after an ack'd
+        // write). ANSI evaluation (ADVICE r14): an overflowing/invalid
+        // value ERRORS instead of landing NULL.
+        val assigned = assignments.map { case (c, v) =>
+          c -> ansiCast(v, affectedDf.schema(c).dataType)
+        }
+        val hit = coalesce(predicate, lit(false))
+        val rewritten = affectedDf.select(cols.map { c =>
+          assigned.get(c).fold(col(c))(v => when(hit, v).otherwise(col(c)).as(c))
+        }: _*)
+        val matched = affectedDf.where(hit)
+        val updated = matched.count()
+        val post = matched.select(cols.map(c =>
+          assigned.get(c).fold(col(c))(_.as(c))): _*)
+        val cdc = writeCdc(spark, root, ledger,
+          matched.withColumn("_change_type", lit("update_preimage"))
+            .unionByName(post.withColumn("_change_type", lit("update_postimage"))))
+        val adds = writeData(spark, root, ledger, rewritten)
+        val cond = normalizedCondition(spark, root, base, predicate)
+        Right(Publish("update", Map("rows_updated" -> updated), adds, affected,
+          cdc = cdc,
+          conflicts = rewriteConflicts(affected.toSet, predicateAddsConflict(cond))))
       }
-      val hit = coalesce(predicate, lit(false))
-      val rewritten = affectedDf.select(cols.map { c =>
-        assigned.get(c).fold(col(c))(v => when(hit, v).otherwise(col(c)).as(c))
-      }: _*)
-      val matched = affectedDf.where(hit)
-      val updated = matched.count()
-      val post = matched.select(cols.map(c =>
-        assigned.get(c).fold(col(c))(_.as(c))): _*)
-      val cdc = writeCdc(spark, root,
-        matched.withColumn("_change_type", lit("update_preimage"))
-          .unionByName(post.withColumn("_change_type", lit("update_postimage"))))
-      pendingCdc = cdc
-      val adds = writeData(spark, root, rewritten)
-      pendingAdds = adds
-      val cond = normalizedCondition(spark, root, base, predicate)
-      commitWithRebase(root, base.version, affected.toSet,
-        predicateAddsConflict(cond)) { v =>
-        tryCommit(spark, root, v, "update",
-          Map("rows_updated" -> updated), adds, affected, cdc = cdc,
-          protocolUpgrade = featureProtocol(base, dvs = false, cdc = true))
-      } match {
-        case Some(v) => return v
-        case None =>
-          adds.foreach(a => Files.deleteIfExists(dataDir(root).resolve(a.name)))
-          dropCdc(root, cdc)
-          pendingAdds = Nil
-          pendingCdc = Nil
-          attempt += 1
-      }
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        pendingAdds.foreach(a => Files.deleteIfExists(dataDir(root).resolve(a.name)))
-        dropCdc(root, pendingCdc)
-        throw e
     }
-    throw new IllegalStateException(s"update lost $MaxRetries commit races at $root")
   }
 
   /** Atomic OVERWRITE (r14, VERDICT r13 #3 "what's missing": the Delta
@@ -2465,82 +2400,50 @@ object TxTable {
     * the additive-evolution rule like append.
     */
   def overwrite(spark: SparkSession, root: String, df: DataFrame,
-                bloomCols: Seq[String] = Nil): Long = {
-    val pre = snapshot(spark, root, None)
-    assertWritable(root, pre) // protocol-gate BEFORE staging IO
-    evolvedSchema(spark, root, pre, df.schema): Unit // fail fast, before staging
-    // footer-counted rows (r15): no second pass over the replacement data
-    val (adds, rows) = writeDataWithRows(spark, root, df, bloomCols)
-    def unstage(): Unit =
-      adds.foreach(a => Files.deleteIfExists(dataDir(root).resolve(a.name)))
-    // the CURRENT attempt's uncommitted change files, so the abnormal-exit
-    // cleanup below can drop them too (a committed attempt returned first)
-    var pendingCdc: Seq[String] = Nil
-    try {
-      var attempt = 0
-      while (attempt < MaxRetries) {
-        val base = snapshot(spark, root, None)
-        assertWritable(root, base)
-        val schema = evolvedSchema(spark, root, base, df.schema)
-        // change capture per attempt: the DISPLACED rows are the racing
-        // snapshot's, not the first one's
-        val (deleted, cdc) =
-          if (base.liveFiles.isEmpty) (0L, Nil) // fresh table: a pure add
-          else {
-            val old = readLive(spark, root, base, base.liveFiles)
-            val newRows = readFiles(spark, root, adds.map(_.name), Some(schema))
-            // r16 (VERDICT r15 #3): the displaced-row metric comes from
-            // snapshot STATS — Σ per-file recorded rows − Σ live
-            // deletion-vector cardinalities (log metadata plus KB-sized
-            // bitmap reads) — identical by construction to what
-            // `old.count()` measures (readLive applies the same vectors),
-            // so the overwrite path no longer runs a full second scan of
-            // the live set just for a commit metric. Fallback to the scan
-            // only when some live file predates row accounting (pre-r11
-            // logs record no stats).
-            val statRows: Option[Long] =
-              base.liveFiles.foldLeft(Option(0L)) { (acc, f) =>
-                for {
-                  sum <- acc
-                  rows <- base.liveStats.get(f)
-                    .flatMap(_.values.flatMap(_.rows).headOption)
-                } yield sum + rows - base.liveDvs.get(f).fold(0L) { p =>
-                  TxDv.Bitmap.deserialize(
-                    Files.readAllBytes(dvDir(root).resolve(p))).cardinality
-                }
+                bloomCols: Seq[String] = Nil): Long =
+    commitLoop(spark, root, "overwrite") { (base, ledger) =>
+      val schema = evolvedSchema(spark, root, base, df.schema)
+      // staged once, validated first; footer-counted rows (r15): no second
+      // pass over the replacement data
+      val (adds, rows) =
+        ledger.once(writeDataWithRows(spark, root, ledger, df, bloomCols))
+      // change capture per attempt: the DISPLACED rows are the racing
+      // snapshot's, not the first one's
+      val (deleted, cdc) =
+        if (base.liveFiles.isEmpty) (0L, Nil) // fresh table: a pure add
+        else {
+          val old = readLive(spark, root, base, base.liveFiles)
+          val newRows = readFiles(spark, root, adds.map(_.name), Some(schema))
+          // r16 (VERDICT r15 #3): the displaced-row metric comes from
+          // snapshot STATS — Σ per-file recorded rows − Σ live
+          // deletion-vector cardinalities (log metadata plus KB-sized
+          // bitmap reads) — identical by construction to what
+          // `old.count()` measures (readLive applies the same vectors),
+          // so the overwrite path no longer runs a full second scan of
+          // the live set just for a commit metric. Fallback to the scan
+          // only when some live file predates row accounting (pre-r11
+          // logs record no stats).
+          val statRows: Option[Long] =
+            base.liveFiles.foldLeft(Option(0L)) { (acc, f) =>
+              for {
+                sum <- acc
+                rows <- base.liveStats.get(f)
+                  .flatMap(_.values.flatMap(_.rows).headOption)
+              } yield sum + rows - base.liveDvs.get(f).fold(0L) { p =>
+                TxDv.Bitmap.deserialize(
+                  Files.readAllBytes(dvDir(root).resolve(p))).cardinality
               }
-            (statRows.getOrElse(old.count()), writeCdc(spark, root,
-              old.withColumn("_change_type", lit("delete"))
-                .unionByName(
-                  newRows.withColumn("_change_type", lit("insert")),
-                  allowMissingColumns = true)))
-          }
-        pendingCdc = cdc
-        val v = base.version + 1
-        if (tryCommit(spark, root, v, "overwrite",
-            Map("rows_written" -> rows, "rows_deleted" -> deleted),
-            adds, base.liveFiles, cdc = cdc, schemaJson = Some(schema),
-            protocolUpgrade = featureProtocol(base, dvs = false,
-              cdc = cdc.nonEmpty)))
-          return v
-        dropCdc(root, cdc)
-        pendingCdc = Nil
-        attempt += 1
-      }
-      // unstaged by the NonFatal handler below
-      throw new IllegalStateException(
-        s"overwrite lost $MaxRetries commit races at $root")
-    } catch {
-      // EVERY abnormal exit unstages (ADVICE r14): not just the schema
-      // conflict — a mid-loop protocol refusal (IllegalStateException after
-      // a concurrent upgrade) or a failed Spark job during change capture
-      // would otherwise permanently leak the staged parquet files
-      case scala.util.control.NonFatal(e) =>
-        unstage()
-        dropCdc(root, pendingCdc)
-        throw e
+            }
+          (statRows.getOrElse(old.count()), writeCdc(spark, root, ledger,
+            old.withColumn("_change_type", lit("delete"))
+              .unionByName(
+                newRows.withColumn("_change_type", lit("insert")),
+                allowMissingColumns = true)))
+        }
+      Right(Publish("overwrite",
+        Map("rows_written" -> rows, "rows_deleted" -> deleted),
+        adds, base.liveFiles, cdc = cdc, schemaJson = Some(schema)))
     }
-  }
 
   /** RESTORE the table to the state it had at `toVersion` (r15, the Delta
     * `RESTORE TABLE` move) — as a NEW commit, never by rewriting history:
@@ -2562,99 +2465,67 @@ object TxTable {
     * BEFORE the restore still sees the pre-restore states — restore adds
     * history, it never erases it.
     */
-  def restore(spark: SparkSession, root: String, toVersion: Long): Long = {
-    var attempt = 0
-    var pendingCdc: Seq[String] = Nil
-    var pendingDvs: Seq[(String, String)] = Nil
-    try while (attempt < MaxRetries) {
-      val base = snapshot(spark, root, None)
+  def restore(spark: SparkSession, root: String, toVersion: Long): Long =
+    commitLoop(spark, root, "restore") { (base, ledger) =>
       if (base.version < 0)
         throw new IllegalArgumentException(s"no tx table at $root")
-      assertWritable(root, base)
-      if (toVersion == base.version) return base.version
-      if (toVersion > base.version || toVersion < 0)
-        throw new IllegalArgumentException(
-          s"restore: version $toVersion does not exist " +
-            s"(table is at ${base.version})")
-      val target = snapshot(spark, root, Some(toVersion))
-      val curLive = base.liveFiles.toSet
-      val tgtLive = target.liveFiles.toSet
-      val readds = target.liveFiles.filterNot(curLive)
-      val removes = base.liveFiles.filterNot(tgtLive)
-      val missing = readds.filterNot(f => Files.exists(dataDir(root).resolve(f)))
-      if (missing.nonEmpty)
-        throw new IllegalStateException(
-          s"restore to version $toVersion needs data file(s) vacuum " +
-            s"already reclaimed: ${missing.sorted.mkString(", ")} — " +
-            "the state is no longer reconstructable")
-      val missingDvs = target.liveDvs.filter { case (_, p) =>
-        !Files.exists(dvDir(root).resolve(p)) }
-      if (missingDvs.nonEmpty)
-        throw new IllegalStateException(
-          s"restore to version $toVersion needs deletion-vector sidecar(s) " +
-            s"vacuum already reclaimed: ${missingDvs.values.toSeq.sorted
-              .mkString(", ")}")
-      // per-file vector reconciliation over the files live in the TARGET:
-      // re-adds rebind their target vector (removal retired any binding);
-      // shared files rebind on difference; a vector gained since the
-      // target clears via a fresh empty sidecar
-      val dvActions = target.liveFiles.flatMap { f =>
-        val tgt = target.liveDvs.get(f)
-        val cur = if (curLive(f)) base.liveDvs.get(f) else None
-        (tgt, cur) match {
-          case (Some(p), _) if !curLive(f) || !cur.contains(p) => Some(f -> p)
-          case (None, Some(_)) =>
-            val name = s"${java.util.UUID.randomUUID()}.dv"
-            Files.createDirectories(dvDir(root))
-            // registered BEFORE the write so a partial write still cleans
-            pendingDvs = pendingDvs :+ (("", name))
-            Files.write(dvDir(root).resolve(name),
-              new TxDv.Bitmap().serialize): Unit
-            Some(f -> name)
-          case _ => None
+      if (toVersion == base.version) Left(base.version)
+      else {
+        if (toVersion > base.version || toVersion < 0)
+          throw new IllegalArgumentException(
+            s"restore: version $toVersion does not exist " +
+              s"(table is at ${base.version})")
+        val target = snapshot(spark, root, Some(toVersion))
+        val curLive = base.liveFiles.toSet
+        val tgtLive = target.liveFiles.toSet
+        val readds = target.liveFiles.filterNot(curLive)
+        val removes = base.liveFiles.filterNot(tgtLive)
+        val missing = readds.filterNot(f => Files.exists(dataDir(root).resolve(f)))
+        if (missing.nonEmpty)
+          throw new IllegalStateException(
+            s"restore to version $toVersion needs data file(s) vacuum " +
+              s"already reclaimed: ${missing.sorted.mkString(", ")} — " +
+              "the state is no longer reconstructable")
+        val missingDvs = target.liveDvs.filter { case (_, p) =>
+          !Files.exists(dvDir(root).resolve(p)) }
+        if (missingDvs.nonEmpty)
+          throw new IllegalStateException(
+            s"restore to version $toVersion needs deletion-vector sidecar(s) " +
+              s"vacuum already reclaimed: ${missingDvs.values.toSeq.sorted
+                .mkString(", ")}")
+        // per-file vector reconciliation over the files live in the TARGET:
+        // re-adds rebind their target vector (removal retired any binding);
+        // shared files rebind on difference; a vector gained since the
+        // target clears via a fresh empty sidecar — the only sidecars this
+        // write stages (the target's own must survive any unstaging)
+        val dvActions = target.liveFiles.flatMap { f =>
+          val tgt = target.liveDvs.get(f)
+          val cur = if (curLive(f)) base.liveDvs.get(f) else None
+          (tgt, cur) match {
+            case (Some(p), _) if !curLive(f) || !cur.contains(p) => Some(f -> p)
+            case (None, Some(_)) => Some(f -> writeDv(root, ledger, new TxDv.Bitmap()))
+            case _ => None
+          }
         }
-      }
-      val freshSidecars = pendingDvs.map(_._2)
-      val adds = readds.map(f =>
-        Staged(f, target.liveStats.getOrElse(f, Map.empty)))
-      // change capture: the overwrite discipline — current rows out,
-      // restored rows in (schemas may differ across an evolution; the
-      // union NULL-fills, and the feed reads under the commit's schema)
-      val curRows = readLive(spark, root, base, base.liveFiles)
-      val tgtRows = readLive(spark, root, target, target.liveFiles)
-      val (deleted, written) = (curRows.count(), tgtRows.count())
-      val cdc = writeCdc(spark, root,
-        curRows.withColumn("_change_type", lit("delete"))
-          .unionByName(tgtRows.withColumn("_change_type", lit("insert")),
-            allowMissingColumns = true))
-      pendingCdc = cdc
-      val v = base.version + 1
-      if (tryCommit(spark, root, v, "restore",
+        val adds = readds.map(f =>
+          Staged(f, target.liveStats.getOrElse(f, Map.empty)))
+        // change capture: the overwrite discipline — current rows out,
+        // restored rows in (schemas may differ across an evolution; the
+        // union NULL-fills, and the feed reads under the commit's schema)
+        val curRows = readLive(spark, root, base, base.liveFiles)
+        val tgtRows = readLive(spark, root, target, target.liveFiles)
+        val (deleted, written) = (curRows.count(), tgtRows.count())
+        val cdc = writeCdc(spark, root, ledger,
+          curRows.withColumn("_change_type", lit("delete"))
+            .unionByName(tgtRows.withColumn("_change_type", lit("insert")),
+              allowMissingColumns = true))
+        Right(Publish("restore",
           Map("rows_written" -> written, "rows_deleted" -> deleted,
             "restored_version" -> toVersion),
-          adds, removes, cdc = cdc, dvActions = dvActions,
-          schemaJson = target.schemaJson,
-          protocolUpgrade = featureProtocol(base, dvs = dvActions.nonEmpty,
-            cdc = cdc.nonEmpty)))
-        return v
-      dropCdc(root, cdc)
-      freshSidecars.foreach(p =>
-        Files.deleteIfExists(dvDir(root).resolve(p)): Unit)
-      pendingCdc = Nil
-      pendingDvs = Nil
-      attempt += 1
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        dropCdc(root, pendingCdc)
-        // only the fresh EMPTY sidecars are this attempt's staging; the
-        // target's own sidecars must survive
-        pendingDvs.foreach { case (_, p) =>
-          Files.deleteIfExists(dvDir(root).resolve(p)): Unit }
-        throw e
+          adds, removes, cdc = cdc, dvs = dvActions,
+          schemaJson = target.schemaJson))
+      }
     }
-    throw new IllegalStateException(
-      s"restore lost $MaxRetries commit races at $root")
-  }
 
   /** Bin-packing COMPACTION: rewrite the current snapshot's live data
     * files into `targetFiles` files, committed as one remove+add version
@@ -2671,38 +2542,29 @@ object TxTable {
     * for free, since the data is being rewritten anyway.
     */
   def compact(spark: SparkSession, root: String, targetFiles: Int = 1,
-              sortCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil): Long = {
-    var attempt = 0
-    while (attempt < MaxRetries) {
-      val base = snapshot(spark, root, None)
-      assertWritable(root, base)
+              sortCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil): Long =
+    commitLoop(spark, root, "compact") { (base, ledger) =>
       // a table carrying deletion vectors always compacts: compaction is
       // the pass that MATERIALIZES merge-on-read deletes into clean files
       if (base.liveFiles.size <= targetFiles && base.liveDvs.isEmpty)
-        return base.version // no-op
-      val live = readLive(spark, root, base, base.liveFiles)
-      val arranged =
-        if (sortCols.nonEmpty)
-          live.repartitionByRange(targetFiles, sortCols.map(col): _*)
-            .sortWithinPartitions(sortCols.map(col): _*)
-        else live.repartition(targetFiles)
-      val rows = live.count()
-      val adds = writeData(spark, root, arranged, bloomCols)
-      // rebase over PURE APPENDS (r13): compaction reads every base live
-      // file, so any racing remove/dv conflicts — but a blind append's
-      // files simply stay live beside the compacted layout
-      commitWithRebase(root, base.version, base.liveFiles.toSet, _ => false) { v =>
-        tryCommit(spark, root, v, "compact",
-          Map("rows_written" -> rows), adds, base.liveFiles, dataChange = false)
-      } match {
-        case Some(v) => return v
-        case None =>
-          adds.foreach(a => Files.deleteIfExists(dataDir(root).resolve(a.name)))
-          attempt += 1
+        Left(base.version) // no-op
+      else {
+        val live = readLive(spark, root, base, base.liveFiles)
+        val arranged =
+          if (sortCols.nonEmpty)
+            live.repartitionByRange(targetFiles, sortCols.map(col): _*)
+              .sortWithinPartitions(sortCols.map(col): _*)
+          else live.repartition(targetFiles)
+        val rows = live.count()
+        val adds = writeData(spark, root, ledger, arranged, bloomCols)
+        // rebase over PURE APPENDS (r13): compaction reads every base live
+        // file, so any racing remove/dv conflicts — but a blind append's
+        // files simply stay live beside the compacted layout
+        Right(Publish("compact", Map("rows_written" -> rows), adds,
+          base.liveFiles, dataChange = false,
+          conflicts = rewriteConflicts(base.liveFiles.toSet, _ => false)))
       }
     }
-    throw new IllegalStateException(s"compact lost $MaxRetries commit races at $root")
-  }
 
   /** Z-ORDER compaction (the Delta `OPTIMIZE ZORDER BY` move): rewrite the
     * live snapshot into `targetFiles` files clustered by the interleaved
@@ -2716,54 +2578,45 @@ object TxTable {
     * optimistic-commit semantics as [[compact]] (`op = "compactz"`).
     */
   def compactZ(spark: SparkSession, root: String, targetFiles: Int,
-               xCol: String, yCol: String): Long = {
-    var attempt = 0
-    while (attempt < MaxRetries) {
-      val base = snapshot(spark, root, None)
-      assertWritable(root, base)
+               xCol: String, yCol: String): Long =
+    commitLoop(spark, root, "compactZ") { (base, ledger) =>
       if (base.liveFiles.size <= targetFiles && base.liveDvs.isEmpty)
-        return base.version // no-op (see compact: DVs force materialization)
-      val live = readLive(spark, root, base, base.liveFiles)
-      val cols = live.columns.toSeq
-      val mm = live.agg(min(col(xCol)).cast("double").as("x0"),
-        max(col(xCol)).cast("double").as("x1"),
-        min(col(yCol)).cast("double").as("y0"),
-        max(col(yCol)).cast("double").as("y1")).head()
-      val (x0, x1, y0, y1) =
-        (mm.getDouble(0), mm.getDouble(1), mm.getDouble(2), mm.getDouble(3))
-      // scale in DOUBLE space with a clamp: the old integer form
-      // ((c-lo)*65535 div span) wrapped Long for ranges past ~2^47 and
-      // truncated fractional double bounds — both silently scattering the
-      // lattice and voiding the clustering this rewrite exists to buy.
-      // Layout-only arithmetic: the row set is untouched either way.
-      def sc(c: String, lo: Double, hi: Double) =
-        if (hi == lo) lit(0L)
-        else least(lit(65535L), greatest(lit(0L),
-          floor((col(c).cast("double") - lit(lo)) / lit(hi - lo) * 65535.0)
-            .cast("long")))
-      val arranged = live
-        .withColumn("__zx", sc(xCol, x0, x1))
-        .withColumn("__zy", sc(yCol, y0, y1))
-        .withColumn("__z",
-          graft.functions.ZCurveExpressions.z2(spark, "__zx", "__zy"))
-        .repartitionByRange(targetFiles, col("__z"))
-        .sortWithinPartitions(col("__z"))
-        .select(cols.map(col): _*)
-      val rows = live.count()
-      val adds = writeData(spark, root, arranged)
-      // same pure-append rebase as [[compact]]
-      commitWithRebase(root, base.version, base.liveFiles.toSet, _ => false) { v =>
-        tryCommit(spark, root, v, "compactz",
-          Map("rows_written" -> rows), adds, base.liveFiles, dataChange = false)
-      } match {
-        case Some(v) => return v
-        case None =>
-          adds.foreach(a => Files.deleteIfExists(dataDir(root).resolve(a.name)))
-          attempt += 1
+        Left(base.version) // no-op (see compact: DVs force materialization)
+      else {
+        val live = readLive(spark, root, base, base.liveFiles)
+        val cols = live.columns.toSeq
+        val mm = live.agg(min(col(xCol)).cast("double").as("x0"),
+          max(col(xCol)).cast("double").as("x1"),
+          min(col(yCol)).cast("double").as("y0"),
+          max(col(yCol)).cast("double").as("y1")).head()
+        val (x0, x1, y0, y1) =
+          (mm.getDouble(0), mm.getDouble(1), mm.getDouble(2), mm.getDouble(3))
+        // scale in DOUBLE space with a clamp: the old integer form
+        // ((c-lo)*65535 div span) wrapped Long for ranges past ~2^47 and
+        // truncated fractional double bounds — both silently scattering the
+        // lattice and voiding the clustering this rewrite exists to buy.
+        // Layout-only arithmetic: the row set is untouched either way.
+        def sc(c: String, lo: Double, hi: Double) =
+          if (hi == lo) lit(0L)
+          else least(lit(65535L), greatest(lit(0L),
+            floor((col(c).cast("double") - lit(lo)) / lit(hi - lo) * 65535.0)
+              .cast("long")))
+        val arranged = live
+          .withColumn("__zx", sc(xCol, x0, x1))
+          .withColumn("__zy", sc(yCol, y0, y1))
+          .withColumn("__z",
+            graft.functions.ZCurveExpressions.z2(spark, "__zx", "__zy"))
+          .repartitionByRange(targetFiles, col("__z"))
+          .sortWithinPartitions(col("__z"))
+          .select(cols.map(col): _*)
+        val rows = live.count()
+        val adds = writeData(spark, root, ledger, arranged)
+        // same pure-append rebase as [[compact]]
+        Right(Publish("compactz", Map("rows_written" -> rows), adds,
+          base.liveFiles, dataChange = false,
+          conflicts = rewriteConflicts(base.liveFiles.toSet, _ => false)))
       }
     }
-    throw new IllegalStateException(s"compactZ lost $MaxRetries commit races at $root")
-  }
 
   /** Physically delete data files no version >= `keepFromVersion`
     * references — the retention GC — and (r12) the CHANGE files of commits
@@ -2861,7 +2714,7 @@ object TxTable {
     // sidecars referenced by SURVIVING checkpoints (both forms); the
     // parquet form's references come back through the distributed read
     val liveSidecars: Set[String] = kept.flatMap { p =>
-      val st = latestCheckpointStateOf(spark, root, p)
+      val st = cachedCheckpoint(spark, root, p)
       st.fileStats.values.flatMap(_.values).flatMap(_.bloom)
         .flatMap(_.sidecar)
     }.toSet
@@ -2909,26 +2762,19 @@ object TxTable {
     * specs exercise both sides of the window deterministically. */
   @volatile private[graft] var SidecarGraceMs: Long = 15L * 60L * 1000L
 
-  /** Parse ONE checkpoint manifest into its state (cache-backed — the same
-    * immutability key and eviction as [[cachedCheckpoint]]). */
-  private def latestCheckpointStateOf(spark: SparkSession, root: String,
-                                      p: Path): CheckpointState =
-    cachedCheckpoint(spark, root, p)
-
   /** Names of live data files containing at least one LIVE row matching
     * `pred` (DV-aware: a file whose only matches are already
-    * vector-deleted is not rewritten). */
-  /** Affected files AND the matching-row count for a DELETE/UPDATE — two
-    * actions BY DESIGN (r15 adjudication): a fused one-action variant
-    * (`agg(collect_set(when(hit, __file)), sum(when(hit, 1)))` over the
-    * full live set) was built and measured, and REJECTED — the aggregate
-    * must evaluate every row, so the predicate can no longer push down to
-    * the parquet scan, trading two SELECTIVE scans (stats/row-group
-    * skipping on both) for one FULL scan. At 100 TB a surgical mutation's
-    * predicate prunes almost everything; keeping pushdown on the discovery
-    * pass is worth the second (affected-files-only, also pushed-down)
-    * counting pass. Locally the fusion measured a wash-to-regression on
-    * the ACID stage items (24.4 → 27.1 s same-conditions).
+    * vector-deleted is not rewritten) — the discovery pass of DELETE and
+    * UPDATE, which count their matching rows in a second action over the
+    * affected files only. Two actions BY DESIGN (r15 adjudication): a
+    * fused one-action variant (`agg(collect_set(when(hit, __file)),
+    * sum(when(hit, 1)))` over the full live set) was built, measured, and
+    * REJECTED — the aggregate must evaluate every row, so the predicate
+    * can no longer push down to the parquet scan, trading two SELECTIVE
+    * scans (stats/row-group skipping on both) for one FULL scan. At 100 TB
+    * a surgical mutation's predicate prunes almost everything. Locally the
+    * fusion measured a wash-to-regression on the ACID stage items (24.4 →
+    * 27.1 s same-conditions).
     */
   private def filesMatching(spark: SparkSession, root: String, s: Snapshot,
                             pred: Column): Seq[String] =

@@ -2379,33 +2379,74 @@ class AcidSpec extends SparkSpec {
   }
 
   test("abnormal mutation exits unstage: a delete failing after staging leaves no data/cdc strays") {
+    // every write, not only delete: all of them commit through one loop,
+    // whose abnormal exits must unstage data, change and dv files alike
     val root = freshRoot()
     TxTable.append(spark, root, frame(1 to 40, "a").repartition(2))
-    val dataDir = java.nio.file.Paths.get(root, "data")
-    def dataFiles(): Set[String] =
-      java.nio.file.Files.list(dataDir).iterator().asScala
-        .map(_.getFileName.toString).toSet
-    val before = dataFiles()
-    // raceHook fires AFTER the attempt staged its rewrite + change files
-    // and right before the publish — the exact window where an abnormal
-    // exit (a failed job, a protocol refusal) used to leak staged files
+    // a live deletion vector, so compaction always runs and restoring v0
+    // stages a fresh empty vector for the file that gained one since
+    TxTable.deleteMor(spark, root, $"id" === 39L): Unit
+    def staged(): Set[String] = Seq("data", "cdc", "dv").flatMap { d =>
+      val dir = java.nio.file.Paths.get(root, d)
+      if (!java.nio.file.Files.isDirectory(dir)) Nil
+      else java.nio.file.Files.list(dir).iterator().asScala
+        .map(f => s"$d/${f.getFileName}").toSeq
+    }.toSet
+    val before = staged()
+    val src = (1 to 5).map(i => (i.toLong, "m", 7L)).toDF("id", "tag", "value")
+    val writes: Seq[(String, () => Long)] = Seq(
+      "evolveSchema" -> (() => TxTable.evolveSchema(spark, root,
+        frame(1 to 1, "s").schema.add("extra", "string"))),
+      "append" -> (() => TxTable.append(spark, root, frame(41 to 45, "b"))),
+      "appendOnce" -> (() =>
+        TxTable.appendOnce(spark, root, frame(41 to 45, "b"), "app", 0L)),
+      "delete" -> (() => TxTable.delete(spark, root, $"id" <= 10)),
+      "deleteMor" -> (() => TxTable.deleteMor(spark, root, $"id" <= 10)),
+      "update" -> (() =>
+        TxTable.update(spark, root, $"id" <= 10, Map("value" -> lit(0L)))),
+      "merge" -> (() => TxTable.merge(spark, root, src, Seq("id"), Seq("value"))),
+      "mergeFull" -> (() => TxTable.mergeFull(spark, root, src, Seq("id"),
+        Seq(TxTable.MergeClause(None,
+          TxTable.MergeUpdate(Map("value" -> col("__src_value"))))), Nil)),
+      "overwrite" -> (() => TxTable.overwrite(spark, root, frame(50 to 60, "o"))),
+      "restore" -> (() => TxTable.restore(spark, root, 0L)),
+      "compact" -> (() => TxTable.compact(spark, root)),
+      "compactZ" -> (() => TxTable.compactZ(spark, root, 1, "id", "value")))
+    // raceHook fires AFTER an attempt staged its files and right before
+    // the publish — the exact window where an abnormal exit (a failed job,
+    // a protocol refusal) used to leak staged files
     TxTable.raceHook = () => throw new RuntimeException("injected failure")
-    try {
-      val e = intercept[RuntimeException] {
-        TxTable.delete(spark, root, $"id" <= 10)
-      }
-      assert(e.getMessage == "injected failure")
+    try writes.foreach { case (name, write) =>
+      val e = intercept[RuntimeException](write())
+      assert(e.getMessage == "injected failure", s"$name: ${e.getMessage}")
+      assert(staged() == before,
+        s"failed $name leaked staged files: ${staged().diff(before)}")
     } finally TxTable.raceHook = () => ()
-    assert(dataFiles() == before,
-      s"failed delete leaked staged data files: ${dataFiles().diff(before)}")
-    val cdcDir = java.nio.file.Paths.get(root, "cdc")
-    assert(!java.nio.file.Files.isDirectory(cdcDir) ||
-      java.nio.file.Files.list(cdcDir).count() == 0,
-      "failed delete leaked staged change files")
     // the table is untouched and still mutable
-    assert(TxTable.read(spark, root).count() == 40)
+    assert(TxTable.snapshot(root).version == 1L)
+    assert(TxTable.read(spark, root).count() == 39)
     TxTable.delete(spark, root, $"id" <= 10)
-    assert(TxTable.read(spark, root).count() == 30)
+    assert(TxTable.read(spark, root).count() == 29)
+  }
+
+  test("SQL fixtures build for two sf dirs in one session: one catalog reaches every fixture root") {
+    // a second sf dir string over the same corpus; a catalog that kept the
+    // first build's root would not find the second build's table
+    val tmp = java.nio.file.Files.createTempDirectory("graft_sf_alias")
+    val alias = java.nio.file.Files.createSymbolicLink(
+      tmp.resolve("sf"), java.nio.file.Paths.get(Sf).toAbsolutePath)
+    try {
+      val q = SparkEntry.queries("xacid_sql_merge")
+      val first = q(spark, Sf).collect().toSet
+      val second = q(spark, alias.toString).collect().toSet
+      assert(first.nonEmpty && second == first)
+      assert(graft.operators.AcidOps.sqlMergeTable(spark, alias.toString) !=
+        graft.operators.AcidOps.sqlMergeTable(spark, Sf),
+        "the alias must build its own fixture root")
+    } finally {
+      java.nio.file.Files.delete(alias)
+      java.nio.file.Files.delete(tmp)
+    }
   }
 
   test("overwrite unstages on a mid-loop failure, not only on schema conflicts") {
