@@ -141,6 +141,7 @@ object ZRangePruning extends Rule[LogicalPlan] {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => ZRangePruning)
+    ext.injectOptimizerRule(_ => graft.sources.TxEmptyScan)
     ext.injectPlannerStrategy(_ => TopKPerKeyStrategy)
     // SQL MERGE INTO / UPDATE over the commit-log format (r14): rewrites
     // resolved MergeIntoTable/UpdateTable on graft-tx catalog tables into

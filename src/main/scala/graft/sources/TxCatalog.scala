@@ -304,14 +304,8 @@ class TxV2Table(private[sources] val root: String, ident: String,
   override def name(): String =
     ident + asOf.fold("")(v => s"@v$v")
 
-  override def schema(): StructType = {
-    val s = TxTable.snapshot(spark, root, asOf)
-    s.schemaJson.map(TxTable.schemaOf).getOrElse {
-      val f = s.liveFiles.headOption.getOrElse(
-        throw new IllegalStateException(s"empty tx table at $root"))
-      spark.read.parquet(s"$root/data/$f").schema
-    }
-  }
+  override def schema(): StructType =
+    TxTable.tableSchema(spark, root, TxTable.snapshot(spark, root, asOf))
 
   // AUTOMATIC_SCHEMA_EVOLUTION (r15): lets the analyzer's
   // ResolveMergeIntoSchemaEvolution widen this table for

@@ -64,11 +64,7 @@ object TxChangesSource {
       throw new IllegalArgumentException("graft-tx-changes needs option root=<table dir>"))
 
   /** The feed's fixed schema: the table schema as of source creation plus
-    * `_change_type` and `_commit_version`. Pre-schema logs fall back to a
-    * live file's footer (same rule as the batch reader). The footer read
-    * goes through the PROVIDER'S session, not `SparkSession.active`
-    * (ADVICE r12) — in a multi-session deployment the active session can
-    * be a different one with different conf/catalog state. */
+    * `_change_type` and `_commit_version`. */
   private[sources] def schemaFor(spark: SparkSession, root: String): StructType =
     tableSchemaFor(spark, root)
       .add("_change_type", StringType, nullable = false)
@@ -76,18 +72,12 @@ object TxChangesSource {
 
   /** The TABLE schema half of [[schemaFor]] — also the fixed schema of
     * the r15 table stream ([[TxStreamSource]]), which carries no feed
-    * columns. */
-  private[sources] def tableSchemaFor(spark: SparkSession, root: String): StructType = {
-    // the snapshot too threads the provider's session (ADVICE r13): a
-    // checkpoint-accelerated snapshot can run a distributed parquet read,
-    // which must land on THIS session, not whichever is `active`
-    val s = TxTable.snapshot(spark, root, None)
-    s.schemaJson.map(TxTable.schemaOf).getOrElse {
-      val f = s.liveFiles.headOption.getOrElse(
-        throw new IllegalStateException(s"empty tx table at $root"))
-      spark.read.parquet(s"$root/data/$f").schema
-    }
-  }
+    * columns: the latest snapshot under the schema rule
+    * ([[TxTable.tableSchema]]). Both go through the PROVIDER'S session,
+    * not `SparkSession.active` (ADVICE r12/r13): a checkpoint-accelerated
+    * snapshot or a pre-schema footer read must land on THIS session. */
+  private[sources] def tableSchemaFor(spark: SparkSession, root: String): StructType =
+    TxTable.tableSchema(spark, root, TxTable.snapshot(spark, root, None))
 }
 
 /** Tiny per-source PERSISTED state (r15, closing the restart-regression

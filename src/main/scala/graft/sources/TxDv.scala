@@ -1,11 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, BooleanType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
-
 /** DELETION VECTORS for [[TxTable]] (r12) — the merge-on-read DELETE the
   * copy-on-write path cannot afford at the margin: rewriting a gigabyte
   * file to delete a kilobyte of rows is the write amplification every
@@ -14,20 +8,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * BITMAP over the file's row positions (parquet `_metadata.row_index` —
   * stable per file because parquet row order is immutable) into a sidecar
   * under `dv/`, and commits `dv` actions binding file → sidecar. Readers
-  * apply the bitmap as an anti-filter at scan time; writes that rewrite a
-  * file (copy-on-write delete/merge, compaction) read THROUGH the vector
-  * and drop it with the file — compaction is what materializes deletes.
+  * mask the marked positions at scan time ([[TxDvParquetFileFormat]],
+  * under [[TxTable]]'s one scan); writes that rewrite a file
+  * (copy-on-write delete/merge, compaction) read THROUGH the vector and
+  * drop it with the file — compaction is what materializes deletes.
   *
   * The bitmap is a plain little-endian long-word bitset serialized base64
   * into the sidecar (no compression: a DV's size is deleted-rows/8 bits,
-  * and the sidecar is read once per scan PLAN, driver-side, for affected
-  * files only). A re-delete on an already-vectored file merges bitmaps
-  * (OR) and commits a REPLACEMENT vector — log replay keeps the latest.
+  * and a scan reads it executor-side, once per process, for the files it
+  * opens — [[BitmapCache]]). A re-delete on an already-vectored file
+  * merges bitmaps (OR) and commits a REPLACEMENT vector — log replay
+  * keeps the latest.
   */
 object TxDv {
 
-  /** Growable bitset over row positions (Serializable: it ships to
-    * executors inside [[DvMap]] via the expression reference). */
+  /** Growable bitset over row positions. */
   final class Bitmap(var words: Array[Long]) extends Serializable {
     def this() = this(new Array[Long](0))
     private def ensure(word: Int): Unit =
@@ -121,38 +116,9 @@ object TxDv {
     */
   final case class DvRefs(dvDir: String, refs: Map[String, String])
       extends Serializable {
-    def isEmpty: Boolean = refs.isEmpty
     /** Sidecar name bound to a BARE data-file name, if any. */
     def refOf(fileName: String): Option[String] = refs.get(fileName)
-    /** Per-instance file→bitmap memo so the PER-ROW probe is one
-      * lock-free ConcurrentHashMap read — [[BitmapCache]]'s synchronized
-      * LRU is only touched on the FIRST probe of each file (32 scan
-      * threads serializing on one monitor per row would undo the win of
-      * shipping descriptors). Transient: rebuilt empty wherever the
-      * closure deserializes, bounded by this scan's vectored-file count.
-      */
-    @transient private lazy val resolved =
-      new java.util.concurrent.ConcurrentHashMap[String, Bitmap]()
-    def deleted(file: UTF8String, rowIndex: Long): Boolean = {
-      val f = file.toString
-      // scans see absolute paths; dv keys are bare file names
-      val name = f.substring(f.lastIndexOf('/') + 1)
-      val hit = resolved.get(name)
-      if (hit != null) return hit.get(rowIndex)
-      refs.get(name) match {
-        case Some(ref) =>
-          val bm = BitmapCache.get(dvDir, ref)
-          resolved.putIfAbsent(name, bm): Unit
-          bm.get(rowIndex)
-        case None =>
-          resolved.putIfAbsent(name, EmptyBitmap): Unit
-          false
-      }
-    }
   }
-
-  /** Shared zero-bit vector for [[DvRefs]]' negative memo entries. */
-  private val EmptyBitmap = new Bitmap()
 
   /** Process-wide sidecar bitmap cache (executor-side on a cluster; the
     * one JVM in local mode). Sidecars are immutable once written — a
@@ -183,34 +149,4 @@ object TxDv {
       }
     }
   }
-}
-
-/** (file_name, row_index) → row SURVIVES (not marked deleted) — the scan's
-  * merge-on-read anti-filter. Null-intolerant like any predicate input;
-  * codegen is one static-shaped virtual call on the referenced [[TxDv
-  * .DvRefs]], so the filter stays inside whole-stage codegen. Since r15
-  * the reference object carries sidecar NAMES only — bitmap bytes load
-  * executor-side through [[TxDv.BitmapCache]] at first probe, so the task
-  * binary is independent of how many rows the vectors mark.
-  */
-case class DvAntiFilter(left: Expression, right: Expression,
-                        dvs: TxDv.DvRefs) extends BinaryExpression {
-  override def dataType: DataType = BooleanType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == LongType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "dv_anti_filter expects (string file, long row_index)")
-
-  override def nullSafeEval(f: Any, r: Any): Any =
-    !dvs.deleted(f.asInstanceOf[UTF8String], r.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("dvRefs", dvs, classOf[TxDv.DvRefs].getName)
-    nullSafeCodeGen(ctx, ev, (f, r) => s"${ev.value} = !$ref.deleted($f, $r);")
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
 }

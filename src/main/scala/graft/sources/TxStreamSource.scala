@@ -101,8 +101,7 @@ class TxStreamSource(spark: SparkSession, root: String,
     }
     val files = range.filter(_.dataChange).flatMap(_.adds)
     if (files.isEmpty) None
-    else Some(spark.read.schema(schema0)
-      .parquet(files.map(f => s"$root/data/$f"): _*))
+    else Some(TxTable.scan(spark, root, files, schema0))
   }
 
   override def getBatch(start: Option[Offset], end: Offset): DataFrame = {

@@ -1956,18 +1956,28 @@ class AcidSpec extends SparkSpec {
       TxTable.append(spark, root,
         rows.toDF("id", "tag", "value").repartition(1), bloomCols = Seq("id"))
     }
-    val df = spark.read.format("graft-tx").load(root).where($"id" === 50L)
-    assert(df.collect().map(_.getLong(0)).toSeq == Seq(50L))
     val (kept, skipped) = TxTable.pruneFiles(spark, root, $"id" === 50L)
     assert(kept.size == 1 && skipped.size == 3)
-    // plan shape: the connector's scan opened exactly readWhere's kept set
-    val scan = df.queryExecution.executedPlan.collectLeaves().collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.get
-    val index = scan.relation.location.asInstanceOf[TxFileIndex]
-    assert(index.lastListing.contains((1, 3)), s"got ${index.lastListing}")
-    assert(scan.metrics("numFiles").value == 1,
-      s"scan opened ${scan.metrics("numFiles").value} files")
+    // plan shape: the connector's scan opened exactly pruneFiles' kept set,
+    // and the Scala API's readWhere plans that same scan
+    Seq(spark.read.format("graft-tx").load(root).where($"id" === 50L),
+        TxTable.readWhere(spark, root, $"id" === 50L)).foreach { df =>
+      assert(df.collect().map(_.getLong(0)).toSeq == Seq(50L))
+      val scan = df.queryExecution.executedPlan.collectLeaves().collectFirst {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+      }.get
+      val index = scan.relation.location.asInstanceOf[TxFileIndex]
+      assert(index.lastListing.contains((1, 3)), s"got ${index.lastListing}")
+      assert(scan.metrics("numFiles").value == 1,
+        s"scan opened ${scan.metrics("numFiles").value} files")
+    }
+    // a probe the stats rule out in every file plans no scan at all
+    Seq(spark.read.format("graft-tx").load(root).where($"id" === 500L),
+        TxTable.readWhere(spark, root, $"id" === 500L)).foreach { df =>
+      assert(df.collect().isEmpty)
+      assert(!df.queryExecution.executedPlan.collectLeaves().exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.FileSourceScanExec]))
+    }
     // SQL surface over the registered source
     spark.read.format("graft-tx").load(root).createOrReplaceTempView("tx_conn")
     assert(spark.sql("SELECT count(*) AS n FROM tx_conn WHERE id > 90")
@@ -2002,6 +2012,12 @@ class AcidSpec extends SparkSpec {
       "fixture needs vectored AND clean files")
     val conn = spark.read.format("graft-tx").load(root)
     val lib = TxTable.read(spark, root)
+    def formatOf(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.collectLeaves().collectFirst {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+      }.get.relation.fileFormat
+    // the library's reads plan the same DV-masking format
+    assert(formatOf(lib).isInstanceOf[TxDvParquetFileFormat])
     // row-identical to the library's own MoR scan
     assert(conn.count() == lib.count())
     assert(conn.exceptAll(lib).count() == 0 && lib.exceptAll(conn).count() == 0)
@@ -2060,7 +2076,28 @@ class AcidSpec extends SparkSpec {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }.get
     assert(!cleanScan.relation.fileFormat.isInstanceOf[TxDvParquetFileFormat])
+    assert(!formatOf(TxTable.read(spark, root)).isInstanceOf[TxDvParquetFileFormat])
     assert(clean.count() == lib.count())
+  }
+
+  test("stats-pruned discovery: update and delete never open a live file the commit-log stats rule out") {
+    val root = freshRoot()
+    TxTable.append(spark, root, frame(1 to 50, "lo").repartition(1))
+    TxTable.append(spark, root, frame(101 to 150, "hi").repartition(1))
+    val (kept, skipped) = TxTable.pruneFiles(spark, root, $"id" > 100L)
+    assert(kept.size == 1 && skipped.size == 1)
+    // the ruled-out file's bytes become garbage: still live and present
+    // (the scan's coverage check passes), but any attempt to open it fails
+    val ruledOut = skipped.head
+    java.nio.file.Files.write(java.nio.file.Paths.get(root, "data", ruledOut),
+      "not a parquet file".getBytes("UTF-8")): Unit
+    TxTable.update(spark, root, $"id" > 140L, Map("value" -> lit(-1L))): Unit
+    assert(TxTable.commits(root).last.metrics == Map("rows_updated" -> 10L))
+    TxTable.delete(spark, root, $"id" > 145L): Unit
+    assert(TxTable.commits(root).last.metrics == Map("rows_deleted" -> 5L))
+    assert(TxTable.snapshot(root).liveFiles.contains(ruledOut))
+    assert(TxTable.readWhere(spark, root, $"id" > 100L)
+      .where($"value" === -1L).count() == 5L)
   }
 
   test("graft-tx readChangeFeed: the batch feed through the registered source — bounded ranges, SQL surface, loud refusals") {
