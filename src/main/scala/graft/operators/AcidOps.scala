@@ -396,8 +396,8 @@ object AcidOps {
     * whose MUTATION history is driven entirely by SQL statements through
     * the catalog — v1 is a star-form `MERGE INTO` (the canonical upsert:
     * price corrections update matched rows, resubmitted orders insert),
-    * v2 an arithmetic-predicate `UPDATE` (the full-Catalyst surface
-    * `SupportsDelete`'s V1 filters cannot express). Both land as the
+    * v2 an arithmetic-predicate `UPDATE` (any Catalyst predicate, not a
+    * V1 filter tree). Both land as the
     * format's own commits — dup-key rejection, CDF pre/post images, and
     * rebase all ride the SQL path because it IS [[TxTable.merge]] /
     * [[TxTable.update]] behind [[graft.sources.TxDmlRewrite]]. */

@@ -134,18 +134,20 @@ object ZRangePruning extends Rule[LogicalPlan] {
 }
 
 /** Session-extension entry point: `spark.sql.extensions=graft.plans.GraftExtensions`.
-  * Injects [[ZRangePruning]] into the optimizer; the library's queries are
-  * correct without it (the injected conjunct is redundant by construction),
-  * so the extension is purely a scan-pruning accelerator.
+  * The optimizer rules [[ZRangePruning]] and [[graft.sources.TxEmptyScan]]
+  * and the [[TopKPerKeyStrategy]] only accelerate: the library's queries
+  * are correct without them. [[graft.sources.TxDmlRewrite]] is required:
+  * it plans every read, DELETE, UPDATE and MERGE of a
+  * [[graft.sources.TxCatalog]] table, and that catalog refuses a session
+  * without this extension.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => ZRangePruning)
     ext.injectOptimizerRule(_ => graft.sources.TxEmptyScan)
     ext.injectPlannerStrategy(_ => TopKPerKeyStrategy)
-    // SQL MERGE INTO / UPDATE over the commit-log format (r14): rewrites
-    // resolved MergeIntoTable/UpdateTable on graft-tx catalog tables into
-    // the format's own mutation commands — the Delta post-hoc seam
+    // the SQL catalog's reads and DML (MERGE INTO / UPDATE / DELETE) over
+    // the commit-log format — the Delta post-hoc seam
     ext.injectPostHocResolutionRule(_ => graft.sources.TxDmlRewrite)
   }
 }

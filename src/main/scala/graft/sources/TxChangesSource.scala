@@ -43,12 +43,12 @@ class TxChangesSourceProvider extends StreamSourceProvider with DataSourceRegist
                             providerName: String,
                             parameters: Map[String, String]): (String, StructType) =
     (shortName(), TxChangesSource.schemaFor(ctx.sparkSession,
-      TxChangesSource.rootOf(parameters)))
+      TxSource.rootOf(parameters, "changes")))
 
   override def createSource(ctx: SQLContext, metadataPath: String,
                             schema: Option[StructType], providerName: String,
                             parameters: Map[String, String]): Source =
-    new TxChangesSource(ctx.sparkSession, TxChangesSource.rootOf(parameters),
+    new TxChangesSource(ctx.sparkSession, TxSource.rootOf(parameters, "changes"),
       parameters.get("startVersion").map(_.toLong).getOrElse(0L),
       parameters.get("maxVersionsPerTrigger").map { v =>
         val n = v.toLong
@@ -59,10 +59,6 @@ class TxChangesSourceProvider extends StreamSourceProvider with DataSourceRegist
 }
 
 object TxChangesSource {
-  private[sources] def rootOf(parameters: Map[String, String]): String =
-    parameters.getOrElse("root",
-      throw new IllegalArgumentException("graft-tx-changes needs option root=<table dir>"))
-
   /** The feed's fixed schema: the table schema as of source creation plus
     * `_change_type` and `_commit_version`. */
   private[sources] def schemaFor(spark: SparkSession, root: String): StructType =

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, Attribu
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
 /** SQL `MERGE INTO` / `UPDATE` over the commit-log format (r14, VERDICT
@@ -47,9 +48,14 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
   *    condition (the full rewrite path, because [[TxTable.update]] takes
   *    Columns directly).
   *  - `DELETE FROM t WHERE pred` — likewise the FULL [[TxTable.delete]]
-  *    path with any Catalyst-expressible predicate; the
-  *    `SupportsDelete`/V1-filter surface remains for non-SQL callers,
-  *    but SQL no longer inherits its translation ceiling.
+  *    path with any Catalyst-expressible predicate.
+  *
+  * READS: after the DML cases, every remaining relation over a
+  * [[TxV2Table]] — a SELECT, a subquery, a CTAS or INSERT query, a MERGE
+  * source — becomes a `LogicalRelation` over the table's pinned
+  * [[TxV2Table.relation]], TxTable's one scan, keeping the V2 output
+  * attribute ids (the V2-to-V1 fallback of Delta's `DeltaAnalysis`). The
+  * catalog's tables are therefore never scanned through DSv2.
   *
   * Resolved target/source ATTRIBUTE IDS do not survive into the
   * commands' re-planned reads, so target-side expressions are rewritten
@@ -59,7 +65,7 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
   */
 object TxDmlRewrite extends Rule[LogicalPlan] {
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperators {
+  override def apply(plan: LogicalPlan): LogicalPlan = TxDmlRules.scans(plan.resolveOperators {
     case m: MergeIntoTable if m.resolved =>
       TxDmlRules.asTxTable(m.targetTable) match {
         case Some(t) => TxDmlRules.mergeCommand(t, m)
@@ -70,16 +76,14 @@ object TxDmlRewrite extends Rule[LogicalPlan] {
         case Some(t) => TxDmlRules.updateCommand(t, u)
         case None => u
       }
-    // DELETE routes through the same full-Catalyst command (r14): the
-    // SupportsDelete surface stays for non-SQL callers, but SQL no longer
-    // inherits its V1-filter ceiling — an arithmetic predicate
-    // (`WHERE id % 5 = 0`) deletes instead of failing analysis
+    // DELETE routes through the same full-Catalyst command (r14): any
+    // Catalyst predicate (`WHERE id % 5 = 0`) deletes
     case d: DeleteFromTable if d.resolved =>
       TxDmlRules.asTxTable(d.table) match {
         case Some(t) => TxDmlRules.deleteCommand(t, d)
         case None => d
       }
-  }
+  })
 }
 
 private[sources] object TxDmlRules {
@@ -93,6 +97,16 @@ private[sources] object TxDmlRules {
       case _ => None
     }
     case _ => None
+  }
+
+  /** `plan` with every read of a [[TxV2Table]] as the table's one scan,
+    * under the V2 relation's output attribute ids. A subquery's reads
+    * convert when the analyzer resolves the subquery's own plan. */
+  def scans(plan: LogicalPlan): LogicalPlan = plan.resolveOperatorsUp {
+    case r: DataSourceV2Relation => r.table match {
+      case t: TxV2Table => LogicalRelation(t.relation, r.output, None, false, None)
+      case _ => r
+    }
   }
 
   private def refuse(what: String): Nothing =
@@ -282,7 +296,9 @@ private[sources] object TxDmlRules {
                      org.apache.spark.sql.catalyst.expressions.EvalMode.ANSI)
         Alias(cast, tk.name)()
       } ++ referencedSrc.map(a => Alias(a, a.name)())
-    TxMergeFullCommand(t.root, Project(projectList, m.sourceTable), keyNames,
+    // a command's inner source is not transformed by later rules: its
+    // catalog reads become scans here
+    TxMergeFullCommand(t.root, Project(projectList, scans(m.sourceTable)), keyNames,
       matchedClauses.map(_._2), insertClauses.map(_._2), nmbsClauses.map(_._2))
   }
 

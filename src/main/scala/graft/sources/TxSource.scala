@@ -115,16 +115,7 @@ class TxSource extends RelationProvider with DataSourceRegister
           "compactor's job: TxTable.compact/compactZ)")
     val bloomCols = parameters.get("bloomCols")
       .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty)).getOrElse(Nil)
-    // existence = any published commit file — a cheap directory probe,
-    // not a full log replay (this runs per batch write)
-    val exists = {
-      val log = java.nio.file.Paths.get(root, "_log")
-      java.nio.file.Files.isDirectory(log) && {
-        val s = java.nio.file.Files.list(log)
-        try s.anyMatch(p => p.getFileName.toString.endsWith(".json"))
-        finally s.close()
-      }
-    }
+    val exists = TxTable.exists(root)
     mode match {
       case SaveMode.Append =>
         TxTable.append(ctx.sparkSession, root, data, bloomCols = bloomCols): Unit
@@ -207,7 +198,7 @@ class TxSource extends RelationProvider with DataSourceRegister
     //     .option("startingVersion", "0")[.option("endingVersion", "7")]
     //     .load(root)
     // Rows cross one conversion boundary (a feed is consumed sequentially
-    // by version, never predicate-pruned — the catalog-bridge trade);
+    // by version, never predicate-pruned);
     // the streaming twin is the registered `graft-tx-changes` source.
     // audit surface (the DESCRIBE HISTORY analog): option history=true
     // returns the commit log as data — version, op, row metrics; it
@@ -287,8 +278,9 @@ class TxSource extends RelationProvider with DataSourceRegister
 }
 
 private[sources] object TxSource {
-  /** The table root of a `graft-tx` surface (read, write, stream or
-    * sink): option `path` (what `load`/`save` set), else `root`. */
+  /** The table root of a `graft-tx` surface (read, write, stream, sink
+    * or the `graft-tx-changes` feed): option `path` (what `load`/`save`
+    * set), else `root`. */
   def rootOf(parameters: Map[String, String], surface: String): String =
     parameters.get("path").orElse(parameters.get("root")).getOrElse {
       val how = surface match {

@@ -118,6 +118,13 @@ object TxTable {
   private def dvDir(root: String): Path = Paths.get(root, "dv")
   private def bloomsDir(root: String): Path = logDir(root).resolve("blooms")
 
+  /** THE TABLE-EXISTENCE RULE: `root` is a table once its v0 commit file
+    * is published. Commit files are never deleted, so this is "some
+    * commit exists" in one stat — never the `_log/` directory, which a
+    * first commit creates before it links v0. */
+  def exists(root: String): Boolean =
+    Files.exists(logDir(root).resolve(f"${0L}%020d.json"))
+
   /** Parse every committed version in order.
     *
     * Integrity contract (VERDICT r9 #5): a commit file must parse as
@@ -768,7 +775,7 @@ object TxTable {
 
   /** ATOMIC CTAS staging (r15, VERDICT r14 #5) — the write half of a
     * staged create: data files land under a root that is NOT yet a table
-    * (`_log/` does not exist until [[commitCtas]] publishes), so a racing
+    * (no v0 commit until [[commitCtas]] publishes), so a racing
     * reader sees "no such table" the whole time. Returns the staged adds
     * plus the footer-counted row total for the commit's metrics. The
     * ledger is unused: [[abortCtas]] unstages by the returned adds. */
@@ -796,12 +803,12 @@ object TxTable {
   }
 
   /** The failure half of atomic CTAS: drop the staged files and, when the
-    * root never became a table (no `_log/`), the staging directories too —
+    * root never became a table ([[exists]]), the staging directories too —
     * a failed CTAS leaves NO table behind (no created-empty state for a
     * retry to trip over). */
   private[sources] def abortCtas(root: String, adds: Seq[Staged]): Unit = {
     adds.foreach(a => Files.deleteIfExists(dataDir(root).resolve(a.name)))
-    if (!Files.isDirectory(logDir(root))) {
+    if (!exists(root)) {
       // remove only what staging created, only if empty — a concurrent
       // CTAS that WON may be using the same dirs
       def rmIfEmpty(p: Path): Unit =
@@ -1427,10 +1434,8 @@ object TxTable {
       (p.adds.size + p.removes.size + p.cdc.size + p.dvs.size).toLong): Unit
     lines += mapper.writeValueAsString(endN)
     // staged beside `_log/`, which is created only right before the
-    // link: a first commit's log dir exists without its commit file for
-    // two syscalls, not for the whole serialize-and-write (a reader that
-    // treats `_log/` as "the table exists" — atomic CTAS — sees it empty
-    // only in that window)
+    // link; readers never take `_log/` for the table ([[exists]] asks
+    // for the v0 file the link publishes)
     Files.createDirectories(Paths.get(root))
     val tmp = Files.createTempFile(Paths.get(root), ".commit", ".tmp")
     Files.write(tmp, lines.result().mkString("\n").getBytes("UTF-8"))

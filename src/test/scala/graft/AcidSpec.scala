@@ -1,6 +1,8 @@
 package graft
 
-import graft.sources.TxTable
+import graft.sources.{TxFileIndex, TxTable}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.{FileSourceScanExec, RowDataSourceScanExec}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -15,6 +17,10 @@ class AcidSpec extends SparkSpec {
 
   private def freshRoot(): String =
     java.nio.file.Files.createTempDirectory("graft_tx").toString
+
+  // physical-plan search that looks inside adaptive plans
+  private object Aqe
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
   private def frame(ids: Range, tag: String) =
     ids.map(i => (i.toLong, tag, i * 10L)).toDF("id", "tag", "value")
@@ -1820,10 +1826,28 @@ class AcidSpec extends SparkSpec {
     TxTable.append(spark, troot, frame(1 to 20, "a"))
     spark.conf.set("spark.sql.catalog.graft_cat", "graft.sources.TxCatalog")
     spark.conf.set("spark.sql.catalog.graft_cat.root", base)
-    // SELECT through the V1 bridge (filters pushed into readWhere)
-    assert(spark.sql(
+    // SELECT plans TxTable's one scan: a FileSourceScanExec over the
+    // TxFileIndex, no row-converting V1 scan
+    val sel = spark.sql(
       "SELECT count(*) AS n FROM graft_cat.default.ev WHERE id > 15")
-      .head().getLong(0) == 5L)
+    assert(sel.head().getLong(0) == 5L)
+    val selPlan = sel.queryExecution.executedPlan
+    val selScans = Aqe.collect(selPlan) { case f: FileSourceScanExec => f }
+    assert(selScans.size == 1 &&
+      selScans.head.relation.location.isInstanceOf[TxFileIndex], s"$selPlan")
+    assert(Aqe.collect(selPlan) { case r: RowDataSourceScanExec => r }.isEmpty)
+    // the optimizer sizes the table by its live data bytes
+    val liveBytes = TxTable.snapshot(troot).liveFiles
+      .map(f => java.nio.file.Files.size(java.nio.file.Paths.get(troot, "data", f))).sum
+    assert(spark.table("graft_cat.default.ev").queryExecution.optimizedPlan
+      .stats.sizeInBytes == BigInt(liveBytes))
+    // a key the stats rule out plans the empty relation: no scan, no job
+    val ruledOut = spark.sql("SELECT * FROM graft_cat.default.ev WHERE id = 5000")
+      .queryExecution.optimizedPlan
+    assert(ruledOut.collectLeaves().forall {
+      case l: LocalRelation => l.data.isEmpty
+      case _ => false
+    }, s"$ruledOut")
     // INSERT INTO = an ordinary append commit (schema-validated)
     spark.sql("INSERT INTO graft_cat.default.ev VALUES (100, 'sql', 1000)")
     assert(TxTable.read(spark, troot).count() == 21)
@@ -1841,16 +1865,48 @@ class AcidSpec extends SparkSpec {
     spark.sql("DELETE FROM graft_cat.default.ev WHERE id % 7 = 0")
     assert(TxTable.read(spark, troot).where($"id" % 7 === 0).count() == 0)
     assert(TxTable.commits(troot).last.metrics("rows_deleted") == 2) // 7, 14
-    // time travel reads the log, not the latest state
+    // time travel reads the log, not the latest state: v0's file set
     assert(spark.sql(
       "SELECT count(*) AS n FROM graft_cat.default.ev VERSION AS OF 0")
       .head().getLong(0) == 20L)
-    // projection-only and COUNT(*) shapes cross the bridge too
+    val v0Files = spark.sql("SELECT * FROM graft_cat.default.ev VERSION AS OF 0")
+      .inputFiles.map(_.split('/').last).toSet
+    assert(v0Files == TxTable.snapshot(troot, Some(0L)).liveFiles.toSet &&
+      v0Files != TxTable.snapshot(troot).liveFiles.toSet, s"got $v0Files")
+    // projection-only and COUNT(*) shapes
     assert(spark.sql("SELECT count(*) AS n FROM graft_cat.default.ev")
       .head().getLong(0) == 14L)
     assert(spark.sql(
       "SELECT tag FROM graft_cat.default.ev WHERE id = 100").head()
       .getString(0) == "sql")
+    // a join with a small filtered catalog side broadcasts it: both sides
+    // carry real sizes
+    TxTable.append(spark, s"$base/default/dim",
+      (18 to 22).map(i => (i.toLong, "d", i * 1000L)).toDF("id", "tag", "value"))
+    val joined = spark.sql(
+      """SELECT e.id, d.value FROM graft_cat.default.ev e
+        |JOIN graft_cat.default.dim d ON e.id = d.id WHERE d.value > 18000""".stripMargin)
+    assert(joined.queryExecution.sparkPlan.collect {
+      case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => j
+    }.nonEmpty, s"${joined.queryExecution.sparkPlan}")
+    assert(joined.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      Set((19L, 19000L), (20L, 20000L)))
+    // a subquery's catalog read is the same scan
+    assert(spark.sql(
+      """SELECT count(*) FROM graft_cat.default.ev
+        |WHERE id IN (SELECT id FROM graft_cat.default.dim)""".stripMargin)
+      .head().getLong(0) == 3L)
+    // MERGE whose source is another catalog table
+    spark.sql(
+      """MERGE INTO graft_cat.default.ev t USING graft_cat.default.dim s
+        |ON t.id = s.id
+        |WHEN MATCHED THEN UPDATE SET t.value = s.value
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    assert(TxTable.commits(troot).last.op == "merge")
+    assert(TxTable.read(spark, troot).where($"id" >= 18L && $"id" <= 22L)
+      .collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("value"))).toSet ==
+      (18 to 22).map(i => (i.toLong, i * 1000L)).toSet)
+    assert(TxTable.read(spark, troot).count() == 16L)
     // a mutation against a time-travel view refuses
     val e = intercept[Exception] {
       spark.sql("DELETE FROM graft_cat.default.ev VERSION AS OF 0 WHERE id = 1")
@@ -2625,9 +2681,8 @@ class AcidSpec extends SparkSpec {
     val reader = new Thread(() => {
       while (!done) {
         try {
-          if (java.nio.file.Files.isDirectory(
-              java.nio.file.Paths.get(troot, "_log"))) {
-            val n = TxTable.read(spark, troot).count()
+          if (spark.catalog.tableExists("graft_act.default.slow")) {
+            val n = spark.table("graft_act.default.slow").count()
             observed.add(n): Unit
             if (n != 64L)
               readerFailure = Some(s"saw a PARTIAL table: $n of 64 rows")

@@ -713,6 +713,22 @@ class StreamingSpec extends SparkSpec {
     } finally q2.stop()
   }
 
+  test("graft-tx-changes: load(root) names the table, like every graft-tx surface") {
+    import spark.implicits._
+    import graft.sources.TxTable
+    val root = java.nio.file.Files.createTempDirectory("graft_cdf_load").toString
+    TxTable.append(spark, root,
+      (1 to 12).map(i => (i.toLong, i * 10L)).toDF("id", "value"))
+    val q = spark.readStream.format("graft-tx-changes").load(root)
+      .writeStream.format("memory").queryName("cdf_stream_load")
+      .outputMode("append").start()
+    try {
+      q.processAllAvailable()
+      assert(spark.table("cdf_stream_load").where($"_change_type" === "insert")
+        .count() == 12L)
+    } finally q.stop()
+  }
+
   test("graft-tx-changes: checkpoint recovery resumes after the last committed version, no redelivery") {
     import spark.implicits._
     import graft.sources.TxTable
