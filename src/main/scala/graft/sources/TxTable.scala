@@ -781,7 +781,7 @@ object TxTable {
     * ledger is unused: [[abortCtas]] unstages by the returned adds. */
   private[sources] def stageCtas(spark: SparkSession, root: String,
                                  df: DataFrame): (Seq[Staged], Long) =
-    writeDataWithRows(spark, root, new Ledger, df)
+    writeData(spark, root, new Ledger, df, keepEmpty = true)
 
   /** The publish half of atomic CTAS: ONE v0 `create` commit carrying the
     * schema AND the staged adds — a reader sees no table until the log
@@ -1207,10 +1207,15 @@ object TxTable {
 
   /** Stage `df` as new immutable data files; returns their names plus the
     * per-file column min/max lifted from each parquet footer (metadata-only
-    * IO — the data-skipping stats every commit records, see [[TxStats]]).
+    * IO — the data-skipping stats every commit records, see [[TxStats]]),
+    * and the footer-counted total row count, so no commit metric needs a
+    * second pass over rows the write just produced.
     * Files are parquet parts written by a normal distributed job, then
     * registered under content-unique names — visible to no reader until a
-    * commit's atomic-exclusive link publishes them.
+    * commit's atomic-exclusive link publishes them. A part whose footer
+    * counts 0 rows is dropped unless `keepEmpty` (see [[stageParts]]):
+    * rewrites stage only parts that hold rows, while an append keeps the
+    * one schema-carrying part an empty frame writes.
     *
     * `bloomCols` additionally folds each named column's values into a
     * per-file [[TxStats.BloomStat]] — ONE distributed pass over the
@@ -1230,38 +1235,10 @@ object TxTable {
     * Each file is registered in `ledger` as it lands under `data/`.
     */
   private def writeData(spark: SparkSession, root: String, ledger: Ledger,
-                        df: DataFrame, bloomCols: Seq[String] = Nil): Seq[Staged] =
-    writeDataWithRows(spark, root, ledger, df, bloomCols)._1
-
-  /** [[writeData]] plus the footer-counted total row count — for callers
-    * that need the count for commit metrics (atomic CTAS) without paying
-    * a second footer pass over files this staging JUST read. */
-  private def writeDataWithRows(spark: SparkSession, root: String, ledger: Ledger,
-                                df: DataFrame, bloomCols: Seq[String] = Nil)
-      : (Seq[Staged], Long) = {
-    Files.createDirectories(dataDir(root))
-    val tmp = Files.createTempDirectory(Paths.get(root), ".stage")
-    // a FAILED write job must not leak its temp dir (it would also keep a
-    // CTAS abort from removing the staging root) — registered files are
-    // the commit loop's cleanup; the tmp dir is ours
-    val staged =
-      try {
-        df.write.mode("overwrite").parquet(tmp.toString)
-        val parts = Files.list(tmp).iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-          .sortBy(_.getFileName.toString)
-        val conf = spark.sessionState.newHadoopConf()
-        parts.map { p =>
-          val name = s"${java.util.UUID.randomUUID()}.parquet"
-          val target = dataDir(root).resolve(name)
-          Files.move(p, target): Unit
-          ledger += target
-          val (stats, rows) = TxStats.fromFooterWithRows(conf, target.toString)
-          (Staged(name, stats), rows)
-        }
-      } catch { case scala.util.control.NonFatal(e) => awaitTasksStopped(spark); throw e }
-      finally deleteRecursively(tmp)
-    val names = staged.map(_._1)
+                        df: DataFrame, bloomCols: Seq[String] = Nil,
+                        keepEmpty: Boolean = false): (Seq[Staged], Long) = {
+    val staged = stageParts(spark, root, dataDir(root), ledger, df, keepEmpty)
+    val names = staged.map { case (name, stats, _) => Staged(name, stats) }
     // eligibility checks the DATAFRAME schema, not just the footer stats
     // tag (ADVICE r11): a DateType column is INT32 in the footer — tagged
     // "long" — but `cast(col as string)` renders 'yyyy-MM-dd' while the
@@ -1279,10 +1256,10 @@ object TxTable {
       bloomCols.filter(c => bloomable(c) &&
         h.stats.get(c).exists(s => s.t == "long" || s.t == "string"))
     }
-    val totalRows = staged.map(_._2).sum
+    val totalRows = staged.map(_._3).sum
     val out = if (eligible.isEmpty || names.isEmpty) names
     else {
-      val m = bloomBits(staged.map(_._2).max)
+      val m = bloomBits(staged.map(_._3).max)
       val agg = org.apache.spark.sql.functions.udaf(
         new graft.functions.BloomStrAgg(m, BloomK),
         org.apache.spark.sql.Encoders.STRING)
@@ -1312,29 +1289,74 @@ object TxTable {
     * (column values + `_change_type`), written by a normal distributed
     * job, referenced by `cdc` actions in the commit line, visible to no
     * consumer until the commit publishes. No column stats — change files
-    * are consumed sequentially by version, never predicate-pruned. Each
-    * file is registered in `ledger` as it lands under `cdc/`.
+    * are consumed sequentially by version, never predicate-pruned. Returns
+    * the file names and their footer-counted total rows: the change rows
+    * a mutation commits ARE its row metrics (a delete's deleted rows, an
+    * update's pre+post image pairs). Every part is kept — a rewriting
+    * commit without change files reads as an unrecorded mutation to the
+    * feed. Each file is registered in `ledger` as it lands under `cdc/`.
     */
   private def writeCdc(spark: SparkSession, root: String, ledger: Ledger,
-                       df: DataFrame): Seq[String] = {
-    Files.createDirectories(cdcDir(root))
-    val tmp = Files.createTempDirectory(Paths.get(root), ".stagecdc")
-    // same leak guard as writeData: a FAILED change-capture job must not
-    // leave its temp dir under the table root
+                       df: DataFrame): (Seq[String], Long) = {
+    val staged = stageParts(spark, root, cdcDir(root), ledger, df, keepEmpty = true)
+    (staged.map(_._1), staged.map(_._3).sum)
+  }
+
+  /** Run `df`'s write job into a temp dir under `root`, then move each
+    * parquet part into `dir` under a content-unique name, registered in
+    * `ledger`; returns each kept part's name, footer stats and footer row
+    * count. Parts whose footer counts 0 rows are dropped unless
+    * `keepEmpty`: Spark writes one for an empty partition 0 (and for an
+    * empty frame), which a rewrite would otherwise commit as a data file
+    * holding nothing.
+    */
+  private def stageParts(spark: SparkSession, root: String, dir: Path,
+                         ledger: Ledger, df: DataFrame, keepEmpty: Boolean)
+      : Seq[(String, Map[String, TxStats.ColStats], Long)] = {
+    Files.createDirectories(dir)
+    val tmp = Files.createTempDirectory(Paths.get(root), ".stage")
+    // a FAILED write job must not leak its temp dir (it would also keep a
+    // CTAS abort from removing the staging root) — registered files are
+    // the commit loop's cleanup; the tmp dir is ours
     try {
       df.write.mode("overwrite").parquet(tmp.toString)
-      val parts = Files.list(tmp).iterator().asScala
+      val conf = spark.sessionState.newHadoopConf()
+      Files.list(tmp).iterator().asScala
         .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
         .sortBy(_.getFileName.toString)
-      parts.map { p =>
-        val name = s"${java.util.UUID.randomUUID()}.parquet"
-        val target = cdcDir(root).resolve(name)
-        Files.move(p, target): Unit
-        ledger += target
-        name
-      }
+        .flatMap { p =>
+          val (stats, rows) = TxStats.fromFooterWithRows(conf, p.toString)
+          if (rows == 0 && !keepEmpty) None
+          else {
+            val name = s"${java.util.UUID.randomUUID()}.parquet"
+            val target = dir.resolve(name)
+            Files.move(p, target): Unit
+            ledger += target
+            Some((name, stats, rows))
+          }
+        }
     } catch { case scala.util.control.NonFatal(e) => awaitTasksStopped(spark); throw e }
     finally deleteRecursively(tmp)
+  }
+
+  /** A rewrite's `data` files ([[writeData]]) and its `changes` files
+    * ([[writeCdc]]), staged by two concurrent jobs: both read the same
+    * snapshot and land in different dirs, so the change capture need not
+    * queue behind the data write. The change write runs on a fresh thread,
+    * which inherits this thread's Spark local properties (job group,
+    * scheduler pool) and active session. Both writes finish before this
+    * returns or throws, so `ledger` holds every file either staged. */
+  private def writeRewrite(spark: SparkSession, root: String, ledger: Ledger,
+                           data: DataFrame, changes: DataFrame)
+      : ((Seq[Staged], Long), (Seq[String], Long)) = {
+    val cdc = new java.util.concurrent.CompletableFuture[(Seq[String], Long)]()
+    val t = new Thread(() =>
+      try cdc.complete(writeCdc(spark, root, ledger, changes)): Unit
+      catch { case e: Throwable => cdc.completeExceptionally(e): Unit })
+    t.start()
+    val staged = try writeData(spark, root, ledger, data) finally t.join()
+    try (staged, cdc.join())
+    catch { case e: java.util.concurrent.CompletionException => throw e.getCause }
   }
 
   /** A failed job returns before its other tasks are gone: they are killed
@@ -1618,7 +1640,7 @@ object TxTable {
     private val write = scala.collection.mutable.ArrayBuffer.empty[Path]
     private var staged: Option[Any] = None
 
-    def +=(p: Path): Unit = attempt += p
+    def +=(p: Path): Unit = synchronized { attempt += p }
 
     /** Run `stage` in the first attempt only and hand its result to every
       * later one: the files it stages belong to the whole write, kept
@@ -1757,7 +1779,7 @@ object TxTable {
       // rows_written comes from the staged files' footers — r15: a separate
       // df.count() re-executed the whole incoming lineage a second time
       val (adds, rows) =
-        ledger.once(writeDataWithRows(spark, root, ledger, df, bloomCols))
+        ledger.once(writeData(spark, root, ledger, df, bloomCols, keepEmpty = true))
       Right(Publish(op, Map("rows_written" -> rows), adds,
         schemaJson = Some(schema)))
     }
@@ -1797,7 +1819,7 @@ object TxTable {
           val schema = evolvedSchema(spark, root, base, df.schema)
           // footer-counted rows (r15): no second pass over the batch
           val (adds, rows) =
-            ledger.once(writeDataWithRows(spark, root, ledger, df, bloomCols))
+            ledger.once(writeData(spark, root, ledger, df, bloomCols, keepEmpty = true))
           Right(Publish("stream_append", Map("rows_written" -> rows), adds,
             schemaJson = Some(schema), txn = Some((appId, batchId))))
       }
@@ -1862,6 +1884,11 @@ object TxTable {
     * where the predicate is NOT TRUE — `coalesce(!pred, true)` — matching
     * SQL DELETE and Delta. This is the TTL path: `ts < horizon` over a
     * nullable timestamp column evaluates NULL on every null row.
+    *
+    * Metrics and staging come from the writes themselves: `rows_deleted`
+    * is the footer row count of the change files (the deleted rows), and
+    * the survivors are always written — a file whose every row matched
+    * leaves only a zero-row part, which is dropped, not committed.
     */
   def delete(spark: SparkSession, root: String, predicate: Column): Long =
     commitLoop(spark, root, "delete") { (base, ledger) =>
@@ -1870,14 +1897,14 @@ object TxTable {
       if (affected.isEmpty) Left(base.version) // nothing to delete: no-op, no commit
       else {
         val affectedDf = readLive(spark, root, base, affected)
-        val deleted = affectedDf.where(predicate).count()
-        val survivors = affectedDf.where(coalesce(!predicate, lit(true)))
-        val adds =
-          if (survivors.isEmpty) Nil else writeData(spark, root, ledger, survivors)
-        // change data feed (r12): the commit carries the deleted rows as
-        // change files, so downstream incremental consumers replay
-        // row-level deletes instead of diffing snapshots (the Delta CDF move)
-        val cdc = writeCdc(spark, root, ledger,
+        // survivors are always written: a file whose every row matched
+        // stages only a zero-row part, which writeData drops — no separate
+        // emptiness job. Change data feed (r12): the commit carries the
+        // deleted rows as change files, so downstream incremental consumers
+        // replay row-level deletes instead of diffing snapshots (the Delta
+        // CDF move); their footers count exactly the TRUE rows, rows_deleted
+        val ((adds, _), (cdc, deleted)) = writeRewrite(spark, root, ledger,
+          affectedDf.where(coalesce(!predicate, lit(true))),
           affectedDf.where(coalesce(predicate, lit(false)))
             .withColumn("_change_type", lit("delete")))
         // lost races rebase over file-disjoint winners (r13): adds conflict
@@ -1939,7 +1966,7 @@ object TxTable {
               existing.vectors.get(f).fold(add)(old => add.or(old)))
           }.toSeq
           // change feed: identical delete rows to the copy-on-write path
-          val cdc = writeCdc(spark, root, ledger,
+          val (cdc, _) = writeCdc(spark, root, ledger,
             rows.where(coalesce(predicate, lit(false)))
               .drop("__dv_file", "__dv_row")
               .withColumn("_change_type", lit("delete")))
@@ -1967,92 +1994,172 @@ object TxTable {
     * LANDS: the rewrite decides by a matched flag, not `coalesce`, which
     * would silently keep the old value whenever the source value is null.
     *
-    * PRECONDITION — deterministic source (r16, ADVICE r15): `source` is
-    * executed more than once (the key profile, the matched-key join, the
-    * insert anti-join), and the commit's `rows_inserted` metric is
-    * derived as srcRows − matchedKeys from two of those executions. A
-    * source whose rows differ between executions (e.g. one built on
-    * `rand()` or a non-idempotent read) can silently record a wrong
-    * insert count and write an update set inconsistent with the profile
-    * that admitted it. This is the standard lake-writer contract (Delta's
-    * MERGE documents the same multi-scan behavior); sources must be
-    * deterministic or pre-materialized by the caller.
+    * Data skipping (the Delta MERGE move): the source profile's first-key
+    * bounds filter the live side at the scan ([[keyBoundedRows]]), so a
+    * live file whose commit-logged key range lies outside them is never
+    * opened. Metrics: `rows_updated` is the matched-key count of the one
+    * pass that finds the rewrite set; `rows_inserted` is counted by the
+    * write itself — an `observe` on the insert branch of the data write.
+    * When every source key matched (srcRows = matched keys) there is no
+    * insert branch at all.
+    *
+    * PRECONDITION — deterministic source, CHECKED: `source` is executed
+    * more than once (the key profile, the matched-key join, the rewrite,
+    * the change capture). The write's observed insert count must equal
+    * srcRows − matched keys, and no inserted row may carry a first key
+    * outside the profiled bounds (the bounded live read could not have
+    * matched it: it would land as a duplicate of a live key); either
+    * mismatch throws before the commit and unstages the write. Sources
+    * must be deterministic or pre-materialized by the caller — the
+    * standard lake-writer contract (Delta's MERGE documents the same
+    * multi-scan behavior).
     */
   def merge(spark: SparkSession, root: String, source: DataFrame,
             keyCols: Seq[String], updateCols: Seq[String]): Long = {
-    // dup-key rejection + first-key bounds (the rebase conflict test) in
-    // ONE source pass — r15: these were two sequential driver actions,
-    // each re-executing the source lineage
+    // dup-key rejection + first-key bounds (the scan filter and the rebase
+    // conflict test) in ONE source pass — r15: these were two sequential
+    // driver actions, each re-executing the source lineage
     val (srcRows, srcDistinct, keyBounds) = sourceKeyProfile(source, keyCols)
     if (srcRows != srcDistinct)
       throw new IllegalArgumentException(
         s"merge source has duplicate keys on (${keyCols.mkString(", ")}): " +
           s"$srcRows rows, $srcDistinct distinct — each target row must " +
           "match at most one source row")
-    val keyAddsConflict = keyAddsConflictFn(keyCols.head, keyBounds)
+    val k0 = keyCols.head
+    val keyAddsConflict = keyAddsConflictFn(k0, keyBounds)
+    val srcInBounds = keyBounded(col(k0), source.schema(k0).dataType, keyBounds)
     commitLoop(spark, root, "merge") { (base, ledger) =>
-      val live = readLive(spark, root, base, base.liveFiles)
+      val live = keyBoundedRows(readLive(spark, root, base, base.liveFiles),
+        k0, keyBounds)
       val cols = live.columns.toSeq
       // files holding at least one matched key (the only rewrite set) AND
-      // the distinct matched-key count, in ONE live-side pass — r15: these
-      // were two sequential actions over the same join. collect_set is
-      // bounded by the live FILE count (planning metadata, the same state
-      // the commit log already holds on the driver).
+      // the distinct matched-key count, in ONE pass over the candidate
+      // rows. The source keys join as they are: the profile proved them
+      // distinct. collect_set is bounded by the live FILE count (planning
+      // metadata, the same state the commit log already holds on the
+      // driver).
       val (affected, matchedKeys) = {
         val r = live
-          .withColumn("__file", element_at(split(input_file_name(), "/"), -1))
-          .join(source.select(keyCols.map(col): _*).distinct(), keyCols)
+          .withColumn("__file", col("_metadata.file_name"))
+          .join(source.select(keyCols.map(col): _*), keyCols)
           .agg(collect_set(col("__file")),
             count_distinct(struct(keyCols.map(col): _*))).head()
         (r.getSeq[String](0), r.getLong(1))
       }
-      // source keys are distinct (checked above), so every source row
-      // either matches a live key or inserts: no third count needed
+      // source keys are distinct, so every source row either matches a
+      // live key or inserts
       val nInserts = srcRows - matchedKeys
-      val inserts = source.join(
-        live.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
-      val ins = inserts.select(cols.map(col): _*)
-      val insChanges = ins.withColumn("_change_type", lit("insert"))
-      val (rewritten, changes) =
-        if (affected.isEmpty) (ins, insChanges)
-        else {
-          val aff = readLive(spark, root, base, affected)
-          val upd = source.select(
-            keyCols.map(col) ++ updateCols.map(c => col(c).as(s"__src_$c"))
-              :+ lit(true).as("__matched"): _*)
-          val joined = aff.join(upd, keyCols, "left")
-          val updatedSel = cols.map { c =>
-            if (updateCols.contains(c))
-              // matched-flag CASE, not coalesce: a matched row takes the
-              // source value EVEN WHEN NULL (set-to-null updates land)
-              when(col("__matched"), col(s"__src_$c"))
-                .otherwise(col(c)).as(c)
-            else col(c)
+      if (affected.isEmpty && nInserts == 0)
+        Left(base.version) // empty source: no-op, no commit
+      else {
+        val ins =
+          if (nInserts == 0) None
+          else Some(source.join(live.select(keyCols.map(col): _*), keyCols,
+            "left_anti").select(cols.map(col): _*))
+        val observed = ins.map(observeInserts(_, srcInBounds))
+        val insWrite = observed.map(_._1)
+        val insChanges = ins.map(_.withColumn("_change_type", lit("insert")))
+        val (rewritten, changes) =
+          if (affected.isEmpty) (insWrite.get, insChanges.get)
+          else {
+            val aff = readLive(spark, root, base, affected)
+            val upd = source.select(
+              keyCols.map(col) ++ updateCols.map(c => col(c).as(s"__src_$c"))
+                :+ lit(true).as("__matched"): _*)
+            val joined = aff.join(upd, keyCols, "left")
+            val updatedSel = cols.map { c =>
+              if (updateCols.contains(c))
+                // matched-flag CASE, not coalesce: a matched row takes the
+                // source value EVEN WHEN NULL (set-to-null updates land)
+                when(col("__matched"), col(s"__src_$c"))
+                  .otherwise(col(c)).as(c)
+              else col(c)
+            }
+            // change data feed (r12): matched rows emit pre- and post-image,
+            // unmatched source rows emit inserts — the Delta CDF row kinds
+            val images = changeRows(joined.where(col("__matched")), array(
+              changeImage(cols.map(col), "update_preimage"),
+              changeImage(updatedSel, "update_postimage")))
+            val kept = joined.select(updatedSel: _*)
+            (insWrite.fold(kept)(kept.unionByName(_)),
+              insChanges.fold(images)(images.unionByName(_)))
           }
-          // change data feed (r12): matched rows emit pre- and post-image,
-          // unmatched source rows emit inserts — the Delta CDF row kinds
-          val matched = joined.where(col("__matched"))
-          val pre = matched.select(cols.map(col): _*)
-            .withColumn("_change_type", lit("update_preimage"))
-          val post = matched.select(updatedSel: _*)
-            .withColumn("_change_type", lit("update_postimage"))
-          (joined.select(updatedSel: _*).unionByName(ins),
-            pre.unionByName(post).unionByName(insChanges))
-        }
-      val adds = writeData(spark, root, ledger, rewritten)
-      val cdc = writeCdc(spark, root, ledger, changes)
-      // rebase over file-disjoint winners (r13): conflicts are a winner
-      // touching my rewrite set, or adding files that MAY hold my keys
-      // (they would change the matched/insert decisions this cycle made)
-      Right(Publish("merge",
-        Map("rows_updated" -> matchedKeys, "rows_inserted" -> nInserts),
-        adds, affected, cdc = cdc,
-        conflicts = rewriteConflicts(affected.toSet, keyAddsConflict)))
+        val ((adds, _), (cdc, _)) = writeRewrite(spark, root, ledger,
+          rewritten, changes)
+        val (inserted, outside) = observed.fold((0L, 0L))(_._2())
+        if (inserted != nInserts || outside != 0)
+          throw new IllegalStateException(
+            s"merge source changed between its passes: its profile counted " +
+              s"$srcRows rows, $matchedKeys matching live keys, so $nInserts " +
+              s"inserts, but the write inserted $inserted ($outside outside " +
+              "the profiled key range) — the source must be deterministic; " +
+              "materialize it first")
+        // rebase over file-disjoint winners (r13): conflicts are a winner
+        // touching my rewrite set, or adding files that MAY hold my keys
+        // (they would change the matched/insert decisions this cycle made)
+        Right(Publish("merge",
+          Map("rows_updated" -> matchedKeys, "rows_inserted" -> inserted),
+          adds, affected, cdc = cdc,
+          conflicts = rewriteConflicts(affected.toSet, keyAddsConflict)))
+      }
     }
   }
 
+  /** The live rows a key-joined MERGE can match: those whose first key
+    * `k0` lies inside the source profile's bounds. The filter sits on the
+    * scan, under any `_metadata` projection, so [[TxFileIndex]] prunes
+    * live files whose commit-logged stats lie outside the bounds and they
+    * never open. All of `live` when the bounds are unknown (unprovable
+    * type, empty source) or `k0` is not of the bounds' stats family. */
+  private def keyBoundedRows(live: DataFrame, k0: String,
+                             keyBounds: Option[(String, String, String)]): DataFrame =
+    keyBounded(col(k0), live.select(col(k0)).schema.head.dataType, keyBounds)
+      .fold(live)(live.where)
+
+  /** `c` (of type `dt`) inside the profiled first-key bounds, when `dt`
+    * is of their stats family — the soundness condition: a source key
+    * outside them cannot be one the profile saw. */
+  private def keyBounded(c: Column, dt: org.apache.spark.sql.types.DataType,
+                         keyBounds: Option[(String, String, String)]): Option[Column] = {
+    import org.apache.spark.sql.types._
+    keyBounds.collect {
+      case ("long", lo, hi)
+          if Seq(ByteType, ShortType, IntegerType, LongType).contains(dt) =>
+        c.between(lo.toLong, hi.toLong)
+      case ("string", lo, hi) if dt == StringType => c.between(lo, hi)
+    }
+  }
+
+  /** `inserts` with its count observed on the write that runs it: the
+    * thunk, read after that write, gives the inserted rows and how many of
+    * them fall outside `inBounds` (a NULL key is never outside: it matches
+    * nothing and inserts under any bounds). No extra Spark job. */
+  private def observeInserts(inserts: DataFrame, inBounds: Option[Column])
+      : (DataFrame, () => (Long, Long)) = {
+    val obs = org.apache.spark.sql.Observation()
+    val df = inserts.observe(obs, count(lit(1)).as("n"),
+      count(when(!inBounds.getOrElse(lit(true)), lit(1))).as("outside"))
+    // a branch the planner proved empty reports no metrics: zero rows
+    def metric(m: Map[String, Any], k: String): Long =
+      m.get(k).fold(0L)(_.asInstanceOf[Long])
+    (df, () => { val m = obs.get; (metric(m, "n"), metric(m, "outside")) })
+  }
+
+  /** One change-feed row image: `values` (aliased to the table's column
+    * names) plus its `_change_type`. */
+  private def changeImage(values: Seq[Column], kind: String): Column =
+    struct(values :+ lit(kind).as("_change_type"): _*)
+
+  /** The change rows `images` (an array of [[changeImage]]s) yields for
+    * each row of `rows`, in ONE pass: an update's pre- and post-image come
+    * from the same read of the rewritten files, where a union of two
+    * projections would scan and join them twice. */
+  private def changeRows(rows: DataFrame, images: Column): DataFrame =
+    rows.select(explode(images).as("__change")).select("__change.*")
+
   /** One source pass computing the dup-key profile (row count, distinct
-    * key count) AND the first-key bounds for the rebase conflict test: a
+    * key count) AND the first-key bounds, which bound the live rows a
+    * merge reads ([[keyBoundedRows]]) and serve the rebase conflict test: a
     * winner's added file provably holds none of a merge's keys when its
     * stat range for the column is disjoint from [lo, hi] — coarse, sound.
     * Bounds are None for unprovable types or an empty source (any winner's
@@ -2147,6 +2254,14 @@ object TxTable {
     * and insert values take ANSI store-assignment casts to the column's
     * recorded type.
     *
+    * Reads and metrics: without `notMatchedBySource` clauses the stats
+    * pass reads only the live rows inside the source's first-key bounds
+    * ([[keyBoundedRows]], as [[merge]] does); the insert anti-join always
+    * does. `rows_updated`/`rows_deleted` come from that stats pass,
+    * `rows_inserted` from an `observe` on the data write's insert branch,
+    * which throws, as [[merge]]'s does, on inserted rows whose key lies
+    * outside the profiled bounds.
+    *
     * The canonical upsert ([[merge]]) remains the slimmer primitive for
     * the unconditional-update-plus-insert shape; SQL MERGE routes here.
     */
@@ -2203,6 +2318,9 @@ object TxTable {
     val addsConflict: Commit => Boolean =
       if (notMatchedBySource.nonEmpty) w => w.adds.nonEmpty
       else keyAddsConflictFn(keyCols.head, keyBounds)
+    val k0 = keyCols.head
+    val srcInBounds = keyBounded(col(s"__src_$k0"), source.schema(k0).dataType,
+      keyBounds)
     commitLoop(spark, root, "mergeFull") { (base, ledger) =>
       val live = readLive(spark, root, base, base.liveFiles)
       val cols = live.columns.toSeq
@@ -2210,6 +2328,10 @@ object TxTable {
           Set("__matched", "__mact", "__nact", "__iact", "__file")(c)),
         "mergeFull: target column names collide with the " +
           "__src_/__matched/__mact/__nact/__iact/__file helpers")
+      // the live rows a source key can match (the stats-pruned read merge
+      // uses); NOT MATCHED BY SOURCE clauses fire on every other live row,
+      // so with them the stats pass must see the whole live set
+      val candidates = keyBoundedRows(live, k0, keyBounds)
       val joinCond = keyCols.map(k => live(k) === srcP(s"__src_$k")).reduce(_ && _)
       // determinism probe over the JOINED shape (the same trap assertDeterministic
       // guards for delete/update): conditions and assignments re-evaluate
@@ -2238,12 +2360,6 @@ object TxTable {
         (matchedUpdate.map { case (i, _) => col("__mact") === i } ++
           nmbsUpdate.map { case (i, _) => col("__nact") === i })
           .reduceOption(_ || _).getOrElse(lit(false)), lit(false))
-      def castTo(c: String, v: Column): Column =
-        ansiCast(v, live.schema(c).dataType).as(c)
-      val iact = if (notMatched.isEmpty) lit(null).cast("int")
-        else notMatched.zipWithIndex.reverse.foldLeft(lit(null).cast("int")) {
-          case (tail, ((cond, _), i)) => when(fire(cond), lit(i)).otherwise(tail)
-        }
       // ONE stats pass over the live⋈source join (r15): the affected
       // files (rows where some clause fires — a matched row no clause
       // touches does not rewrite its file) and the update/delete counters
@@ -2258,7 +2374,8 @@ object TxTable {
       // cannot broadcast the source, so it would shuffle the whole live
       // side at scale where this shape broadcasts.
       val statR = withActs(
-          live.withColumn("__file", element_at(split(input_file_name(), "/"), -1)))
+          (if (notMatchedBySource.isEmpty) candidates else live)
+            .withColumn("__file", col("_metadata.file_name")))
         .agg(
           collect_set(when(fires, col("__file"))).as("files"),
           sum(when(updFires, 1L).otherwise(0L)),
@@ -2267,24 +2384,38 @@ object TxTable {
       val affected = statR.getSeq[String](0)
       val nUpdated = if (statR.isNullAt(1)) 0L else statR.getLong(1)
       val nDeleted = if (statR.isNullAt(2)) 0L else statR.getLong(2)
-      // inserts: source rows matching NO live key, routed through the
-      // first firing not-matched clause (conditions over __src_ columns)
-      val unmatched = srcP.join(live.select(keyCols.map(col): _*).distinct(),
-        keyCols.map(k => srcP(s"__src_$k") === live(k)).reduce(_ && _),
-        "left_anti")
-      val routed = unmatched.withColumn("__iact", iact)
-      val inserts = notMatched.zipWithIndex.map { case ((_, values), i) =>
-        cols.foreach(c => require(values.contains(c),
-          s"mergeFull: not-matched clause $i must assign every target " +
-            s"column (missing $c)"))
-        routed.where(col("__iact") === i)
-          .select(cols.map(c => castTo(c, values(c))): _*)
-      }.reduceOption(_.unionByName(_))
-        .getOrElse(live.limit(0).select(cols.map(col): _*))
-      val nInserts = inserts.count()
-      if (affected.isEmpty && nInserts == 0)
-        Left(base.version) // nothing fires anywhere: no-op, no commit
+      if (affected.isEmpty && notMatched.isEmpty)
+        Left(base.version) // no clause fires anywhere: no-op, no commit
       else {
+        // inserts: source rows matching NO live key (only candidates can
+        // match), each taking the values of its first firing not-matched
+        // clause (conditions over __src_ columns) in ONE projection,
+        // counted by an observe on the data write
+        val observed = if (notMatched.isEmpty) None else {
+          notMatched.zipWithIndex.foreach { case ((_, values), i) =>
+            cols.foreach(c => require(values.contains(c),
+              s"mergeFull: not-matched clause $i must assign every target " +
+                s"column (missing $c)"))
+          }
+          val iact = notMatched.zipWithIndex.reverse
+            .foldLeft(lit(null).cast("int")) {
+              case (tail, ((cond, _), i)) => when(fire(cond), lit(i)).otherwise(tail)
+            }
+          val routed = srcP.join(candidates.select(keyCols.map(col): _*),
+              keyCols.map(k => srcP(s"__src_$k") === candidates(k)).reduce(_ && _),
+              "left_anti")
+            .withColumn("__iact", iact)
+            .where(col("__iact").isNotNull)
+          def insertValue(c: String): Column =
+            notMatched.zipWithIndex.reverse.foldLeft(lit(null)) {
+              case (tail, ((_, values), i)) =>
+                when(col("__iact") === i,
+                  ansiCast(values(c), live.schema(c).dataType)).otherwise(tail)
+            }.as(c)
+          val (obsRouted, counted) = observeInserts(routed, srcInBounds)
+          Some((obsRouted.select(cols.map(insertValue): _*),
+            routed.select(cols.map(insertValue): _*), counted))
+        }
         // rewrite only the affected files; route each row by its clause
         val joinedA = withActs(readLive(spark, root, base, affected))
         def newVal(c: String): Column = {
@@ -2297,26 +2428,34 @@ object TxTable {
             when(hit, ansiCast(v, live.schema(c).dataType)).otherwise(tail)
           }.as(c)
         }
-        val rewritten = joinedA.where(!isDel)
-          .select(cols.map(newVal): _*)
-          .unionByName(inserts)
+        val kept = joinedA.where(!isDel).select(cols.map(newVal): _*)
         // CDF: deletes carry the removed rows, updates pre+post images,
         // inserts the new rows — every outcome replayable downstream
-        val changes = joinedA.where(isDel).select(cols.map(col): _*)
-          .withColumn("_change_type", lit("delete"))
-          .unionByName(joinedA.where(updFires).select(cols.map(col): _*)
-            .withColumn("_change_type", lit("update_preimage")))
-          .unionByName(joinedA.where(updFires).select(cols.map(newVal): _*)
-            .withColumn("_change_type", lit("update_postimage")))
-          .unionByName(inserts.withColumn("_change_type", lit("insert")))
-        val adds =
-          if (rewritten.isEmpty) Nil else writeData(spark, root, ledger, rewritten)
-        val cdc = writeCdc(spark, root, ledger, changes)
-        Right(Publish("merge",
-          Map("rows_updated" -> nUpdated, "rows_inserted" -> nInserts,
-            "rows_deleted" -> nDeleted),
-          adds, affected, cdc = cdc,
-          conflicts = rewriteConflicts(affected.toSet, addsConflict)))
+        val old = cols.map(col)
+        val changes = changeRows(joinedA.where(isDel || updFires),
+          when(isDel, array(changeImage(old, "delete")))
+            .otherwise(array(changeImage(old, "update_preimage"),
+              changeImage(cols.map(newVal), "update_postimage"))))
+        // a rewrite whose rows are all deleted stages only zero-row parts,
+        // which writeData drops: no separate emptiness job
+        val ((adds, _), (cdc, _)) = writeRewrite(spark, root, ledger,
+          observed.fold(kept)(o => kept.unionByName(o._1)),
+          observed.fold(changes)(o =>
+            changes.unionByName(o._2.withColumn("_change_type", lit("insert")))))
+        val (nInserts, outside) = observed.fold((0L, 0L))(_._3())
+        if (outside != 0)
+          throw new IllegalStateException(
+            s"merge source changed between its passes: $outside inserted " +
+              "rows carry keys outside the profiled key range — the source " +
+              "must be deterministic; materialize it first")
+        if (affected.isEmpty && nInserts == 0)
+          Left(base.version) // nothing fires anywhere: no-op, no commit
+        else
+          Right(Publish("merge",
+            Map("rows_updated" -> nUpdated, "rows_inserted" -> nInserts,
+              "rows_deleted" -> nDeleted),
+            adds, affected, cdc = cdc,
+            conflicts = rewriteConflicts(affected.toSet, addsConflict)))
       }
     }
   }
@@ -2329,8 +2468,10 @@ object TxTable {
     * Three-valued logic matches SQL UPDATE: a NULL-evaluating predicate
     * updates nothing (the row survives untouched), which
     * `coalesce(pred, false)` encodes. The change feed records
-    * update_preimage/update_postimage pairs like MERGE's matched rows;
-    * lost races rebase over provably-disjoint winners exactly as DELETE
+    * update_preimage/update_postimage pairs like MERGE's matched rows,
+    * both images from one pass over the affected files; `rows_updated` is
+    * half the change files' footer row count — no counting job.
+    * Lost races rebase over provably-disjoint winners exactly as DELETE
     * does (a winner's added file conflicts unless its stats refute the
     * predicate).
     */
@@ -2363,14 +2504,15 @@ object TxTable {
         val rewritten = affectedDf.select(cols.map { c =>
           assigned.get(c).fold(col(c))(v => when(hit, v).otherwise(col(c)).as(c))
         }: _*)
-        val matched = affectedDf.where(hit)
-        val updated = matched.count()
-        val post = matched.select(cols.map(c =>
-          assigned.get(c).fold(col(c))(_.as(c))): _*)
-        val cdc = writeCdc(spark, root, ledger,
-          matched.withColumn("_change_type", lit("update_preimage"))
-            .unionByName(post.withColumn("_change_type", lit("update_postimage"))))
-        val adds = writeData(spark, root, ledger, rewritten)
+        // one pre- and one post-image per updated row: the change files'
+        // footers count rows_updated twice over, no separate count job
+        val ((adds, _), (cdc, images)) = writeRewrite(spark, root, ledger,
+          rewritten,
+          changeRows(affectedDf.where(hit), array(
+            changeImage(cols.map(col), "update_preimage"),
+            changeImage(cols.map(c => assigned.get(c).fold(col(c))(_.as(c))),
+              "update_postimage"))))
+        val updated = images / 2
         val cond = normalizedCondition(spark, root, base, predicate)
         Right(Publish("update", Map("rows_updated" -> updated), adds, affected,
           cdc = cdc,
@@ -2400,7 +2542,7 @@ object TxTable {
       // staged once, validated first; footer-counted rows (r15): no second
       // pass over the replacement data
       val (adds, rows) =
-        ledger.once(writeDataWithRows(spark, root, ledger, df, bloomCols))
+        ledger.once(writeData(spark, root, ledger, df, bloomCols, keepEmpty = true))
       // change capture per attempt: the DISPLACED rows are the racing
       // snapshot's, not the first one's
       val (deleted, cdc) =
@@ -2432,7 +2574,7 @@ object TxTable {
             old.withColumn("_change_type", lit("delete"))
               .unionByName(
                 newRows.withColumn("_change_type", lit("insert")),
-                allowMissingColumns = true)))
+                allowMissingColumns = true))._1)
         }
       Right(Publish("overwrite",
         Map("rows_written" -> rows, "rows_deleted" -> deleted),
@@ -2509,7 +2651,7 @@ object TxTable {
         val curRows = readLive(spark, root, base, base.liveFiles)
         val tgtRows = readLive(spark, root, target, target.liveFiles)
         val (deleted, written) = (curRows.count(), tgtRows.count())
-        val cdc = writeCdc(spark, root, ledger,
+        val (cdc, _) = writeCdc(spark, root, ledger,
           curRows.withColumn("_change_type", lit("delete"))
             .unionByName(tgtRows.withColumn("_change_type", lit("insert")),
               allowMissingColumns = true))
@@ -2524,7 +2666,8 @@ object TxTable {
   /** Bin-packing COMPACTION: rewrite the current snapshot's live data
     * files into `targetFiles` files, committed as one remove+add version
     * (`op = "compact"`). Pure layout surgery — the row set is untouched
-    * (metrics record `rows_written` for audit), old files stay readable
+    * (metrics record `rows_written`, the written files' footer row count,
+    * for audit), old files stay readable
     * to time travel until [[vacuum]] retires them. This is the
     * operational move a 100-TB log-structured table runs continuously:
     * every append/merge leaves per-batch files, and scan efficiency
@@ -2549,8 +2692,8 @@ object TxTable {
             live.repartitionByRange(targetFiles, sortCols.map(col): _*)
               .sortWithinPartitions(sortCols.map(col): _*)
           else live.repartition(targetFiles)
-        val rows = live.count()
-        val adds = writeData(spark, root, ledger, arranged, bloomCols)
+        // rows_written from the staged files' footers, not a live count
+        val (adds, rows) = writeData(spark, root, ledger, arranged, bloomCols)
         // rebase over PURE APPENDS (r13): compaction reads every base live
         // file, so any racing remove/dv conflicts — but a blind append's
         // files simply stay live beside the compacted layout
@@ -2603,8 +2746,7 @@ object TxTable {
           .repartitionByRange(targetFiles, col("__z"))
           .sortWithinPartitions(col("__z"))
           .select(cols.map(col): _*)
-        val rows = live.count()
-        val adds = writeData(spark, root, ledger, arranged)
+        val (adds, rows) = writeData(spark, root, ledger, arranged)
         // same pure-append rebase as [[compact]]
         Right(Publish("compactz", Map("rows_written" -> rows), adds,
           base.liveFiles, dataChange = false,
@@ -2759,8 +2901,9 @@ object TxTable {
   /** Names of live data files containing at least one LIVE row matching
     * `pred` (DV-aware: a file whose only matches are already
     * vector-deleted is not rewritten) — the discovery pass of DELETE and
-    * UPDATE, which count their matching rows in a second action over the
-    * affected files only. The predicate pushes into the scan, so files
+    * UPDATE, whose row metrics then come from the footers of the change
+    * files they write anyway (no counting action over the affected
+    * files). The predicate pushes into the scan, so files
     * whose commit-logged stats rule it out are never opened (it filters
     * before the `_metadata` projection for that). Two actions BY DESIGN
     * (r15 adjudication): a fused one-action variant (`agg(collect_set(

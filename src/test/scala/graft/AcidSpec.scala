@@ -2156,6 +2156,119 @@ class AcidSpec extends SparkSpec {
       .where($"value" === -1L).count() == 5L)
   }
 
+  test("stats-pruned merge: merge and mergeFull never open a live file outside the source's key range") {
+    val root = freshRoot()
+    TxTable.append(spark, root, frame(1 to 50, "lo").repartition(1))
+    TxTable.append(spark, root, frame(101 to 150, "hi").repartition(1))
+    val (_, skipped) = TxTable.pruneFiles(spark, root, $"id" > 100L)
+    assert(skipped.size == 1)
+    // the ruled-out file's bytes become garbage: still live and present,
+    // but any attempt to open it fails
+    val ruledOut = skipped.head
+    java.nio.file.Files.write(java.nio.file.Paths.get(root, "data", ruledOut),
+      "not a parquet file".getBytes("UTF-8")): Unit
+    // 141..150 update, 151..160 insert
+    val src = (141 to 160).map(i => (i.toLong, "src", -i.toLong))
+      .toDF("id", "tag", "value")
+    TxTable.merge(spark, root, src, Seq("id"), Seq("value")): Unit
+    assert(TxTable.commits(root).last.metrics ==
+      Map("rows_updated" -> 10L, "rows_inserted" -> 10L))
+    // 156..160 update, 161..165 insert
+    val full = (156 to 165).map(i => (i.toLong, "full", i * 7L))
+      .toDF("id", "tag", "value")
+    TxTable.mergeFull(spark, root, full, Seq("id"),
+      Seq(TxTable.MergeClause(None,
+        TxTable.MergeUpdate(Map("value" -> col("__src_value"))))),
+      Seq((None, Map("id" -> col("__src_id"), "tag" -> col("__src_tag"),
+        "value" -> col("__src_value"))))): Unit
+    assert(TxTable.commits(root).last.metrics ==
+      Map("rows_updated" -> 5L, "rows_inserted" -> 5L, "rows_deleted" -> 0L))
+    assert(TxTable.snapshot(root).liveFiles.contains(ruledOut))
+    val hi = TxTable.readWhere(spark, root, $"id" > 100L).collect()
+      .map(r => r.getAs[Long]("id") -> (r.getAs[String]("tag"), r.getAs[Long]("value")))
+      .toMap
+    assert(hi.size == 65)
+    (101 to 140).foreach(i => assert(hi(i.toLong) == ("hi", i * 10L)))
+    (141 to 150).foreach(i => assert(hi(i.toLong) == ("hi", -i.toLong)))
+    (151 to 155).foreach(i => assert(hi(i.toLong) == ("src", -i.toLong)))
+    (156 to 160).foreach(i => assert(hi(i.toLong) == ("src", i * 7L)))
+    (161 to 165).foreach(i => assert(hi(i.toLong) == ("full", i * 7L)))
+  }
+
+  test("merge precondition: a source whose keys change between executions fails loudly; nothing commits") {
+    val root = freshRoot()
+    TxTable.append(spark, root, frame(1 to 30, "base"))
+    val v = TxTable.snapshot(root).version
+    def files(dir: String): Set[String] = {
+      val d = java.nio.file.Paths.get(root, dir)
+      if (!java.nio.file.Files.isDirectory(d)) Set.empty
+      else java.nio.file.Files.list(d).iterator().asScala
+        .map(_.getFileName.toString).toSet
+    }
+    val before = (files("data"), files("cdc"))
+    // the key profile sees 21..40 (ten live keys, ten new); each later
+    // execution of a row shifts its key by another 10^6, so the write
+    // inserts keys the profile never saw. (A seeded rand() key would not
+    // do: Spark replays its draws over the same partitioning.)
+    DriftingKeys.evals.clear()
+    val drift = udf { (id: Long) =>
+      id + 1000000L * DriftingKeys.evals
+        .computeIfAbsent(id, _ => new java.util.concurrent.atomic.AtomicInteger)
+        .getAndIncrement()
+    }.asNondeterministic()
+    val src = spark.range(21, 41)
+      .select(drift(col("id")).as("id"), lit("src").as("tag"), col("id").as("value"))
+    val e = intercept[IllegalStateException](
+      TxTable.merge(spark, root, src, Seq("id"), Seq("value")))
+    assert(e.getMessage.contains("merge source changed between its passes"), e.getMessage)
+    assert(TxTable.snapshot(root).version == v)
+    assert((files("data"), files("cdc")) == before)
+    assert(TxTable.read(spark, root).count() == 30L)
+  }
+
+  test("mutation job counts: update, delete, compact and merge take metrics from their writes, not extra jobs") {
+    def twoFiles(): String = {
+      val root = freshRoot()
+      TxTable.append(spark, root, frame(1 to 50, "lo").repartition(1))
+      TxTable.append(spark, root, frame(101 to 150, "hi").repartition(1))
+      root
+    }
+    val root = twoFiles()
+    val upsert = (141 to 150).map(i => (i.toLong, "src", -i.toLong))
+      .toDF("id", "tag", "value")
+    val withInserts = (146 to 155).map(i => (i.toLong, "src", i.toLong))
+      .toDF("id", "tag", "value")
+    val jobs = Seq(
+      "update" -> jobsStarted(spark)(TxTable.update(spark, root, $"id" > 140L,
+        Map("value" -> lit(-1L))): Unit),
+      "merge" -> jobsStarted(spark)(
+        TxTable.merge(spark, root, upsert, Seq("id"), Seq("value")): Unit),
+      "merge+insert" -> jobsStarted(spark)(
+        TxTable.merge(spark, root, withInserts, Seq("id"), Seq("value")): Unit),
+      "delete" -> jobsStarted(spark)(TxTable.delete(spark, root, $"id" > 145L): Unit),
+      "compact" -> jobsStarted(spark)(TxTable.compact(spark, root): Unit))
+    // update and delete: discovery 2 + change files 1 + data 1; compact:
+    // exchange 1 + write 1; merge: key profile 3 + matched-key pass 4 +
+    // data and change writes 2 each, and an insert branch adds one
+    // broadcast to each write
+    assert(jobs == Seq("update" -> 4, "merge" -> 11, "merge+insert" -> 13,
+      "delete" -> 4, "compact" -> 2))
+    assert(TxTable.commits(root).map(_.metrics).drop(2) == Seq(
+      Map("rows_updated" -> 10L),
+      Map("rows_updated" -> 10L, "rows_inserted" -> 0L),
+      Map("rows_updated" -> 5L, "rows_inserted" -> 5L),
+      Map("rows_deleted" -> 10L),
+      Map("rows_written" -> 95L)))
+    // a delete matching every row of its file stages no zero-row file
+    val all = twoFiles()
+    val hiFile = TxTable.pruneFiles(spark, all, $"id" > 100L)._1
+    TxTable.delete(spark, all, $"id" > 100L): Unit
+    val c = TxTable.commits(all).last
+    assert(c.metrics == Map("rows_deleted" -> 50L))
+    assert(c.adds.isEmpty && c.removes == hiFile)
+    assert(TxTable.read(spark, all).count() == 50L)
+  }
+
   test("graft-tx readChangeFeed: the batch feed through the registered source — bounded ranges, SQL surface, loud refusals") {
     val root = freshRoot()
     TxTable.append(spark, root, frame(1 to 20, "a"))         // v0
@@ -2996,4 +3109,11 @@ class AcidSpec extends SparkSpec {
       spark.sql("CALL graft_pr.compact(`table` => 'default.nosuch')")
     }: Unit
   }
+}
+
+/** Per-row evaluation counts behind AcidSpec's drifting merge source:
+  * a static home, so every local task sees the same counts. */
+private object DriftingKeys {
+  val evals = new java.util.concurrent.ConcurrentHashMap[
+    java.lang.Long, java.util.concurrent.atomic.AtomicInteger]()
 }

@@ -59,30 +59,6 @@ class CatalogOpsSpec extends SparkSpec {
     }
   }
 
-  /** Spark jobs `body` starts on this thread. A fresh job group tags them,
-    * so jobs of other threads never count; the listener bus is drained
-    * before the count is read. */
-  private def jobsStarted(s: org.apache.spark.sql.SparkSession)(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = s.sparkContext
-    val group = s"jobs_started_${java.util.UUID.randomUUID()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val counter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet(): Unit
-    }
-    sc.addSparkListener(counter)
-    sc.setJobGroup(group, group)
-    try body
-    finally {
-      sc.clearJobGroup()
-      org.apache.spark.sql.GraftBridge.drainListeners(sc)
-      sc.removeSparkListener(counter)
-    }
-    n.get
-  }
-
   test("Tables.table resolves a corpus schema once per session; clearDerived resolves it again") {
     val s = spark.newSession()
     try {
